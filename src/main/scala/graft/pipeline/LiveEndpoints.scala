@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Config-driven LIVE mode for the extract plane — the reference's
   * actual operating mode (main.py:22-42 REST, main.py:203-218 RPC),
-  * one environment variable away (round-6 "What's missing" #1).
+  * one environment variable away.
   *
   * The reference hardcodes its endpoints and merges per-request params
   * onto a base param set (main.py:30-42); here the same URL algebra is
@@ -104,29 +104,23 @@ object LiveEndpoints {
     * (user, pool) task list — the whole extract plane of main.py as
     * connector scans. Mirrors the reference's two-phase shape: the RPC
     * tasks need each pool's activeBinId, which the reference reads out
-    * of the pool-stats frame it just fetched (main.py:212); here the
-    * pool-stats scan is dimension-sized by definition (one row per
-    * pool), so collecting (pool → activeBinId) to the driver to
-    * construct the task strings is bounded by the pool count, never
-    * the corpus.
+    * of the pool-stats frame it just fetched (main.py:212).
     */
   def inputs(spark: SparkSession, c: Config,
              tasks: Seq[(String, String)]): Snapshot.Inputs = {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val pools = tasks.map(_._2).distinct
-    // fetch the 1d pool stats ONCE: the frame is needed twice (the
-    // activeBinId collect below AND the snapshot input), and an uncached
-    // connector scan would re-issue every HTTP GET on the second use —
-    // double quota against a live API, and a bins/pool-frame mismatch if
-    // the API ticks between the two fetches (the reference reads
-    // activeBinId out of the frame it just fetched, main.py:212). The
-    // frame is one row per pool by definition, so materializing it to
-    // the driver and re-parallelizing is dimension-sized, never corpus.
+    // the 1d pool stats are fetched ONCE, by the one collect here, and
+    // held as a driver-local relation: the activeBinId lookup below and
+    // the snapshot's pool dimension both read these rows without a Spark
+    // job, so neither re-issues the HTTP GETs (double quota against a
+    // live API) nor can see an activeBinId from a later API tick than
+    // the snapshot's pool frame. One row per pool: dimension-sized,
+    // never corpus-sized.
     val pool1dRows = httpRead(spark, c, "poolStats",
       pools.map(p => poolStatsUrl(c, p, "1d"))).collect()
-    val pool1d = spark.createDataFrame(
-      spark.sparkContext.parallelize(pool1dRows.toIndexedSeq, 1),
+    val pool1d = spark.createDataFrame(java.util.Arrays.asList(pool1dRows: _*),
       FixtureJsonSource.payloadSchema("poolStats"))
     val pool1h = httpRead(spark, c, "poolStats",
       pools.map(p => poolStatsUrl(c, p, "1h")))
@@ -136,14 +130,14 @@ object LiveEndpoints {
       tasks.map { case (u, p) => feesEarnedUrl(c, u, p) })
     val activeBin = pool1d
       .select(col("pairAddress"), col("activeBinId").cast("long"))
-      .na.drop().as[(String, Long)].collect().toMap // local frame: no refetch
+      .na.drop().as[(String, Long)].collect().toMap
     val rpcTasks = tasks.collect {
       case (u, p) if activeBin.contains(p) =>
         s"$p,$u,${activeBin(p)},${c.idsPlus},${c.idsMinus}"
     }
     val bins =
       if (rpcTasks.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
           Schemas.binReserves)
       else spark.read.format("graft.sources.RpcBinsSource")
         .option("endpoint", c.rpcEndpoint)

@@ -12,9 +12,13 @@ import org.apache.spark.sql.types.DecimalType
   *  - the reference iterates (user, pool) tasks serially (main.py:11-12);
   *    here the task table drives every step, so ALL tasks flow through a
   *    single Catalyst plan and scale horizontally;
+  *  - the task, deposit, fee and bin rows travel as ONE tagged union
+  *    through ONE exchange on (user_address, pool_address) into ONE
+  *    aggregate that computes every per-task summary together (the
+  *    latest-deposit tie-keep, the decimal sums, both string folds);
+  *    per-row work (coercion, bin math, each fold entry's text) runs
+  *    map-side, before the exchange;
   *  - pool stats are dimension-sized → broadcast joins;
-  *  - the per-event/per-bin/per-fee child tables aggregate to task
-  *    granularity with one shuffle each, pre-aggregated map-side;
   *  - report column names (with % [ ] ( ) characters, main.py:293-340)
   *    are applied ONLY in the final select; everything internal uses
   *    sanitized names (SURVEY.md §7.4).
@@ -74,175 +78,171 @@ object Snapshot {
       num(col("volumeUsd")).as("volume_1h"),
       num(col("feesUsd")).as("fees_1h"))
 
-    // ---- P4/P7/P8 + F1 + A1/A2: history → latest-deposit summary ----
-    val hist = in.history.select(
-      col("user_address"),
-      col("poolAddress").as("pool_address"),
-      to_timestamp(col("timestamp")).as("ts"),
-      col("isDeposit"),
-      col("blockNumber"),
-      coalesce(num(col("tokenX.amount")), lit(0.0)).as("tokenX_amount"),
-      coalesce(num(col("tokenY.amount")), lit(0.0)).as("tokenY_amount"))
-    val deposits = hist.filter(col("isDeposit") === true)
-    val latest = Relational.latestByKey(
-      deposits, Seq(col("user_address"), col("pool_address")),
-      Seq(col("blockNumber"), col("ts")))
-    val histSummary = latest
-      .groupBy(col("user_address"), col("pool_address"))
-      .agg(
-        sum(col("tokenX_amount").cast(DecimalType(38, 6))).cast("double")
-          .as("total_tokenX_amount_initial_deposit"),
-        sum(col("tokenY_amount").cast(DecimalType(38, 6))).cast("double")
-          .as("total_tokenY_amount_initial_deposit"),
-        date_format(max(col("ts")), "yyyy-MM-dd HH:mm:ss")
-          .as("MostRecentDepositTime"))
+    // ---- the union: one row per task, deposit, fee and bin ----
+    // Each child carries its payload in its own columns (null elsewhere).
+    // Child rows with a null key are dropped here: the key equi-join they
+    // replace never matched them to a task.
+    val keys = Seq(col("user_address"), col("pool_address"))
+    def keyed(df: DataFrame, payload: Column*): DataFrame =
+      df.select(keys ++ payload: _*).na.drop(Seq("user_address", "pool_address"))
+    // one string-fold entry: sorted by (binId, x, y), its "id: x, y"
+    // text rendered here, map-side
+    def foldEntry(binId: Column, x: Column, y: Column): Column =
+      struct(binId.as("binId"), x.as("x"), y.as("y"),
+        format_string("%s: %s, %s", binId.cast("string"), x.cast("string"),
+          y.cast("string")).as("text"))
 
-    // ---- A4/A5: fee fold per task ----
-    val fees = in.fees.select(
-      col("user_address"),
-      col("poolAddress").as("pool_address"),
-      col("binId").try_cast("long").as("binId"),
-      coalesce(num(col("accruedFeesX")), lit(0.0)).as("fx"),
-      coalesce(num(col("accruedFeesY")), lit(0.0)).as("fy"))
-    val feeSummary = fees
-      .groupBy(col("user_address"), col("pool_address"))
-      .agg(
-        Relational.stringFold(
-          struct(col("binId"), col("fx"), col("fy")),
-          x => format_string("%s: %s, %s",
-            x.getField("binId").cast("string"),
-            x.getField("fx").cast("string"),
-            x.getField("fy").cast("string"))).as("fees_per_bin"),
-        sum(col("fx").cast(DecimalType(38, 12))).cast("double").as("accrued_fees_token_x"),
-        sum(col("fy").cast(DecimalType(38, 12))).cast("double").as("accrued_fees_token_y"))
+    val taskRows = in.tasks.select(keys :+ lit(1).as("task"): _*)
 
-    // ---- E2-E4 + A5: on-chain bin math per task (S7 tail) ----
-    // exact unbounded product then one rounding to double — Python's
+    // P4/P7/P8 + F1: deposits, keyed for the A1 tie-keep below
+    val deposits = keyed(in.history
+        .withColumnRenamed("poolAddress", "pool_address")
+        .filter(col("isDeposit") === true),
+      struct(
+        struct(col("blockNumber"), to_timestamp(col("timestamp")).as("ts")).as("k"),
+        coalesce(num(col("tokenX.amount")), lit(0.0)).cast(DecimalType(38, 6)).as("x"),
+        coalesce(num(col("tokenY.amount")), lit(0.0)).cast(DecimalType(38, 6)).as("y"))
+        .as("dep"))
+
+    // A4/A5: fee rows
+    val feeRows = keyed(in.fees.withColumnRenamed("poolAddress", "pool_address"),
+      foldEntry(col("binId").try_cast("long"),
+        coalesce(num(col("accruedFeesX")), lit(0.0)),
+        coalesce(num(col("accruedFeesY")), lit(0.0))).as("fee"))
+
+    // E2-E4: on-chain bin math per bin (S7 tail) — exact unbounded
+    // product then one rounding to double — Python's
     // `reserveX * shares / total_shares` (arbitrary-precision int*int,
     // then true division to float, main.py:232-233). BinMath.mulDiv
     // multiplies on java BigDecimal, so uint128-scale reserves/shares
     // (products beyond Decimal(38,0)'s 38-digit cap) stay exact instead
     // of overflowing to null; totalShares=0 yields null (engine policy).
-    val binCalc = in.bins
-      .join(p1d.select(col("pool_address"), col("token_x_decimals"),
-                       col("token_y_decimals")),
-            col("poolAddress") === col("pool_address"))
-      .select(
-        col("user_address"), col("pool_address"), col("binId"),
-        graft.functions.BinMath.mulDivDouble(
-          col("reserveX"), col("shares"), col("totalShares")).as("user_x_raw"),
-        graft.functions.BinMath.mulDivDouble(
-          col("reserveY"), col("shares"), col("totalShares")).as("user_y_raw"),
-        pow(lit(10.0), col("token_x_decimals")).as("scale_x"),
-        pow(lit(10.0), col("token_y_decimals")).as("scale_y"))
-    val binSummary = binCalc
-      .groupBy(col("user_address"), col("pool_address"))
-      .agg(
-        Relational.stringFold(
-          struct(col("binId"),
-                 (col("user_x_raw") / col("scale_x")).as("bx"),
-                 (col("user_y_raw") / col("scale_y")).as("by")),
-          x => format_string("%s: %s, %s",
-            x.getField("binId").cast("string"),
-            x.getField("bx").cast("string"),
-            x.getField("by").cast("string"))).as("bin_distribution"),
-        (sum(col("user_x_raw")) / first(col("scale_x"))).as("token_x_amount"),
-        (sum(col("user_y_raw")) / first(col("scale_y"))).as("token_y_amount"))
+    // The inner join drops bins of a pool missing from pool1d.
+    val binRows = {
+      val ux = graft.functions.BinMath.mulDivDouble(
+        col("reserveX"), col("shares"), col("totalShares"))
+      val uy = graft.functions.BinMath.mulDivDouble(
+        col("reserveY"), col("shares"), col("totalShares"))
+      val sx = pow(lit(10.0), col("token_x_decimals"))
+      val sy = pow(lit(10.0), col("token_y_decimals"))
+      keyed(in.bins
+          .join(broadcast(p1d.select(col("pool_address"), col("token_x_decimals"),
+                                     col("token_y_decimals"))),
+                col("poolAddress") === col("pool_address"))
+          .drop("poolAddress"),
+        foldEntry(col("binId"), ux / sx, uy / sy).as("bin"),
+        ux.as("ux"), uy.as("uy"), sx.as("sx"), sy.as("sy"))
+    }
 
-    // ---- J1/J2/J5: task table ⟕ dimensions (all broadcast-sized) ----
-    val joined = in.tasks
+    // ---- the one exchange + the one aggregate (A1/A2, A4/A5, A5) ----
+    // The union is hash-partitioned BEFORE the aggregate, so the
+    // aggregate runs whole in the reduce tasks: a map-side partial
+    // aggregate cannot shrink the folds' lists, yet it would generate
+    // its projections in every scan partition of the union.
+    // Folds sort their entries by the numeric fields, then read the
+    // pre-formatted text. A1: the latest deposits are those whose
+    // (blockNumber, ts) equals the group maximum — rank-1 ties kept,
+    // nulls lowest, as `Relational.latestByKey`'s rank orders them.
+    val entryText = (x: Column) => x.getField("text")
+    val summary = taskRows
+      .unionByName(deposits, allowMissingColumns = true)
+      .unionByName(feeRows, allowMissingColumns = true)
+      .unionByName(binRows, allowMissingColumns = true)
+      .repartition(keys: _*)
+      .groupBy(keys: _*)
+      .agg(
+        count(col("task")).as("tasks"),
+        max(col("dep.k")).as("latest"),
+        collect_list(col("dep")).as("deps"),
+        Relational.stringFold(col("fee"), entryText).as("fees_per_bin"),
+        sum(col("fee.x").cast(DecimalType(38, 12))).cast("double").as("accrued_fees_token_x"),
+        sum(col("fee.y").cast(DecimalType(38, 12))).cast("double").as("accrued_fees_token_y"),
+        Relational.stringFold(col("bin"), entryText).as("bin_distribution"),
+        (sum(col("ux")) / first(col("sx"), ignoreNulls = true)).as("token_x_amount"),
+        (sum(col("uy")) / first(col("sy"), ignoreNulls = true)).as("token_y_amount"))
+      // tasks only; a task listed n times yields n rows, as a join would
+      .filter(col("tasks") > 0)
+      .withColumn("tasks", explode(array_repeat(lit(1), col("tasks").cast("int"))))
+
+    // ---- J1/J2/J5: summaries ⟕ dimensions (all broadcast-sized) ----
+    val joined = summary
       .join(broadcast(p1d), Seq("pool_address"), "left")
       .join(broadcast(p1h), Seq("pool_address"), "left")
-      .join(histSummary, Seq("user_address", "pool_address"), "left")
-      .join(feeSummary, Seq("user_address", "pool_address"), "left")
-      .join(binSummary, Seq("user_address", "pool_address"), "left")
-      // F5: aggregate-or-default — the reference always materializes the
-      // summary frames, with zero totals and "()" blobs when the source
-      // arrays are empty (main.py:143-153, 158-181, 227-250)
-      .withColumn("total_tokenX_amount_initial_deposit",
-        coalesce(col("total_tokenX_amount_initial_deposit"), lit(0.0)))
-      .withColumn("total_tokenY_amount_initial_deposit",
-        coalesce(col("total_tokenY_amount_initial_deposit"), lit(0.0)))
-      .withColumn("accrued_fees_token_x", coalesce(col("accrued_fees_token_x"), lit(0.0)))
-      .withColumn("accrued_fees_token_y", coalesce(col("accrued_fees_token_y"), lit(0.0)))
-      .withColumn("fees_per_bin", coalesce(col("fees_per_bin"), lit("()")))
-      .withColumn("bin_distribution", coalesce(col("bin_distribution"), lit("()")))
-      .withColumn("token_x_amount", coalesce(col("token_x_amount"), lit(0.0)))
-      .withColumn("token_y_amount", coalesce(col("token_y_amount"), lit(0.0)))
 
-    // ---- E1, E5-E13: derived metrics ----
-    val metrics = joined
-      .withColumn("value_if_held_usd",
-        col("total_tokenX_amount_initial_deposit") * col("token_x_price") +
-        col("total_tokenY_amount_initial_deposit") * col("token_y_price"))
-      .withColumn("token_x_usd", col("token_x_price") * col("token_x_amount"))
-      .withColumn("token_y_usd", col("token_y_price") * col("token_y_amount"))
-      .withColumn("total_token_value_usd", col("token_x_usd") + col("token_y_usd"))
-      .withColumn("accrued_fees_token_x_usd",
-        col("accrued_fees_token_x") * col("token_x_price"))
-      .withColumn("accrued_fees_token_y_usd",
-        col("accrued_fees_token_y") * col("token_y_price"))
-      .withColumn("impermanent_loss_usd",
-        col("value_if_held_usd") - col("total_token_value_usd"))
-      .withColumn("user_pct_of_pool_liquidity",
-        safeDiv(col("total_token_value_usd"), col("liquidity")) * 100)
-      .withColumn("fees_annual", col("fees_1d") * 365)
-      .withColumn("apr_pct", safeDiv(col("fees_annual"), col("liquidity")) * 100)
-      .withColumn("apy_pct",
-        when(col("liquidity") =!= 0,
-          (pow(lit(1.0) + col("fees_1d") / col("liquidity"), 365) - 1) * 100))
-      .withColumn("apr_1d_pct", safeDiv(col("fees_1d"), col("liquidity")) * 100)
-      .withColumn("current_unix_timestamp", nowUnix)
-      .withColumn("timestamp_now", nowStr)
+    // ---- F5, E1, E5-E13, P5/P6: one select in the 46-column order ----
+    // F5: aggregate-or-default — the reference always materializes the
+    // summary frames, with zero totals and "()" blobs when the source
+    // arrays are empty (main.py:143-153, 158-181, 227-250)
+    val zero = lit(0.0)
+    // A1/A2: only the deposits tied on the latest (blockNumber, ts) sum
+    val latest = filter(col("deps"), d => d.getField("k") <=> col("latest"))
+    def depositSum(field: String): Column = coalesce(
+      aggregate(latest, lit(0).cast(DecimalType(38, 6)),
+        (acc, d) => (acc + d.getField(field)).cast(DecimalType(38, 6))).cast("double"),
+      zero)
+    val depositX = depositSum("x")
+    val depositY = depositSum("y")
+    val price = (c: String) => col(s"token_${c}_price")
+    val tokenX = coalesce(col("token_x_amount"), zero)
+    val tokenY = coalesce(col("token_y_amount"), zero)
+    val feesX = coalesce(col("accrued_fees_token_x"), zero)
+    val feesY = coalesce(col("accrued_fees_token_y"), zero)
+    val valueIfHeld = depositX * price("x") + depositY * price("y")
+    val tokenXUsd = price("x") * tokenX
+    val tokenYUsd = price("y") * tokenY
+    val totalValue = tokenXUsd + tokenYUsd
+    val feesAnnual = col("fees_1d") * 365
+    val liquidity = col("liquidity")
 
-    // ---- P5/P6: report names + canonical 46-column order, tolerant ----
-    val order: Seq[(String, String)] = Seq(
-      "current_unix_timestamp" -> "current_unix_timestamp",
-      "timestamp_now" -> "timestamp(datetime_pst)",
-      "pool_name" -> "pool_name",
-      "pool_address" -> "pool_address",
-      "volume_1h" -> "pool[volume](1h)",
-      "liquidity" -> "pool[liquidity]",
-      "fees_1h" -> "pool[total_fees(USD)](1h)",
-      "lbBinStep" -> "lbBinStep",
-      "base_fee_pct" -> "base_fee%",
-      "max_fee_pct" -> "max_fee%",
-      "protocol_fee_pct" -> "protocol_fee%",
-      "token_x_symbol" -> "token_x_symbol",
-      "token_y_symbol" -> "token_y_symbol",
-      "token_x_address" -> "token_x_address",
-      "token_y_address" -> "token_y_address",
-      "pool_token_x_amount" -> "pool[token_x_amount]",
-      "pool_token_y_amount" -> "pool[token_y_amount]",
-      "token_x_price" -> "token_x_price",
-      "token_y_price" -> "token_y_price",
-      "activeBinId" -> "activeBinId",
-      "liq_depth_token_x" -> "liquidityDepth+2%TokenX",
-      "liq_depth_token_y" -> "liquidityDepth-2%TokenY",
-      "liq_depth_plus_usd" -> "liquidityDepth+2%(USD)",
-      "liq_depth_minus_usd" -> "liquidityDepth-2%(USD)",
-      "user_address" -> "user_address",
-      "total_tokenX_amount_initial_deposit" -> "total_tokenX_amount_initial_deposit",
-      "total_tokenY_amount_initial_deposit" -> "total_tokenY_amount_initial_deposit",
-      "MostRecentDepositTime" -> "MostRecentDepositTime",
-      "token_x_amount" -> "token_x_amount",
-      "token_y_amount" -> "token_y_amount",
-      "token_x_usd" -> "token_x(USD)",
-      "token_y_usd" -> "token_y(USD)",
-      "bin_distribution" -> "bin_distribution(bin id: token_x_amount, token_y_amounts)",
-      "total_token_value_usd" -> "total_token_value(USD)",
-      "accrued_fees_token_x" -> "accrued_fees_token_x",
-      "accrued_fees_token_y" -> "accrued_fees_token_y",
-      "accrued_fees_token_x_usd" -> "accrued_fees_token_x(USD)",
-      "accrued_fees_token_y_usd" -> "accrued_fees_token_y(USD)",
-      "fees_per_bin" -> "fees_per_bin(bin_id: token_x, token_y_amounts)",
-      "value_if_held_usd" -> "value_if_held(USD)",
-      "impermanent_loss_usd" -> "impermanent_loss(USD)",
-      "user_pct_of_pool_liquidity" -> "user_%_of_pool_liquidity",
-      "fees_annual" -> "fees_annual",
-      "apr_pct" -> "APR%",
-      "apy_pct" -> "APY%",
-      "apr_1d_pct" -> "APR_1d%")
-    Relational.tolerantSelect(metrics, order)
+    val report: Seq[(String, Column)] = Seq(
+      "current_unix_timestamp" -> nowUnix,
+      "timestamp(datetime_pst)" -> nowStr,
+      "pool_name" -> col("pool_name"),
+      "pool_address" -> col("pool_address"),
+      "pool[volume](1h)" -> col("volume_1h"),
+      "pool[liquidity]" -> liquidity,
+      "pool[total_fees(USD)](1h)" -> col("fees_1h"),
+      "lbBinStep" -> col("lbBinStep"),
+      "base_fee%" -> col("base_fee_pct"),
+      "max_fee%" -> col("max_fee_pct"),
+      "protocol_fee%" -> col("protocol_fee_pct"),
+      "token_x_symbol" -> col("token_x_symbol"),
+      "token_y_symbol" -> col("token_y_symbol"),
+      "token_x_address" -> col("token_x_address"),
+      "token_y_address" -> col("token_y_address"),
+      "pool[token_x_amount]" -> col("pool_token_x_amount"),
+      "pool[token_y_amount]" -> col("pool_token_y_amount"),
+      "token_x_price" -> price("x"),
+      "token_y_price" -> price("y"),
+      "activeBinId" -> col("activeBinId"),
+      "liquidityDepth+2%TokenX" -> col("liq_depth_token_x"),
+      "liquidityDepth-2%TokenY" -> col("liq_depth_token_y"),
+      "liquidityDepth+2%(USD)" -> col("liq_depth_plus_usd"),
+      "liquidityDepth-2%(USD)" -> col("liq_depth_minus_usd"),
+      "user_address" -> col("user_address"),
+      "total_tokenX_amount_initial_deposit" -> depositX,
+      "total_tokenY_amount_initial_deposit" -> depositY,
+      "MostRecentDepositTime" ->
+        date_format(col("latest").getField("ts"), "yyyy-MM-dd HH:mm:ss"),
+      "token_x_amount" -> tokenX,
+      "token_y_amount" -> tokenY,
+      "token_x(USD)" -> tokenXUsd,
+      "token_y(USD)" -> tokenYUsd,
+      "bin_distribution(bin id: token_x_amount, token_y_amounts)" -> col("bin_distribution"),
+      "total_token_value(USD)" -> totalValue,
+      "accrued_fees_token_x" -> feesX,
+      "accrued_fees_token_y" -> feesY,
+      "accrued_fees_token_x(USD)" -> feesX * price("x"),
+      "accrued_fees_token_y(USD)" -> feesY * price("y"),
+      "fees_per_bin(bin_id: token_x, token_y_amounts)" -> col("fees_per_bin"),
+      "value_if_held(USD)" -> valueIfHeld,
+      "impermanent_loss(USD)" -> (valueIfHeld - totalValue),
+      "user_%_of_pool_liquidity" -> safeDiv(totalValue, liquidity) * 100,
+      "fees_annual" -> feesAnnual,
+      "APR%" -> safeDiv(feesAnnual, liquidity) * 100,
+      "APY%" -> when(liquidity =!= 0,
+        (pow(lit(1.0) + col("fees_1d") / liquidity, 365) - 1) * 100),
+      "APR_1d%" -> safeDiv(col("fees_1d"), liquidity) * 100)
+    joined.select(report.map { case (name, c) => c.as(name) }: _*)
   }
 }

@@ -198,15 +198,22 @@ class FixtureReader(file: String, required: StructType,
   override def close(): Unit = source.foreach(_.close())
 }
 
-/** Shared per-partition JSONL decode plane: streams lines from any
-  * transport (local file, HTTP body, RPC response), evaluates pushed
-  * filters on the parsed tree, materializes only required columns.
-  * Parse failures follow `mode` (see [[FixtureTable]]). */
-abstract class JsonLinesReader(required: StructType,
-                               pushed: Array[Filter], mode: String)
+/** Shared per-partition quarantine plane: streams records of type `R`
+  * from any transport (JSONL lines, decoded RPC returns) and applies
+  * the mode policy (see [[FixtureTable]]) to every record that fails to
+  * decode and to every transport failure. */
+abstract class RecordReader[R](required: StructType, mode: String)
     extends PartitionReader[InternalRow] {
 
-  protected val lines: Iterator[String]
+  /** Called once, on the first `next()`. */
+  protected def records: Iterator[R]
+
+  /** The record's row when it passes the pushed filters, None when a
+    * pushed filter drops it; throws when the record is malformed. */
+  protected def decode(record: R): Option[InternalRow]
+
+  /** The record's text for the `_corrupt_record` column. */
+  protected def raw(record: R): String
 
   /** Partition identity ("file=…", "url=…") for quarantine rows, so a
     * failed stream can be traced back to its source. */
@@ -217,21 +224,21 @@ abstract class JsonLinesReader(required: StructType,
     * `next()` call. */
   protected var setupError: Option[Exception] = None
 
-  private val mapper = new ObjectMapper()
   protected var current: InternalRow = _
   private var streamFailed = false
+  private lazy val stream = records
 
   private val corruptOrdinal: Int =
     required.fieldNames.indexOf("_corrupt_record")
 
-  /** Quarantined row: all-null except the raw line (or error rendering)
-    * in _corrupt_record when the schema declares it. Spark re-checks
-    * every user predicate on these rows (see pushFilters), so they
-    * surface only in unfiltered reads — same contract as Spark's own
-    * PERMISSIVE JSON source. */
-  protected def corruptRow(line: String): InternalRow = {
+  /** Quarantined row: all-null except the raw record (or error
+    * rendering) in _corrupt_record when the schema declares it. Spark
+    * re-checks every user predicate on these rows (see pushFilters), so
+    * they surface only in unfiltered reads — same contract as Spark's
+    * own PERMISSIVE JSON source. */
+  protected def corruptRow(text: String): InternalRow = {
     val values = new Array[Any](required.length)
-    if (corruptOrdinal >= 0) values(corruptOrdinal) = UTF8String.fromString(line)
+    if (corruptOrdinal >= 0) values(corruptOrdinal) = UTF8String.fromString(text)
     new GenericInternalRow(values)
   }
 
@@ -258,26 +265,21 @@ abstract class JsonLinesReader(required: StructType,
     while (true) {
       // the transport iterator itself can fail mid-stream (lazy HTTP
       // body, truncated file): that failure follows the same mode
-      // policy as a parse failure, and the reader then terminates (the
+      // policy as a decode failure, and the reader then terminates (the
       // iterator is not resumable after a transport error)
-      val line =
-        try { if (!lines.hasNext) return false; lines.next().trim }
+      val record =
+        try { if (!stream.hasNext) return false; stream.next() }
         catch { case e: Exception => return failStream("stream", e) }
-      if (line.nonEmpty) {
-        try {
-          val node = mapper.readTree(line)
-          if (node == null || !node.isObject)
-            throw new IllegalArgumentException(s"not a JSON object: $line")
-          if (pushed.forall(matches(node, _))) {
-            current = convertStruct(node, required)
-            return true
-          }
-        } catch {
-          case e: Exception => mode.toUpperCase match {
-            case "PERMISSIVE"    => current = corruptRow(line); return true
-            case "DROPMALFORMED" => () // skip the poisoned line
-            case _               => throw e
-          }
+      try {
+        decode(record) match {
+          case Some(row) => current = row; return true
+          case None => ()
+        }
+      } catch {
+        case e: Exception => mode.toUpperCase match {
+          case "PERMISSIVE"    => current = corruptRow(raw(record)); return true
+          case "DROPMALFORMED" => () // skip the poisoned record
+          case _               => throw e
         }
       }
     }
@@ -286,22 +288,53 @@ abstract class JsonLinesReader(required: StructType,
 
   override def get(): InternalRow = current
   override def close(): Unit = ()
+}
+
+/** JSONL decode over the shared plane: evaluates pushed filters on the
+  * parsed tree and materializes only required columns. */
+abstract class JsonLinesReader(required: StructType,
+                               pushed: Array[Filter], mode: String)
+    extends RecordReader[String](required, mode) {
+  import JsonLinesReader._
+
+  protected val lines: Iterator[String]
+
+  override protected def records: Iterator[String] =
+    lines.map(_.trim).filter(_.nonEmpty)
+
+  private val mapper = new ObjectMapper()
+
+  override protected def raw(line: String): String = line
+
+  override protected def decode(line: String): Option[InternalRow] = {
+    val node = mapper.readTree(line)
+    if (node == null || !node.isObject)
+      throw new IllegalArgumentException(s"not a JSON object: $line")
+    val field = (name: String) => fieldValue(node, name)
+    if (pushed.forall(matches(field, _))) Some(convertStruct(node, required))
+    else None
+  }
+}
+
+object JsonLinesReader {
 
   private def fieldValue(node: JsonNode, name: String): Option[JsonNode] =
     Option(node.get(name)).filterNot(_.isNull)
 
-  private def matches(node: JsonNode, f: Filter): Boolean = f match {
-    case IsNotNull(a)             => fieldValue(node, a).isDefined
-    case EqualTo(a, v)            => cmp(node, a, v).contains(0)
-    case GreaterThan(a, v)        => cmp(node, a, v).exists(_ > 0)
-    case GreaterThanOrEqual(a, v) => cmp(node, a, v).exists(_ >= 0)
-    case LessThan(a, v)           => cmp(node, a, v).exists(_ < 0)
-    case LessThanOrEqual(a, v)    => cmp(node, a, v).exists(_ <= 0)
+  /** A pushed filter evaluated on a record's JSON field values
+    * (`field` = name → non-null value, None when absent or null). */
+  private[sources] def matches(field: String => Option[JsonNode], f: Filter): Boolean = f match {
+    case IsNotNull(a)             => field(a).isDefined
+    case EqualTo(a, v)            => cmp(field(a), v).contains(0)
+    case GreaterThan(a, v)        => cmp(field(a), v).exists(_ > 0)
+    case GreaterThanOrEqual(a, v) => cmp(field(a), v).exists(_ >= 0)
+    case LessThan(a, v)           => cmp(field(a), v).exists(_ < 0)
+    case LessThanOrEqual(a, v)    => cmp(field(a), v).exists(_ <= 0)
     case _                        => true
   }
 
-  private def cmp(node: JsonNode, name: String, v: Any): Option[Int] =
-    fieldValue(node, name).map { n =>
+  private def cmp(value: Option[JsonNode], v: Any): Option[Int] =
+    value.map { n =>
       v match {
         // UTF8String comparison = UTF-8 byte order, matching Spark's own
         // string ordering (java String.compareTo is UTF-16 code-unit
@@ -325,7 +358,7 @@ abstract class JsonLinesReader(required: StructType,
     new GenericInternalRow(values.asInstanceOf[Array[Any]])
   }
 
-  private def convert(n: JsonNode, dt: DataType): Any = dt match {
+  private[sources] def convert(n: JsonNode, dt: DataType): Any = dt match {
     case StringType      => UTF8String.fromString(if (n.isTextual) n.asText else n.toString)
     case LongType        => n.asLong
     case IntegerType     => n.asInt

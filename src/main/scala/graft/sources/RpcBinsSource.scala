@@ -1,14 +1,17 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{BigIntegerNode, LongNode, TextNode}
 import graft.functions.Keccak256
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import java.math.BigInteger
 import java.util
 
@@ -27,18 +30,21 @@ import java.util
   *    requests spread across the cluster's executors instead of 10⁵
   *    sequential driver round-trips;
   *  - decodes the response array by matching each entry's `id` back to
-  *    its task, ABI-decodes the `(uint24, PopulatedBinUser[])` return
-  *    into one row per populated bin, and feeds those rows through THE
-  *    SAME pushdown/prune/quarantine plane as every other connector
-  *    ([[JsonLinesReader]]): a per-item RPC error or an undecodable
-  *    result becomes a quarantinable record under the standard
-  *    PERMISSIVE/DROPMALFORMED/FAILFAST policy — the reference's
-  *    don't-kill-the-sweep semantics (main.py:13-17), item-granular.
+  *    its task and ABI-decodes the `(uint24, PopulatedBinUser[])` return
+  *    into one row per populated bin, built directly from the decoded
+  *    words (no JSON text in between);
+  *  - keeps the pushdown/prune/quarantine contract of every other
+  *    connector: pushed filters use the JSON plane's comparison rules
+  *    ([[JsonLinesReader.matches]]), only required columns are built,
+  *    and a per-item RPC error or an undecodable result becomes a
+  *    quarantinable record of the shared [[RecordReader]] plane under
+  *    the standard PERMISSIVE/DROPMALFORMED/FAILFAST policy — the
+  *    reference's don't-kill-the-sweep semantics (main.py:13-17),
+  *    item-granular.
   *
   * Output schema: [[graft.model.Schemas.binReserves]] (user_address,
   * poolAddress, binId, reserveX, reserveY, shares, totalShares) —
-  * exactly the bins input of [[graft.pipeline.Snapshot]], so the demo
-  * pipeline runs end-to-end through this connector (SnapshotDemo).
+  * exactly the bins input of [[graft.pipeline.Snapshot]].
   *
   * Usage:
   * {{{
@@ -119,8 +125,8 @@ object BinsAbi {
     "0" * (64 - hex.length) + hex
   }
   /** Real addresses are hex; offline fixture ids ("P1") encode as their
-    * right-aligned ASCII bytes so the demo plumbing stays runnable
-    * without fabricating 20-byte addresses. */
+    * right-aligned ASCII bytes, so fixtures need not fabricate 20-byte
+    * addresses. */
   private def addressWord(a: String): String = {
     val s = a.stripPrefix("0x")
     val v = if (s.nonEmpty && s.forall(c => Character.digit(c, 16) >= 0))
@@ -135,8 +141,8 @@ object BinsAbi {
       word(BigInteger.valueOf(t.idsPlus)) + word(BigInteger.valueOf(t.idsMinus))
 
   /** Fixture/inverse helper: render (activeId, bins) as the ABI return
-    * hex — used by specs and the offline SnapshotDemo to fabricate node
-    * responses without a live chain. */
+    * hex — used by specs and canned nodes to fabricate node responses
+    * without a live chain. */
   def encodeResult(activeId: Long,
                    bins: Seq[(Long, BigInteger, BigInteger, BigInteger, BigInteger)]): String =
     "0x" + word(BigInteger.valueOf(activeId)) + word(BigInteger.valueOf(64)) +
@@ -234,24 +240,29 @@ case class RpcBinsReaderFactory(required: StructType, endpoint: String,
 }
 
 /** Per-partition reader: ONE batched POST for the partition's tasks,
-  * envelope + ABI decode, then each bin row rendered as a JSON line
-  * into the shared [[JsonLinesReader]] plane — quarantine, pruning,
-  * and pushdown behave identically to every other source. A per-item
-  * RPC error (or undecodable result) is surfaced as a deliberately
-  * non-JSON line tagged with its task, which the plane then handles
-  * under the mode policy — item-granular, the rest of the batch
-  * survives. */
+  * envelope + ABI decode, then each bin built straight into an
+  * [[InternalRow]] of the required columns. Pushed filters are checked
+  * on the decoded values with the JSON plane's comparison rules before
+  * the row is built. A per-item RPC error (or undecodable result) is a
+  * record tagged with its task, which the shared [[RecordReader]] plane
+  * quarantines under the mode policy — item-granular, the rest of the
+  * batch survives. */
 class RpcBinsReader(tasks: Seq[RpcBinsTask], endpoint: String,
                     contract: String, required: StructType,
                     pushed: Array[Filter], mode: String)
-    extends JsonLinesReader(required, pushed, mode) {
+    extends RecordReader[Either[String, RpcBinsReader.Bin]](required, mode) {
+  import RpcBinsReader._
 
   override protected def sourceId: String = s"endpoint=$endpoint"
-  override def close(): Unit = ()
 
-  override protected val lines: Iterator[String] =
+  private val mapper = new ObjectMapper()
+
+  /** Position of each required column among [[Fields]], -1 when the
+    * ABI return carries no such field (e.g. `_corrupt_record`). */
+  private val slots = required.fieldNames.map(Fields.indexOf(_))
+
+  override protected val records: Iterator[Either[String, Bin]] =
     try {
-      val mapper = new ObjectMapper()
       val body = tasks.zipWithIndex.map { case (t, i) =>
         s"""{"jsonrpc":"2.0","id":$i,"method":"eth_call","params":[{"to":${mapper.writeValueAsString(contract)},"data":"${BinsAbi.encodeCall(t)}"},"latest"]}"""
       }.mkString("[", ",", "]")
@@ -263,18 +274,77 @@ class RpcBinsReader(tasks: Seq[RpcBinsTask], endpoint: String,
       tasks.zipWithIndex.iterator.flatMap { case (t, i) =>
         byId.get(i.toLong) match {
           case None =>
-            Iterator(s"!rpc-missing id=$i pair=${t.pair} user=${t.user}")
+            Iterator(Left(s"!rpc-missing id=$i pair=${t.pair} user=${t.user}"))
           case Some(e) if e.has("error") && !e.get("error").isNull =>
-            Iterator(s"!rpc-error id=$i pair=${t.pair} user=${t.user} error=${e.get("error")}")
+            Iterator(Left(s"!rpc-error id=$i pair=${t.pair} user=${t.user} error=${e.get("error")}"))
           case Some(e) =>
             try BinsAbi.decodeBins(e.get("result").asText()).iterator.map {
               case (bin, rx, ry, sh, tot) =>
-                s"""{"user_address":${mapper.writeValueAsString(t.user)},"poolAddress":${mapper.writeValueAsString(t.pair)},"binId":$bin,"reserveX":$rx,"reserveY":$ry,"shares":$sh,"totalShares":$tot}"""
+                Right(Array[Any](t.user, t.pair, bin, rx, ry, sh, tot))
             } catch {
               case ex: Exception =>
-                Iterator(s"!rpc-decode-failed id=$i pair=${t.pair} user=${t.user} error=$ex")
+                Iterator(Left(s"!rpc-decode-failed id=$i pair=${t.pair} user=${t.user} error=$ex"))
             }
         }
       }
     } catch { case e: Exception => setupError = Some(e); Iterator.empty }
+
+  override protected def decode(record: Either[String, Bin]): Option[InternalRow] =
+    record match {
+      case Left(failure) => throw new IllegalStateException(failure)
+      case Right(bin) =>
+        val field = (name: String) => Fields.indexOf(name) match {
+          case -1 => None
+          case k => Some(node(bin(k)))
+        }
+        if (!pushed.forall(JsonLinesReader.matches(field, _))) None
+        else {
+          val values = new Array[Any](slots.length)
+          var i = 0
+          while (i < slots.length) {
+            if (slots(i) >= 0) values(i) = cell(bin(slots(i)), required.fields(i).dataType)
+            i += 1
+          }
+          Some(new GenericInternalRow(values))
+        }
+    }
+
+  /** A bin as the JSON line it would be served as — the quarantine text
+    * when one of its values does not fit its column (e.g. a reserve
+    * beyond the declared decimal precision). */
+  override protected def raw(record: Either[String, Bin]): String = record match {
+    case Left(failure) => failure
+    case Right(bin) => Fields.indices.map { k =>
+      val v = bin(k) match {
+        case s: String => mapper.writeValueAsString(s)
+        case other => other.toString
+      }
+      s""""${Fields(k)}":$v"""
+    }.mkString("{", ",", "}")
+  }
+}
+
+object RpcBinsReader {
+  /** One decoded bin, in [[Fields]] order: user, pair (String), binId
+    * (Long), then the four uint words (BigInteger). */
+  type Bin = Array[Any]
+
+  private val Fields: IndexedSeq[String] =
+    graft.model.Schemas.binReserves.fieldNames.toIndexedSeq
+
+  private def node(v: Any): JsonNode = v match {
+    case s: String => TextNode.valueOf(s)
+    case l: Long => LongNode.valueOf(l)
+    case b: BigInteger => BigIntegerNode.valueOf(b)
+  }
+
+  /** The schema's own column types are built directly; a caller-declared
+    * other type converts as the JSON plane would convert the value. */
+  private def cell(v: Any, dt: DataType): Any = (v, dt) match {
+    case (s: String, StringType) => UTF8String.fromString(s)
+    case (l: Long, LongType) => l
+    case (b: BigInteger, d: DecimalType) =>
+      Decimal(new java.math.BigDecimal(b), d.precision, d.scale)
+    case _ => JsonLinesReader.convert(node(v), dt)
+  }
 }

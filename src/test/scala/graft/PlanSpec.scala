@@ -889,4 +889,67 @@ class PlanSpec extends SparkSpec {
       assert(p.contains("Generate"), s"plan:\n$p") // the schedule explode
     }
   }
+
+  describe("snapshot tick (LiveEndpoints.inputs → Snapshot.build)") {
+    it("plans the snapshot with exactly one shuffle and runs the tick in at most 6 jobs") {
+      import graft.sources.{BinsAbi, HttpTransport, RpcTransport}
+      import java.math.BigInteger
+      val cfg = graft.pipeline.LiveEndpoints.Config(
+        dexBase = "https://dex.example", feesBase = "https://fees.example",
+        rpcEndpoint = "https://node.example/rpc", contract = "0xC0",
+        apiKey = None, startTimeUnix = 0L, endTimeUnix = 1L)
+      val pool = (f: String) =>
+        s"""{"pairAddress":"P1","name":"AVAX-USDC","filterBy":"$f","volumeUsd":"50000.0","liquidityUsd":"250000.0","feesUsd":125.0,"activeBinId":"8388608","tokenX":{"decimals":"18","priceUsd":"25.0"},"tokenY":{"decimals":"6","priceUsd":"1.0"}}"""
+      HttpTransport.setOverride { url =>
+        val user = if (url.contains("/U2/")) "U2" else "U1"
+        if (url.contains("/v1/pools/")) Iterator(pool(if (url.contains("1h")) "1h" else "1d"))
+        else if (url.contains("/history/")) Iterator(100, 120, 120).map(b =>
+          s"""{"user_address":"$user","poolAddress":"P1","timestamp":"2024-01-06 10:00:00","isDeposit":true,"blockNumber":$b,"tokenX":{"amount":"2.0"},"tokenY":{"amount":"50"}}""")
+        else Iterator(8388608, 8388609).map(b =>
+          s"""{"user_address":"$user","poolAddress":"P1","binId":$b,"accruedFeesX":"0.5","accruedFeesY":0.25}""")
+      }
+      val bins = BinsAbi.encodeResult(8388608L, Seq(8388607L, 8388608L).map(b =>
+        (b, BigInteger.TEN.pow(18), BigInteger.ONE, BigInteger.TWO, BigInteger.TEN)))
+      RpcTransport.setOverride { (_, body) =>
+        val req = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+        (0 until req.size()).map(i =>
+          s"""{"jsonrpc":"2.0","id":${req.get(i).get("id").asLong()},"result":"$bins"}""")
+          .mkString("[", ",", "]")
+      }
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val in = graft.pipeline.LiveEndpoints.inputs(spark, cfg, Seq(("U1", "P1"), ("U2", "P1")))
+        val snap = graft.pipeline.Snapshot.build(in,
+          nowUnix = org.apache.spark.sql.functions.lit(0L),
+          nowStr = org.apache.spark.sql.functions.lit("t"))
+        assert(snap.collect().length == 2)
+        // the async listener bus: read the count once it is stable
+        // (bounded at 15 s, as in PerfCanarySpec)
+        var (stable, cur, spins) = (0, jobs.get, 0)
+        while (stable < 3 && spins < 30) {
+          Thread.sleep(500)
+          if (jobs.get == cur) stable += 1 else { stable = 0; cur = jobs.get }
+          spins += 1
+        }
+        val plan = snap.queryExecution.executedPlan
+        val shuffles = AqePlans.collectWithSubqueries(plan) {
+          case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => s
+        }
+        assert(shuffles.size == 1, s"plan:\n$plan")
+        assert(cur <= 6, s"the tick ran $cur jobs; plan:\n$plan")
+      } finally {
+        spark.sparkContext.removeSparkListener(listener)
+        HttpTransport.clearOverride()
+        RpcTransport.clearOverride()
+      }
+    }
+  }
 }
+
+/** Walks AQE plans through their query stages. */
+private object AqePlans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

@@ -146,5 +146,65 @@ class RpcSourceSpec extends SparkSpec {
         assert(df.count() == 1)
       } finally RpcTransport.clearOverride()
     }
+
+    it("builds rows straight from the ABI words: decodeBins values, _corrupt_record pruned or null") {
+      RpcTransport.setOverride(cannedNode(
+        scala.collection.mutable.Buffer.empty[String], _ => result1))
+      try {
+        val schema = StructType(graft.model.Schemas.binReserves.fields :+
+          StructField("_corrupt_record", StringType))
+        val df = spark.read.format("graft.sources.RpcBinsSource").schema(schema)
+          .option("endpoint", "https://node/rpc").option("contract", "0xC")
+          .option("tasks", "0xP1,0xU1,1,1,1").option("mode", "PERMISSIVE").load()
+        val bins = df.select(graft.model.Schemas.binReserves.fieldNames.toIndexedSeq.map(df.col): _*)
+        val plan = bins.queryExecution.executedPlan.toString
+        assert(!plan.contains("_corrupt_record"), s"plan:\n$plan")
+        val got = bins.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
+          r.getDecimal(3).toBigIntegerExact, r.getDecimal(4).toBigIntegerExact,
+          r.getDecimal(5).toBigIntegerExact, r.getDecimal(6).toBigIntegerExact))
+        assert(got.toSeq.sortBy(_._3) == BinsAbi.decodeBins(result1).map {
+          case (b, rx, ry, sh, tot) => ("0xU1", "0xP1", b, rx, ry, sh, tot)
+        })
+        // a reordered subset with the quarantine column: null on good rows
+        val sub = df.select($"shares", $"_corrupt_record", $"binId")
+          .as[(java.math.BigDecimal, String, Long)].collect().sortBy(_._3).toSeq
+        assert(sub == bins1.map { case (b, _, _, sh, _) => (new java.math.BigDecimal(sh), null, b) })
+      } finally RpcTransport.clearOverride()
+    }
+
+    it("quarantines a bin whose reserve overflows decimal(38,0) as its JSON line") {
+      val huge = BigInteger.TWO.pow(200)
+      val result = BinsAbi.encodeResult(7L, Seq(
+        (7L, huge, BigInteger.ONE, BigInteger.ONE, BigInteger.TEN)) ++ bins1)
+      RpcTransport.setOverride(cannedNode(
+        scala.collection.mutable.Buffer.empty[String], _ => result))
+      try {
+        val schema = StructType(graft.model.Schemas.binReserves.fields :+
+          StructField("_corrupt_record", StringType))
+        val df = spark.read.format("graft.sources.RpcBinsSource").schema(schema)
+          .option("endpoint", "https://node/rpc").option("contract", "0xC")
+          .option("tasks", "0xP1,0xU1,1,1,1").option("mode", "PERMISSIVE").load()
+        // an unfiltered read of every column: a pushed filter would drop
+        // the bin, and pruning reserveX would skip it, before conversion
+        val (bad, good) = df.collect().map(_.getAs[String]("_corrupt_record"))
+          .toSeq.partition(_ != null)
+        assert(bad == Seq(s"""{"user_address":"0xU1","poolAddress":"0xP1","binId":7,"reserveX":$huge,"reserveY":1,"shares":1,"totalShares":10}"""))
+        assert(good.length == bins1.length)
+      } finally RpcTransport.clearOverride()
+    }
+
+    it("drops rows failing a pushed filter inside the reader in FAILFAST (no Spark re-check)") {
+      RpcTransport.setOverride(cannedNode(
+        scala.collection.mutable.Buffer.empty[String], _ => result1))
+      try {
+        val reader = new graft.sources.RpcBinsReader(
+          Seq(RpcBinsTask("0xP1", "0xU1", 1L, 1L, 1L)), "https://node/rpc", "0xC",
+          graft.model.Schemas.binReserves,
+          Array(org.apache.spark.sql.sources.EqualTo("binId", 8388607L)), "FAILFAST")
+        val ids = Iterator.continually(reader.next()).takeWhile(identity)
+          .map(_ => reader.get().getLong(2)).toList
+        assert(ids == List(8388607L))
+      } finally RpcTransport.clearOverride()
+    }
   }
 }

@@ -129,4 +129,49 @@ class SnapshotSpec extends SparkSpec {
       assert(r.getAs[Int]("lbBinStep") == 25)
     }
   }
+
+  // Task-table semantics: U1/P1 is listed twice; U2/P2 names a pool that
+  // pool1d does not list; U3/P1 and U1/P2 have child rows but no task.
+  private lazy val edgeOut = Snapshot.build(
+    Snapshot.Inputs(
+      Seq(("U1", "P1"), ("U1", "P1"), ("U2", "P2")).toDF("user_address", "pool_address"),
+      pool1d, pool1h,
+      history.unionByName(json(Seq(
+        """{"user_address":"U3","poolAddress":"P1","timestamp":"2024-01-08 10:00:00","isDeposit":true,"blockNumber":200,"tokenX":{"amount":"7.0"},"tokenY":{"amount":"7"}}"""),
+        Schemas.userHistory)),
+      fees.unionByName(json(Seq(
+        """{"user_address":"U3","poolAddress":"P1","binId":"8388608","accruedFeesX":"9.0","accruedFeesY":"9.0"}""",
+        """{"user_address":"U1","poolAddress":"P2","binId":"8388608","accruedFeesX":"9.0","accruedFeesY":"9.0"}"""),
+        Schemas.feesEarned)),
+      bins.unionByName(json(Seq(
+        """{"user_address":"U3","poolAddress":"P1","binId":8388608,"reserveX":1000,"reserveY":1000,"shares":1,"totalShares":1}""",
+        """{"user_address":"U2","poolAddress":"P2","binId":8388608,"reserveX":1000,"reserveY":1000,"shares":1,"totalShares":1}"""),
+        Schemas.binReserves))),
+    nowUnix = lit(1700000000L), nowStr = lit("2023-11-14 22:13:20")).collect()
+
+  describe("snapshot task semantics (one output row per task-table row)") {
+    it("history, fee and bin rows whose (user, pool) is not a task produce no row") {
+      assert(edgeOut.map(r => (r.getAs[String]("user_address"), r.getAs[String]("pool_address")))
+        .sorted.toSeq == Seq(("U1", "P1"), ("U1", "P1"), ("U2", "P2")))
+    }
+
+    it("bins of a pool missing from pool1d are dropped") {
+      val r = edgeOut.find(_.getAs[String]("pool_address") == "P2").get
+      assert(r.getAs[String]("pool_name") == null)
+      assert(r.getAs[String]("bin_distribution(bin id: token_x_amount, token_y_amounts)") == "()")
+      assert(r.getAs[Double]("token_x_amount") == 0.0)
+    }
+
+    it("a task listed twice yields two rows, each with the task's own totals") {
+      val u1 = edgeOut.filter(_.getAs[String]("user_address") == "U1")
+      assert(u1.length == 2)
+      u1.foreach { r =>
+        assert(r.getAs[Double]("total_tokenX_amount_initial_deposit") == 2.5)
+        assert(r.getAs[Double]("accrued_fees_token_x") == 1.75)
+        assert(r.getAs[Double]("token_x_amount") == 2.25)
+        assert(r.getAs[String]("fees_per_bin(bin_id: token_x, token_y_amounts)") ==
+          "(8388608: 0.5, 0.25; 8388609: 1.25, 0.75)")
+      }
+    }
+  }
 }

@@ -204,6 +204,9 @@ class WarehouseSpec extends SparkSpec {
         ("A", "B") -> 3L, ("A", "C") -> 2L, ("A", "D") -> 1L,
         ("B", "C") -> 2L, ("B", "D") -> 1L, ("C", "D") -> 1L))
     }
+    it("explode emits a null array element as one null row (the brand_b marker)") {
+      assert(spark.sql("SELECT explode(array(CAST(NULL AS STRING)))").as[String].collect().toSeq == Seq(null))
+    }
   }
 
   describe("Fifo.matchLots (q180)") {
