@@ -55,6 +55,11 @@ object PerfCanary {
     // re-adds ~12 scheduler jobs and fails here loudly
     "q142_triangle_count"     -> 8,
     "q144_local_clustering"   -> 8,
+    // the PageRank and label-propagation driver twins (edge build +
+    // cap probe + collect); a fallback to the BSP supersteps re-adds
+    // jobs per iteration
+    "q128_pagerank"           -> 7,
+    "q191_label_propagation"  -> 8,
     // the guarded-dedup family: exact tier only at sf0.01
     "q52_dedup_apply"         -> 17,
     "q48_dedup_groups"        -> 13,

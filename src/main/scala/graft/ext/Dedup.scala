@@ -1,7 +1,8 @@
 package graft.ext
 
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.ops.DriverGraph
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for LLM-corpus pipelines (BASELINE.json north
@@ -31,7 +32,7 @@ object Dedup {
     * default only while every (block, shingle) posting list stays at or
     * under this bound — a regenerated fixture that crosses it must fail
     * one named spec, not silently shift the oracle comparison's
-    * semantics (round-9 next-round #5). */
+    * semantics. */
   val DefaultMaxDf: Int = 100000
 
   /** Exact dedup core, parameterized on the grouping key so specs can
@@ -118,7 +119,7 @@ object Dedup {
     * (heavy-tailed shingle frequencies, sparse similarity) prefix
     * filtering wins; for guaranteed sub-quadratic behavior at 100 TB
     * use [[minhashLshPairs]]. Posting-list representation was also
-    * shot out (round 7, Prof4, steady state): struct+array_sort,
+    * shot out (steady state): struct+array_sort,
     * struct-unsorted, packed-long, and bare-id lists all time
     * identically — the cost is the shingle-row shuffle and the
     * list-building aggregate itself, so the readable struct form
@@ -158,12 +159,11 @@ object Dedup {
     * deliberately stays the production setting (an unbounded default
     * would reinstate the hot-shingle k-squared blowup out of the box).
     *
-    * Round 13 (VERDICT r12 #8): on the capped path the posting-list
-    * table is localCheckpoint'd once — its two consumers (pair plane,
-    * hot correction) previously shared only the shuffle WRITE via
-    * ReuseExchange and each re-ran the list-building aggregate, the
-    * expensive half per Prof4. At sf0.1 the materialization job and
-    * the saved second aggregate roughly cancel (q21/q107/q121 measured
+    * On the capped path the posting-list table is localCheckpoint'd
+    * once — without it its two consumers (pair plane, hot correction)
+    * share only the shuffle WRITE via ReuseExchange and each re-run the
+    * list-building aggregate, the expensive half. At sf0.1 the
+    * materialization job and the saved second aggregate roughly cancel (q21/q107/q121 measured
     * inside same-window noise either way); the checkpoint is kept for
     * the structural guarantee — at open scale the aggregate's
     * collect_list+sort CPU over the full shingle volume dominates one
@@ -182,8 +182,8 @@ object Dedup {
     * table is localCheckpoint'd — it feeds BOTH the pair plane
     * (≤ maxDf) and the hot-shingle correction (> maxDf), and
     * ReuseExchange shares only the shuffle WRITE between those
-    * consumers; the list-building aggregate itself (the expensive half
-    * per Prof4) would run twice (VERDICT r12 #8). The uncapped path
+    * consumers; the list-building aggregate itself (the expensive half)
+    * would run twice. The uncapped path
     * has a single consumer and skips the materialization job. The
     * checkpointed form is also what makes [[guardedJaccardPairs]]'
     * cap-bound probe a metadata-cheap job. */
@@ -290,8 +290,8 @@ object Dedup {
   // whole family. Overflow-safe by construction: h1, h2 < 2⁶⁰, so
   // h1 + 7·h2 ≤ 2⁶³ − 8 < Long.MaxValue — provably no wraparound, which
   // matters because the DuckDB oracle RAISES on BIGINT overflow rather
-  // than wrapping. Computed by graft.functions.MinhashSigExpr since
-  // round 9 (see withMinhashSig).
+  // than wrapping. Computed by graft.functions.MinhashSigExpr (see
+  // withMinhashSig).
 
   /** MinHash + LSH banding near-dup candidates, verified by exact
     * Jaccard. `numHashes` minhashes split into `bands` bands; a pair is
@@ -341,9 +341,9 @@ object Dedup {
     * ([[withMinhashSig]]) → '|'-joined band keys, exploded to one row
     * per (id, block, band_idx, band-key).
     *
-    * MAP-ONLY since round 9: the original formulation exploded shingle
-    * rows and rebuilt signatures with a (id, block) groupBy — a full
-    * shuffle of the shingle table BEFORE any banding. The one-pass
+    * MAP-ONLY: exploding shingle rows and rebuilding signatures with a
+    * (id, block) groupBy would shuffle the whole shingle table BEFORE
+    * any banding. The one-pass
     * [[graft.functions.MinhashSigExpr]] computes the identical
     * double-hashed family in-row (min over the in-row shingle multiset
     * = MIN over exploded rows; NativeTextSpec pins it), so signature
@@ -418,7 +418,7 @@ object Dedup {
     * relative: under a closed vocabulary every shingle's df grows
     * linearly with the corpus, so any relative cap (mean, quantile)
     * grows with it and silently re-admits the k² blowup. Measured on
-    * the shipped fixtures (round 14): max (lang, shingle) df is 5 at
+    * the shipped fixtures: max (lang, shingle) df is 5 at
     * sf0.01, 14 at sf0.1, 62 at sf1 — the exact tier is COMPLETE (the
     * guarded output equals plain exact jaccard) through sf1 — and min
     * df is 86 at sf10, where the uncapped plane is 2.94×10⁹ in-row
@@ -457,8 +457,8 @@ object Dedup {
   }
 
   /** GUARDED near-dup pairs — the [[blockedLinkage]] routing-guard
-    * precedent applied to the shingle pair plane (VERDICT r13 #1/#2:
-    * the uncapped plane measured 175× for 10× data on q52 and ENOSPC'd
+    * precedent applied to the shingle pair plane (the uncapped plane
+    * measured 175× for 10× data on q52 and ENOSPC'd
     * five other consumers at sf10 — 2.94×10⁹ in-row pairs once every
     * posting list under the fixtures' closed 31-word vocabulary turns
     * hot). Two tiers, each bounded, each cheap in the regime where the
@@ -491,7 +491,7 @@ object Dedup {
     * the under-budget candidate set is the whole dense pair graph
     * (26.7M pairs), and carrying two ~54-element arrays per candidate
     * through the verify join measured 22.3 s vs 6.8 s for the counting
-    * plane (Prof10); the counting tier keeps the narrow-row shuffle
+    * plane; the counting tier keeps the narrow-row shuffle
     * and the array join touches only band candidates. */
   def guardedJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
                           blockCol: String, n: Int, threshold: Double,
@@ -503,9 +503,9 @@ object Dedup {
         (col("ic").cast("double") / (col("da") + col("db") - col("ic")))
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    // RUNTIME TIER SKIP (round 14, the AQE adapt-on-materialized-stats
-    // idea): when NO posting list exceeds the budget — a metadata-cheap
-    // probe on the already-checkpointed list table — the exact tier is
+    // RUNTIME TIER SKIP (the AQE adapt-on-materialized-stats idea):
+    // when NO posting list exceeds the budget — a metadata-cheap probe
+    // on the already-checkpointed list table — the exact tier is
     // provably COMPLETE (any pair with jaccard ≥ t > 0 shares a
     // shingle, and every shingle is under budget, so the pair is in
     // the exact tier with its full-universe measures) and the LSH
@@ -827,8 +827,8 @@ object Dedup {
 
   /** Hamming-near pairs over a PRECOMPUTED 64-bit fingerprint column —
     * [[simhashPairsBanded]]'s LSH machinery generalized so other
-    * fingerprint planes (image dHash/aHash, audio chromaprints) reuse it
-    * (VERDICT r10 #3). The fingerprint is banded into `bands` equal
+    * fingerprint planes (image dHash/aHash, audio chromaprints) reuse it.
+    * The fingerprint is banded into `bands` equal
     * slices; a pair is a candidate iff it shares a band, then verified
     * by exact hamming distance. Pigeonhole: maxDist < bands differing
     * bits leave ≥1 band identical, so the banding is LOSSLESS — this
@@ -877,8 +877,8 @@ object Dedup {
   }
 
   /** Blocked record linkage with the OVERSIZED-BLOCK ROUTING GUARD —
-    * the operator the q141 docstring promised and round 11's sf1 run
-    * made concrete (fixed 125-block key → per-block quadratic → 87 s /
+    * the operator the q141 docstring promised, for the failure an sf1
+    * run made concrete (fixed 125-block key → per-block quadratic → 87 s /
     * ~90M scored pairs at sf1): per-block cardinality is measured in
     * ONE cheap aggregate, blocks at or under `maxBlock` pair
     * exhaustively (the exact tier — a per-block-bounded equi-join,
@@ -980,18 +980,15 @@ object Dedup {
     * the probe is a metadata-cheap count — the same adapt-on-runtime-
     * stats idea AQE applies to join strategies):
     *
-    *  - pair graph fits on the driver (≤ maxDriverEdges, default 4M
-    *    edges ≈ 64 MB as primitive arrays; the transient collected
-    *    tuple array costs ~40 bytes/edge ≈ 160 MB before the copy —
-    *    both well inside a driver heap, the spirit of the
-    *    broadcast-join threshold):
-    *    collect the edge list and run exact union-find with min-root
-    *    union and path compression — one collect job instead of ~4
-    *    Spark jobs per propagation round, and the result is a
-    *    LocalRelation that downstream joins (q52-style apply) can
-    *    broadcast. Near-dup pair sets are SMALL relative to the corpus
-    *    (they are the output of a similarity threshold, not the corpus
-    *    itself), so this is the common case even at large corpus scale.
+    *  - pair graph fits on the driver (≤ maxDriverEdges, see
+    *    [[DriverGraph.MaxDriverEdges]]): collect the edge list and run
+    *    exact union-find with min-root union and path compression —
+    *    one collect job instead of ~4 Spark jobs per propagation round,
+    *    and the result is a LocalRelation that downstream joins
+    *    (q52-style apply) can broadcast. Near-dup pair sets are SMALL
+    *    relative to the corpus (they are the output of a similarity
+    *    threshold, not the corpus itself), so this is the common case
+    *    even at large corpus scale.
     *  - otherwise: distributed iterative min-label propagation with
     *    pointer jumping ([[dedupGroupsDistributed]]) — unbounded scale,
     *    O(log diameter) rounds.
@@ -1000,105 +997,46 @@ object Dedup {
     * deterministic under any partitioning. */
   def dedupGroups(pairs: DataFrame, aCol: String, bCol: String,
                   maxIter: Int = 25,
-                  maxDriverEdges: Long = 4L * 1024 * 1024): DataFrame = {
-    // checkpoint BEFORE anything else: the count probe, the union's two
-    // branches, and every propagation round all read the same (possibly
-    // expensive — e.g. a full near-dup computation) pairs subtree, and
-    // plan-level reuse across union branches is not guaranteed, so
-    // materialize it once. Null-id edges are dropped up front: the two
-    // strategies would otherwise diverge (equi-joins silently skip null
-    // keys while the driver path would fail on them), and a null doc id
-    // is not a node.
-    val half = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint(true)
-    if (integralEdgeTypes(half) && half.count() <= maxDriverEdges)
-      dedupGroupsLocal(half)
+                  maxDriverEdges: Long = DriverGraph.MaxDriverEdges): DataFrame = {
+    // the shared edge frame: null-id edges dropped (a null doc id is
+    // not a node), materialized once for the probe, the union's two
+    // branches and every propagation round
+    val half = DriverGraph.edges(
+      pairs.select(col(aCol).as("src"), col(bCol).as("dst")), "src", "dst")
+    if (DriverGraph.fits(half, maxDriverEdges)) dedupGroupsLocal(half)
     else dedupGroupsDistributed(half, maxIter)
   }
 
-  /** The driver paths round-trip ids through Long and cast the result
-    * back to the id type, so they are taken only when BOTH columns are
-    * the SAME integral type — a mixed (int, long) edge list would wrap
-    * or null ids on the cast-back where the distributed path would
-    * widen correctly, breaking the identical-fixpoint contract. */
-  private def integralEdgeTypes(half: DataFrame): Boolean = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val (st, dt) = (half.schema("src").dataType, half.schema("dst").dataType)
-    st == dt && Seq(ByteType, ShortType, IntegerType, LongType).contains(st)
-  }
-
-  /** Driver-side exact union-find over a bounded, already-materialized
-    * edge list. Union-by-min keeps every root the component minimum, so
-    * find() after all unions yields the same representative the
-    * distributed fixpoint computes. */
-  /** Collect a bounded (src, dst) edge frame into primitive long
-    * arrays — as specialized Tuple2[Long, Long] (~40 bytes/edge
-    * transient — object header + two unboxed fields + array ref), then
-    * copied so the tuples go; an Array[Row] of GenericRows would cost
-    * ~100 bytes/edge. */
-  private def collectEdges(half: DataFrame): (Array[Long], Array[Long]) = {
-    val spark = half.sparkSession
-    val tupled = {
-      import spark.implicits._
-      half.select(col("src").cast("long"), col("dst").cast("long"))
-        .as[(Long, Long)].collect()
-    }
-    val srcs = new Array[Long](tupled.length)
-    val dsts = new Array[Long](tupled.length)
-    var k = 0
-    while (k < tupled.length) { srcs(k) = tupled(k)._1; dsts(k) = tupled(k)._2; k += 1 }
-    (srcs, dsts)
-  }
-
   /** Exact union-find with min-root union and path compression over a
-    * collected edge list; the returned `find` yields each node's
-    * component MINIMUM — the same fixpoint the distributed min-label
-    * propagation computes. Shared by [[dedupGroupsLocal]] and
-    * [[hopsToRepLocal]]. */
-  private def unionFindMin(srcs: Array[Long],
-                           dsts: Array[Long]): Long => Long = {
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
+    * collected graph: per node, the index of its component MINIMUM —
+    * the same fixpoint the distributed min-label propagation computes.
+    * Shared by [[dedupGroupsLocal]] and [[hopsToRepLocal]]. */
+  private def componentMin(g: DriverGraph.Graph): Array[Int] = {
+    val parent = Array.tabulate(g.n)(identity)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
+      while (parent(r) != r) r = parent(r)
       // path compression
       var c = x
-      while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
     var e = 0
-    while (e < srcs.length) {
-      val (ra, rb) = (find(srcs(e)), find(dsts(e)))
+    while (e < g.m) {
+      val (ra, rb) = (find(g.src(e)), find(g.dst(e)))
       if (ra != rb) {
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+        if (g.nodes(ra) < g.nodes(rb)) parent(rb) = ra else parent(ra) = rb
       }
       e += 1
     }
-    find
+    Array.tabulate(g.n)(find)
   }
 
   private def dedupGroupsLocal(half: DataFrame): DataFrame = {
-    val spark = half.sparkSession
-    val srcType = half.schema("src").dataType
-    val (srcs, dsts) = collectEdges(half)
-    val find = unionFindMin(srcs, dsts)
-    val nodes = (srcs.iterator ++ dsts.iterator).toArray.distinct
-    // materialize as a genuine LocalRelation (NOT sparkContext
-    // .parallelize, which plans as an RDD scan with unknown stats):
-    // LocalRelation carries exact row counts, so downstream joins of
-    // the group table (q52-style apply) plan as broadcasts statically
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(
-        nodes.map(n => org.apache.spark.sql.Row(n, find(n))): _*)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("group_rep",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    spark.createDataFrame(rows, schema)
-      .select(col("doc_id").cast(srcType).as("doc_id"),
-              col("group_rep").cast(srcType).as("group_rep"))
+    val g = DriverGraph.collect(half)
+    val rep = componentMin(g)
+    DriverGraph.relation(half, "doc_id BIGINT NOT NULL, group_rep BIGINT NOT NULL",
+        g.n, "doc_id", "group_rep") { j => Row(g.nodes(j), g.nodes(rep(j))) }
   }
 
   /** Distributed connected components: iterative min-label propagation
@@ -1174,21 +1112,18 @@ object Dedup {
     * every stage keys on node id — unbounded scale. */
   def hopsToRep(pairs: DataFrame, aCol: String, bCol: String,
                 maxIter: Int = 20,
-                maxDriverEdges: Long = 4L * 1024 * 1024): DataFrame = {
-    val half = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint(true)
-    // ADAPTIVE like [[dedupGroups]] (round 14): a near-dup pair graph
-    // under the driver-edge cap runs union-find AND the multi-source
-    // BFS on the driver — ONE collect instead of ~5 grid-sized Spark
-    // jobs per relaxation round (q184 paid ~15 sub-second jobs of pure
-    // scheduling floor on a 158-row pair graph at sf0.1: 2.25 s in the
-    // r14 pair run). Exact BFS distances are unique, so the driver
-    // fixpoint is the distributed fixpoint; the refuse-if-beyond-
-    // maxIter contract is kept bit-for-bit (a component whose diameter
-    // the distributed form would not converge on within maxIter throws
-    // the same error here).
-    if (integralEdgeTypes(half) && half.count() <= maxDriverEdges)
+                maxDriverEdges: Long = DriverGraph.MaxDriverEdges): DataFrame = {
+    val half = DriverGraph.edges(
+      pairs.select(col(aCol).as("src"), col(bCol).as("dst")), "src", "dst")
+    // Like [[dedupGroups]]: a pair graph under the driver-edge cap runs
+    // union-find AND the multi-source BFS on the driver — ONE collect
+    // instead of ~5 grid-sized Spark jobs per relaxation round, which
+    // at sf0.1 (a 158-row pair graph) are pure scheduling floor. Exact
+    // BFS distances are unique, so the driver fixpoint is the
+    // distributed fixpoint; the refuse-if-beyond-maxIter contract is
+    // kept (a component whose diameter the distributed form would not
+    // converge on within maxIter throws the same error here).
+    if (DriverGraph.fits(half, maxDriverEdges))
       return hopsToRepLocal(half, maxIter)
     val groups = dedupGroups(half, "src", "dst")
     val edges = half.union(half.select(col("dst"), col("src")))
@@ -1220,45 +1155,18 @@ object Dedup {
 
   /** Driver twin of [[hopsToRep]]'s relaxation for bounded pair graphs:
     * union-find for the representatives, then exact multi-source BFS
-    * seeded at them over an adjacency map of the collected edges. BFS
+    * seeded at them over the collected CSR. BFS
     * distances are unique, so this is the identical fixpoint; the
     * distributed form converges at round (max hops + 1), so the same
     * refuse threshold applies. Returns a LocalRelation (downstream
     * joins broadcast statically, the dedupGroupsLocal rationale). */
   private def hopsToRepLocal(half: DataFrame, maxIter: Int): DataFrame = {
-    val spark = half.sparkSession
-    val srcType = half.schema("src").dataType
-    val (srcs, dsts) = collectEdges(half)
-    val find = unionFindMin(srcs, dsts)
-    // dense-int CSR adjacency over primitive arrays (a boxed
-    // LongMap[ArrayBuffer] at the 4M-edge cap costs hundreds of MB of
-    // Long boxes on a driver heap the local-mode executors and the
-    // bench table cache already occupy; the CSR form is ~16 bytes/edge
-    // flat): remap node ids to [0, n), count-prefix-sum-fill.
-    val nodes = (srcs.iterator ++ dsts.iterator).toArray.distinct
-    val n = nodes.length
-    val idx = scala.collection.mutable.LongMap.empty[Int]
-    var i = 0
-    while (i < n) { idx(nodes(i)) = i; i += 1 }
-    val m = srcs.length
-    val deg = new Array[Int](n)
-    var e = 0
-    while (e < m) { deg(idx(srcs(e))) += 1; deg(idx(dsts(e))) += 1; e += 1 }
-    val off = new Array[Int](n + 1)
-    i = 0
-    while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val fill = java.util.Arrays.copyOf(off, n)
-    val nbr = new Array[Int](2 * m)
-    e = 0
-    while (e < m) {
-      val a = idx(srcs(e)); val b = idx(dsts(e))
-      nbr(fill(a)) = b; fill(a) += 1
-      nbr(fill(b)) = a; fill(b) += 1
-      e += 1
-    }
-    val dist = new Array[Long](n)
+    val g = DriverGraph.collect(half)
+    val rep = componentMin(g)
+    val (off, nbr) = (g.off, g.nbr)
+    val dist = new Array[Long](g.n)
     java.util.Arrays.fill(dist, -1L)
-    var frontier = nodes.iterator.map(find).toArray.distinct.map(idx)
+    var frontier = (0 until g.n).filter(j => rep(j) == j).toArray
     frontier.foreach(r => dist(r) = 0L)
     var d = 0L
     while (frontier.nonEmpty) {
@@ -1278,21 +1186,8 @@ object Dedup {
     if (maxHops + 1L > maxIter) throw new IllegalStateException(
       s"hopsToRep: BFS relaxation did not converge in $maxIter rounds " +
         "- raise maxIter (distances at this point would be silently wrong)")
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(
-        nodes.zipWithIndex.map { case (nd, j) =>
-          org.apache.spark.sql.Row(nd, find(nd), dist(j))
-        }: _*)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("group_rep",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("hops",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    spark.createDataFrame(rows, schema)
-      .select(col("doc_id").cast(srcType).as("doc_id"),
-              col("group_rep").cast(srcType).as("group_rep"),
-              col("hops"))
+    DriverGraph.relation(half,
+        "doc_id BIGINT NOT NULL, group_rep BIGINT NOT NULL, hops BIGINT NOT NULL",
+        g.n, "doc_id", "group_rep") { j => Row(g.nodes(j), g.nodes(rep(j)), dist(j)) }
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Synchronous label propagation for community detection (Raghavan
@@ -41,25 +41,18 @@ object LabelProp {
   /** Runs `iters` synchronous supersteps over the undirected graph
     * given as one-direction edges (src, dst); returns (v, lbl).
     *
-    * ADAPTIVE (round 14, the dedupGroups/hopsToRep/PageRank pattern): a
-    * graph under `maxDriverEdges` runs the identical integer vote loop
-    * on the driver over a CSR adjacency — one collect instead of
-    * (join + two aggregates + checkpoint) × iters of grid-sized BSP
-    * stages, which at sf0.1 were pure scheduling floor (q191 1.97 s in
-    * the r14 pair). All arithmetic is integer, so driver ≡ distributed
-    * is exact by construction (LabelPropSpec pins both paths against
-    * the naive reference); above the cap the distributed supersteps
-    * run unchanged. */
+    * A graph under `maxDriverEdges` runs the identical integer vote loop
+    * on the driver over a CSR adjacency ([[DriverGraph]]) — one collect
+    * instead of (join + two aggregates + checkpoint) × iters of
+    * grid-sized BSP stages, which at sf0.1 are pure scheduling floor.
+    * All arithmetic is integer, so driver ≡ distributed is exact by
+    * construction (LabelPropSpec pins both paths against the naive
+    * reference); above the cap the distributed supersteps run. */
   def run(edges: DataFrame, iters: Int,
-          maxDriverEdges: Long = 4L * 1024 * 1024): DataFrame = {
+          maxDriverEdges: Long = DriverGraph.MaxDriverEdges): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
-    // checkpoint FIRST (the dedupGroups discipline): the strategy
-    // probe, the driver collect, and the distributed doubled-edge
-    // union all read the same — possibly expensive, e.g. a corpus
-    // distinct — edge subtree; materialize it once
-    val e0 = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    if (integralVertexIds(e0) && e0.count() <= maxDriverEdges)
-      return runDriver(e0, iters)
+    val e0 = DriverGraph.edges(edges, "src", "dst")
+    if (DriverGraph.fits(e0, maxDriverEdges)) return runDriver(e0, iters)
     val e = e0.select(col("src").as("a"), col("dst").as("b"))
       .union(e0.select(col("dst").as("a"), col("src").as("b")))
       .localCheckpoint(true)
@@ -80,59 +73,17 @@ object LabelProp {
     labels
   }
 
-  private def integralVertexIds(edges: DataFrame): Boolean = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val (st, dt) = (edges.schema("src").dataType, edges.schema("dst").dataType)
-    st == dt && Seq(ByteType, ShortType, IntegerType, LongType).contains(st)
-  }
-
   /** Driver twin of the superstep loop for bounded graphs: the same
     * vote — most frequent label among neighbours AND itself, ties to
-    * the smallest label — over a primitive-array CSR. Returns a
-    * LocalRelation of (v, lbl) cast back to the source id type. */
+    * the smallest label — over the collected CSR. */
   private def runDriver(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val srcType = edges.schema("src").dataType
-    val tupled = {
-      import spark.implicits._
-      edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .as[(Long, Long)].collect()
-    }
-    val m = tupled.length
-    // first-seen index assignment in the flattened (src, dst) order —
-    // the same node order Array.distinct produced, without boxing 2m
-    // longs through a generic HashSet (round 17: the 1M-edge q191
-    // graph spent a measurable slice of its driver gap there)
-    val idx = scala.collection.mutable.LongMap.empty[Int]
-    val nodesBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def id(x: Long): Int =
-      idx.getOrElseUpdate(x, { nodesBuf += x; nodesBuf.length - 1 })
-    val ua = new Array[Int](m)
-    val va = new Array[Int](m)
-    var e = 0
-    while (e < m) { ua(e) = id(tupled(e)._1); va(e) = id(tupled(e)._2); e += 1 }
-    val nodes = nodesBuf.toArray
-    val n = nodes.length
-    val degc = new Array[Int](n)
-    e = 0
-    while (e < m) { degc(ua(e)) += 1; degc(va(e)) += 1; e += 1 }
-    val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + degc(i); i += 1 }
-    val fill = java.util.Arrays.copyOf(off, n)
-    val nbr = new Array[Int](2 * m)
-    e = 0
-    while (e < m) {
-      val a = ua(e); val b = va(e)
-      nbr(fill(a)) = b; fill(a) += 1
-      nbr(fill(b)) = a; fill(b) += 1
-      e += 1
-    }
+    val g = DriverGraph.collect(edges)
+    val (n, nodes, off, nbr) = (g.n, g.nodes, g.off, g.nbr)
     // labels live in INDEX space (every label is a node id, so it has
-    // an index); votes tally in a flat array reset via a touched list
-    // instead of a per-vertex LongMap (round 17 — no boxing, no
-    // rehashing in the O(m·iters) hot loop). The argmax tie-break
-    // compares the LABEL VALUES nodes(l), exactly min(struct(-c, lbl)).
+    // an index); votes tally in a flat array reset via a touched list,
+    // so the O(m·iters) hot loop neither boxes nor rehashes. The argmax
+    // tie-break compares the LABEL VALUES nodes(l), exactly
+    // min(struct(-c, lbl)).
     var lbl = Array.tabulate(n)(identity)
     val cnt = new Array[Long](n)
     val touched = new Array[Int](n)
@@ -166,17 +117,8 @@ object LabelProp {
       lbl = next
       it += 1
     }
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(
-        nodes.zipWithIndex.map { case (nd, j) =>
-          org.apache.spark.sql.Row(nd, nodes(lbl(j)))
-        }: _*)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("lbl",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    spark.createDataFrame(rows, schema)
-      .select(col("v").cast(srcType).as("v"), col("lbl").cast(srcType).as("lbl"))
+    val last = lbl // a val: capturing the var would box it for the whole loop
+    DriverGraph.relation(edges, "v BIGINT NOT NULL, lbl BIGINT NOT NULL",
+        n, "v", "lbl") { j => Row(nodes(j), nodes(last(j))) }
   }
 }

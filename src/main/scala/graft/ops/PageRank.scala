@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -53,36 +53,26 @@ object PageRank {
     * leaves); production runs always checkpoint per superstep. */
   def run(edges: DataFrame, iters: Int, checkpoint: Boolean = true,
           broadcastRanks: Boolean = true,
-          maxDriverEdges: Long = 4L * 1024 * 1024): DataFrame = {
+          maxDriverEdges: Long = DriverGraph.MaxDriverEdges): DataFrame = {
     def cp(df: DataFrame): DataFrame = if (checkpoint) df.localCheckpoint(true) else df
     def hint(df: DataFrame): DataFrame = if (broadcastRanks) broadcast(df) else df
-    // ADAPTIVE (round 14, the dedupGroups/hopsToRep/topComponent
-    // pattern): a graph under the driver-edge cap runs the identical
-    // arithmetic as a driver loop over primitive arrays — one collect
-    // instead of (2 jobs + a checkpoint) × iters of grid-sized BSP
-    // stages, which at sf0.1 were pure ~0.5-0.7 s/job scheduling floor
-    // (q128 1.86 s in the r14 pair). Exactness is preserved step for
-    // step: contributions take the same double floor-grid, per-vertex
-    // sums accumulate the same DECIMAL(38,12) values as scaled longs
-    // (each term is the shortest-decimal rendering of its double,
-    // HALF_UP at scale 12 — Spark's own double→Decimal cast), and the
-    // damped update replays the identical IEEE expression order, so
-    // driver ≡ distributed to the bit (SetGraphSpec pins it). Opting
-    // out: plan-shape tests pass checkpoint=false; the
-    // broadcastRanks=false shuffle-join twin stays fully distributed
-    // (billion-vertex graphs exceed the cap anyway).
-    // checkpoint FIRST when the adaptive probe will run (the
-    // dedupGroups discipline): the probe, the driver collect, and the
-    // distributed doubled-edge union otherwise each re-derive the
-    // input subtree (a corpus distinct for q128). Plan-shape callers
-    // (checkpoint = false) skip the probe and keep a fully lazy plan.
-    val e0 =
-      if (checkpoint && broadcastRanks)
-        edges.select(col("src"), col("dst")).localCheckpoint(true)
-      else edges
-    if (checkpoint && broadcastRanks && integralVertexIds(e0) &&
-        e0.count() <= maxDriverEdges)
-      return runDriver(e0, iters)
+    // A graph under the driver-edge cap runs the identical arithmetic as
+    // a driver loop over primitive arrays ([[DriverGraph]]) — one
+    // collect instead of (2 jobs + a checkpoint) × iters of grid-sized
+    // BSP stages, which at sf0.1 are pure scheduling floor. Exactness
+    // holds step for step: contributions take the same double
+    // floor-grid, per-vertex sums accumulate the same DECIMAL(38,12)
+    // values as scaled longs (each term is the shortest-decimal
+    // rendering of its double, HALF_UP at scale 12 — Spark's own
+    // double→Decimal cast), and the damped update replays the identical
+    // IEEE expression order, so driver ≡ distributed to the bit
+    // (SetGraphSpec pins it). Plan-shape tests (checkpoint = false) and
+    // the broadcastRanks = false shuffle-join twin skip the probe and
+    // stay fully distributed (billion-vertex graphs exceed the cap
+    // anyway); only the probing path materializes the edges.
+    val adaptive = checkpoint && broadcastRanks
+    val e0 = DriverGraph.edges(edges, "src", "dst", checkpoint = adaptive)
+    if (adaptive && DriverGraph.fits(e0, maxDriverEdges)) return runDriver(e0, iters)
     val ed = cp(e0.select(col("src"), col("dst"))
       .union(e0.select(col("dst").as("src"), col("src").as("dst"))))
     val deg = ed.groupBy(col("src")).agg(count(lit(1)).cast("long").as("deg"))
@@ -107,55 +97,11 @@ object PageRank {
     ranks.select(col("v"), col("deg"), col("pr"))
   }
 
-  /** Both vertex columns the same integral type — the driver loop
-    * round-trips ids through Long (the dedupGroups contract). */
-  private def integralVertexIds(edges: DataFrame): Boolean = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val (st, dt) = (edges.schema("src").dataType, edges.schema("dst").dataType)
-    st == dt && Seq(ByteType, ShortType, IntegerType, LongType).contains(st)
-  }
-
-  /** Driver twin of the BSP loop for bounded graphs: CSR adjacency over
-    * primitive arrays, per-step arithmetic replicated bit-for-bit (see
-    * the run() scaladoc). Returns a LocalRelation. */
+  /** Driver twin of the BSP loop for bounded graphs: the collected
+    * CSR, per-step arithmetic replicated bit-for-bit (see run()). */
   private def runDriver(edges: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val srcType = edges.schema("src").dataType
-    val tupled = {
-      import spark.implicits._
-      edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .as[(Long, Long)].collect()
-    }
-    val m = tupled.length
-    // first-seen index assignment in the flattened (src, dst) order —
-    // same node order as the old Array.distinct, without boxing 2m
-    // longs through a generic HashSet (round 17)
-    val idx = scala.collection.mutable.LongMap.empty[Int]
-    val nodesBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def id(x: Long): Int =
-      idx.getOrElseUpdate(x, { nodesBuf += x; nodesBuf.length - 1 })
-    val ua = new Array[Int](m)
-    val va = new Array[Int](m)
-    var e = 0
-    while (e < m) { ua(e) = id(tupled(e)._1); va(e) = id(tupled(e)._2); e += 1 }
-    val nodes = nodesBuf.toArray
-    val n = nodes.length
-    // doubled-edge CSR (each input edge contributes both directions)
-    val deg = new Array[Long](n)
-    e = 0
-    while (e < m) { deg(ua(e)) += 1; deg(va(e)) += 1; e += 1 }
-    val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + deg(i).toInt; i += 1 }
-    val fill = java.util.Arrays.copyOf(off, n)
-    val nbr = new Array[Int](2 * m)
-    e = 0
-    while (e < m) {
-      val a = ua(e); val b = va(e)
-      nbr(fill(a)) = b; fill(a) += 1
-      nbr(fill(b)) = a; fill(b) += 1
-      e += 1
-    }
+    val g = DriverGraph.collect(edges)
+    val (n, deg, off, nbr) = (g.n, g.deg, g.off, g.nbr)
     val nv = n.toLong
     var pr = Array.fill(n)(1.0 / nv.toDouble)
     var it = 0
@@ -185,19 +131,10 @@ object PageRank {
       pr = next
       it += 1
     }
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(
-        nodes.zipWithIndex.map { case (nd, j) =>
-          org.apache.spark.sql.Row(nd, deg(j), pr(j))
-        }: _*)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("deg",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("pr",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-    spark.createDataFrame(rows, schema)
-      .select(col("v").cast(srcType).as("v"), col("deg"), col("pr"))
+    val last = pr // a val: capturing the var would box it for the whole loop
+    DriverGraph.relation(edges,
+        "v BIGINT NOT NULL, deg BIGINT NOT NULL, pr DOUBLE NOT NULL", n, "v") {
+      j => Row(g.nodes(j), deg(j).toLong, last(j))
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Degree-ordered triangle census — the graph-clustering signal
@@ -31,26 +31,6 @@ import org.apache.spark.sql.functions._
   * — the honest billion-node plan, every stage keyed on vertex ids.
   */
 object Triangles {
-
-  /** Driver-twin cap (round 17, the dedupGroups/LabelProp/PageRank
-    * pattern): an edge list at or under this bound — after the SAME
-    * eager materialization both paths share — collects to the driver
-    * and runs the identical degree-oriented edge-iterator census over
-    * a primitive CSR, replacing the 20-job BSP chain (deg aggregate +
-    * probe, orientation join, adjacency collect_set + probe, the
-    * edge⨝adjacency join, the census aggregates) whose sf0.1 cost was
-    * pure serial job floor (Prof15: q142 22 jobs / 5.3 s job-sum, q144
-    * 20 jobs with the edge⨝adjacency join as one fat straggler job).
-    * All driver arithmetic is INTEGER (degrees, intersection counts);
-    * the float readouts (global/local clustering) are computed by the
-    * same Catalyst expressions as the distributed path via the shared
-    * `censusSelect`/`perNodeSelect` projections, so driver ≡
-    * distributed is bit-exact by construction (TrianglesSpec pins both
-    * paths against each other). Above the cap the distributed plan is
-    * byte-identical to round 16 (the sf1/sf10 scale record measures
-    * that path: 12M edges at sf1 > cap). 4M edges ≈ 64 MB collected —
-    * the dedupGroups/LabelProp bound. */
-  private val MaxDriverEdges = 4L * 1024 * 1024
 
   /** Shared distributed core over the already-materialized edge frame
     * `e`: the degree table and the edge⨝adjacency frame carrying both
@@ -101,28 +81,14 @@ object Triangles {
         round(lit(2.0) * coalesce(col("t"), lit(0L)) /
               (col("deg") * (col("deg") - 1)), 6)).as("local_cc"))
 
-  /** Materialize the edge frame once (both paths and the cap probe
-    * read it) and decide the strategy. The driver twin round-trips ids
-    * through Long, so it is taken only for same-type integral id
-    * columns (the dedupGroups/LabelProp contract). */
-  private def materialize(edges: DataFrame,
-                          maxDriverEdges: Long): (DataFrame, Boolean) = {
-    val e = edges.select(col("u"), col("v")).localCheckpoint(true)
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val (ut, vt) = (e.schema("u").dataType, e.schema("v").dataType)
-    val integral = ut == vt &&
-      Seq(ByteType, ShortType, IntegerType, LongType).contains(ut)
-    (e, integral && e.count() <= maxDriverEdges)
-  }
-
   /** Census of the undirected simple graph `edges` (cols u, v; each
     * edge once, u ≠ v). Returns ONE row: (n_nodes, n_edges,
     * n_triangles, global_clustering = 3·triangles/wedges, 6 dp). */
   def census(edges: DataFrame,
              maxBroadcastRows: Long = 2L * 1000 * 1000,
-             maxDriverEdges: Long = MaxDriverEdges): DataFrame = {
-    val (e, small) = materialize(edges, maxDriverEdges)
-    if (small) return censusLocal(e)
+             maxDriverEdges: Long = DriverGraph.MaxDriverEdges): DataFrame = {
+    val e = DriverGraph.edges(edges, "u", "v")
+    if (DriverGraph.fits(e, maxDriverEdges)) return censusLocal(e)
     val (deg, edgeTriangles) = core(e, maxBroadcastRows)
     val tri = edgeTriangles
       .select(size(array_intersect(col("na"), col("nb"))).as("k"))
@@ -144,9 +110,9 @@ object Triangles {
     * the global census is its weighted average. */
   def perNode(edges: DataFrame,
               maxBroadcastRows: Long = 2L * 1000 * 1000,
-              maxDriverEdges: Long = MaxDriverEdges): DataFrame = {
-    val (e, small) = materialize(edges, maxDriverEdges)
-    if (small) return perNodeLocal(e)
+              maxDriverEdges: Long = DriverGraph.MaxDriverEdges): DataFrame = {
+    val e = DriverGraph.edges(edges, "u", "v")
+    if (DriverGraph.fits(e, maxDriverEdges)) return perNodeLocal(e)
     val (deg, edgeTriangles) = core(e, maxBroadcastRows)
     val corners = edgeTriangles
       .select(col("src"), col("dst"),
@@ -157,48 +123,35 @@ object Triangles {
   }
 
   // ------------------------------------------------------------------
-  // Driver twin: the identical algorithm over a primitive CSR.
+  // Driver twin: the identical algorithm over a primitive CSR, taken at
+  // or under the [[DriverGraph]] cap in place of the ~20-job
+  // distributed chain, which at sf0.1 is pure serial job floor. All
+  // driver arithmetic is INTEGER (degrees, intersection counts); the
+  // float readouts go through the shared censusSelect/perNodeSelect
+  // projections, so driver ≡ distributed is bit-exact (TrianglesSpec
+  // pins both paths against each other).
   // ------------------------------------------------------------------
 
-  /** Collected graph: node ids in first-seen order, per-node degree
-    * (edge-OCCURRENCE counts, like the distributed union aggregate),
-    * edge endpoint indices, and per-node triangle counts from the
-    * degree-oriented edge-iterator intersection — the same count the
-    * distributed na ∩ nb computes, because the oriented adjacency is
-    * DEDUPLICATED per source (collect_set semantics) while edges
-    * iterate per occurrence (the oriented frame joins every row). */
-  private final case class LocalGraph(nodes: Array[Long], deg: Array[Long],
-                                      m: Long, tri: Array[Long],
+  /** Collected graph ([[DriverGraph.Graph]]: nodes in first-seen order,
+    * edge-OCCURRENCE degrees like the distributed union aggregate) plus
+    * per-node triangle counts from the degree-oriented edge-iterator
+    * intersection — the same count the distributed na ∩ nb computes,
+    * because the oriented adjacency is DEDUPLICATED per source
+    * (collect_set semantics) while edges iterate per occurrence (the
+    * oriented frame joins every row). */
+  private final case class LocalGraph(g: DriverGraph.Graph, tri: Array[Long],
                                       totalTriangles: Long)
 
   private def buildLocal(e: DataFrame): LocalGraph = {
-    val spark = e.sparkSession
-    val tupled = {
-      import spark.implicits._
-      e.select(col("u").cast("long"), col("v").cast("long"))
-        .as[(Long, Long)].collect()
-    }
-    val m = tupled.length
-    val idx = scala.collection.mutable.LongMap.empty[Int]
-    val nodesBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def id(x: Long): Int =
-      idx.getOrElseUpdate(x, { nodesBuf += x; nodesBuf.length - 1 })
-    val ua = new Array[Int](m)
-    val va = new Array[Int](m)
-    var i = 0
-    while (i < m) { ua(i) = id(tupled(i)._1); va(i) = id(tupled(i)._2); i += 1 }
-    val nodes = nodesBuf.toArray
-    val n = nodes.length
-    val deg = new Array[Long](n)
-    i = 0
-    while (i < m) { deg(ua(i)) += 1; deg(va(i)) += 1; i += 1 }
+    val g = DriverGraph.collect(e)
+    val (n, m, nodes, deg) = (g.n, g.m, g.nodes, g.deg)
     // degree orientation: src = (deg, id)-smaller endpoint — identical
     // predicate to the distributed uFirst column
     val srcA = new Array[Int](m)
     val dstA = new Array[Int](m)
-    i = 0
+    var i = 0
     while (i < m) {
-      val a = ua(i); val b = va(i)
+      val a = g.src(i); val b = g.dst(i)
       val aFirst = deg(a) < deg(b) ||
         (deg(a) == deg(b) && nodes(a) < nodes(b))
       if (aFirst) { srcA(i) = a; dstA(i) = b } else { srcA(i) = b; dstA(i) = a }
@@ -220,8 +173,8 @@ object Triangles {
     // bounded pool (disjoint node ranges for the sorts; per-thread
     // accumulator arrays merged at the end for the counts, so the
     // result is the same integer sums in any schedule). Single-threaded
-    // this loop measured ~2 s on the 1.2M-edge sf0.1 graph — exactly
-    // the serial tail the twin exists to delete (Prof15, round 17).
+    // this loop measured ~2 s on the 1.2M-edge sf0.1 graph — the
+    // serial tail the twin exists to delete.
     val nThreads = math.max(1,
       math.min(16, Runtime.getRuntime.availableProcessors - 2))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
@@ -286,7 +239,7 @@ object Triangles {
         while (v < n) { tri(v) += local(v); v += 1 }
         t += 1
       }
-      LocalGraph(nodes, deg, m, tri, totLocal.sum)
+      LocalGraph(g, tri, totLocal.sum)
     } finally pool.shutdown()
   }
 
@@ -295,40 +248,22 @@ object Triangles {
     * distributed path. `wedges` is null iff the graph is empty —
     * matching the distributed sum-over-zero-rows. */
   private def censusLocal(e: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val g = buildLocal(e)
-    var wedges = 0L
-    var i = 0
-    while (i < g.nodes.length) {
-      wedges += g.deg(i) * (g.deg(i) - 1) / 2; i += 1
-    }
-    val row = Row(g.nodes.length.toLong, g.m, g.totalTriangles,
-      if (g.nodes.isEmpty) null else java.lang.Long.valueOf(wedges))
-    val schema = StructType(Seq(
-      StructField("n_nodes", LongType, nullable = false),
-      StructField("n_edges", LongType, nullable = false),
-      StructField("n_triangles", LongType, nullable = false),
-      StructField("wedges", LongType, nullable = true)))
-    censusSelect(e.sparkSession.createDataFrame(
-      java.util.Collections.singletonList(row), schema))
+    val LocalGraph(g, _, totalTriangles) = buildLocal(e)
+    val wedges = g.deg.iterator.map(d => d.toLong * (d - 1) / 2).sum
+    censusSelect(DriverGraph.relation(e, "n_nodes BIGINT NOT NULL, " +
+        "n_edges BIGINT NOT NULL, n_triangles BIGINT NOT NULL, wedges BIGINT", 1) {
+      _ => Row(g.n.toLong, g.m.toLong, totalTriangles,
+               if (g.n == 0) null else java.lang.Long.valueOf(wedges))
+    })
   }
 
   /** Per-node LocalRelation (x, deg, t) cast back to the source id
     * type, through the shared projection. */
   private def perNodeLocal(e: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val g = buildLocal(e)
-    val srcType = e.schema("u").dataType
-    val rows: java.util.List[Row] =
-      java.util.Arrays.asList(
-        g.nodes.indices.map(i => Row(g.nodes(i), g.deg(i), g.tri(i))): _*)
-    val schema = StructType(Seq(
-      StructField("x", LongType, nullable = false),
-      StructField("deg", LongType, nullable = false),
-      StructField("t", LongType, nullable = true)))
-    perNodeSelect(e.sparkSession.createDataFrame(rows, schema)
-      .select(col("x").cast(srcType).as("x"), col("deg"), col("t")))
+    val LocalGraph(g, tri, _) = buildLocal(e)
+    perNodeSelect(DriverGraph.relation(e,
+        "x BIGINT NOT NULL, deg BIGINT NOT NULL, t BIGINT", g.n, "x") {
+      j => Row(g.nodes(j), g.deg(j).toLong, tri(j))
+    })
   }
 }

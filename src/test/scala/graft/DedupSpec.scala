@@ -590,5 +590,17 @@ class DedupSpec extends SparkSpec {
           maxDriverEdges = 0L)
       }
     }
+
+    it("drops null-id edges on both paths: equal to the graph without them") {
+      val withNull = Seq((Some(0L), Some(1L)), (Some(1L), Some(2L)),
+                         (Some(2L), None), (None, Some(7L))).toDF("id_a", "id_b")
+      val expected = Set((0L, 0L, 0L), (1L, 0L, 1L), (2L, 0L, 2L))
+      val local = graft.ext.Dedup.hopsToRep(withNull, "id_a", "id_b")
+        .as[(Long, Long, Long)].collect().toSet
+      val dist = graft.ext.Dedup.hopsToRep(withNull, "id_a", "id_b",
+          maxDriverEdges = 0L)
+        .as[(Long, Long, Long)].collect().toSet
+      assert(local == expected && dist == expected)
+    }
   }
 }

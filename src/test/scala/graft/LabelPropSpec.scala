@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.LabelProp
+import org.apache.spark.sql.functions.col
 
 class LabelPropSpec extends SparkSpec {
   import spark.implicits._
@@ -69,6 +70,25 @@ class LabelPropSpec extends SparkSpec {
         Seq((3L, 10L), (13L, 20L))
       for (it <- 1 to 4)
         assert(run(edges, it) == naive(edges, it), s"iters=$it")
+    }
+    it("drops null-id edges on both paths: equal to the graph without them") {
+      val clean = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
+      val withNull = (clean.map { case (a, b) => (Option(a), Option(b)) } ++
+        Seq((Some(3L), None), (None, Some(5L)))).toDF("src", "dst")
+      def lp(cap: Long) = LabelProp.run(withNull, 2, maxDriverEdges = cap)
+        .as[(Long, Long)].collect().toMap
+      val expected = run(clean, 2)
+      assert(lp(4L * 1024 * 1024) == expected) // driver twin
+      assert(lp(0L) == expected)               // distributed supersteps
+    }
+    it("(int, long) id columns take the distributed path with the all-long values") {
+      // a driver twin would cast labels back to int and wrap `big`
+      val big = 5000000000L
+      val edges = Seq((1L, 2L), (2L, big), (1L, big), (3L, big), (3L, 4L))
+      val mixed = edges.toDF("src", "dst")
+        .select(col("src").cast("int").as("src"), col("dst"))
+      val got = LabelProp.run(mixed, 2).as[(Long, Long)].collect().toMap
+      assert(got == run(edges, 2))
     }
   }
 }

@@ -150,5 +150,28 @@ class SetGraphSpec extends SparkSpec {
         .as[(Long, Long, Double)].collect().toSet
       assert(drv == dst)
     }
+
+    it("drops null-id edges on both paths: equal to the graph without them") {
+      val clean = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
+      val withNull = (clean.map { case (a, b) => (Option(a), Option(b)) } ++
+        Seq((Some(3L), None), (None, Some(5L)))).toDF("src", "dst")
+      def pr(df: org.apache.spark.sql.DataFrame, cap: Long) =
+        PageRank.run(df, 3, maxDriverEdges = cap)
+          .as[(Long, Long, Double)].collect().toSet
+      val expected = pr(clean.toDF("src", "dst"), 0L)
+      assert(pr(withNull, 4L * 1024 * 1024) == expected) // driver twin
+      assert(pr(withNull, 0L) == expected)               // distributed BSP
+    }
+
+    it("(int, long) id columns take the distributed path with the all-long values") {
+      // a driver twin would cast v back to int and wrap `big`
+      val big = 5000000000L
+      val edges = Seq((1L, 2L), (2L, big), (1L, big), (3L, big), (3L, 4L))
+      val mixed = edges.toDF("src", "dst")
+        .select($"src".cast("int").as("src"), $"dst")
+      val got = PageRank.run(mixed, 3).as[(Long, Long, Double)].collect().toSet
+      assert(got == PageRank.run(edges.toDF("src", "dst"), 3)
+        .as[(Long, Long, Double)].collect().toSet)
+    }
   }
 }

@@ -127,5 +127,31 @@ class TrianglesSpec extends SparkSpec {
       assert(out.as[(Int, Long, Long, Option[Double])].collect()
         .forall(_._3 == 1L))
     }
+    it("drops null-id edges on both paths: equal to the graph without them") {
+      val clean = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
+      val withNull = (clean.map { case (a, b) => (Option(a), Option(b)) } ++
+        Seq((Some(3L), None), (None, Some(5L)))).toDF("u", "v")
+      def cen(cap: Long) = Triangles.census(withNull, maxDriverEdges = cap)
+        .as[(Long, Long, Long, Double)].collect().head
+      def per(df: org.apache.spark.sql.DataFrame, cap: Long) =
+        Triangles.perNode(df, maxDriverEdges = cap)
+          .as[(Long, Long, Long, Option[Double])].collect().toSet
+      for (cap <- Seq(4L * 1024 * 1024, 0L)) { // driver twin, distributed
+        assert(cen(cap) == census(clean), s"census cap=$cap")
+        assert(per(withNull, cap) == per(clean.toDF("u", "v"), 0L), s"perNode cap=$cap")
+      }
+    }
+    it("(int, long) id columns take the distributed path with the all-long values") {
+      // a driver twin would cast v back to int and wrap `big`
+      val big = 5000000000L
+      val edges = Seq((1L, 2L), (2L, big), (1L, big), (3L, big), (3L, 4L))
+      val mixed = edges.toDF("u", "v")
+        .select($"u".cast("int").as("u"), $"v")
+      def per(df: org.apache.spark.sql.DataFrame) = Triangles.perNode(df)
+        .as[(Long, Long, Long, Option[Double])].collect().toSet
+      assert(per(mixed) == per(edges.toDF("u", "v")))
+      assert(Triangles.census(mixed).as[(Long, Long, Long, Double)].collect().head ==
+        census(edges))
+    }
   }
 }
