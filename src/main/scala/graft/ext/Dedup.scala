@@ -969,6 +969,9 @@ object Dedup {
     simhash(docs, textCol, idCol)
       .join(docs.select(col(idCol).as("id"), col(blockCol).as("block")), "id")
 
+  /** Default round bound of the distributed min-label propagation. */
+  val GroupsMaxIter: Int = 25
+
   /** Near-dup pairs → keep/drop groups: connected components. Every doc
     * appearing in `pairs` gets (doc_id, group_rep) where group_rep =
     * the minimum doc id reachable through the pair graph; a
@@ -996,7 +999,7 @@ object Dedup {
     * Both strategies compute the identical fixpoint (min reachable id),
     * deterministic under any partitioning. */
   def dedupGroups(pairs: DataFrame, aCol: String, bCol: String,
-                  maxIter: Int = 25,
+                  maxIter: Int = GroupsMaxIter,
                   maxDriverEdges: Long = DriverGraph.MaxDriverEdges): DataFrame = {
     // the shared edge frame: null-id edges dropped (a null doc id is
     // not a node), materialized once for the probe, the union's two
@@ -1125,7 +1128,9 @@ object Dedup {
     // converge on within maxIter throws the same error here).
     if (DriverGraph.fits(half, maxDriverEdges))
       return hopsToRepLocal(half, maxIter)
-    val groups = dedupGroups(half, "src", "dst")
+    // `half` is already filtered, materialized and over the cap: its
+    // components come from the distributed path directly
+    val groups = dedupGroupsDistributed(half, GroupsMaxIter)
     val edges = half.union(half.select(col("dst"), col("src")))
       .distinct().localCheckpoint(true)
     var dist = groups.select(col("group_rep").as("id")).distinct()

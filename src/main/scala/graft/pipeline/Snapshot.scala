@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.ops.Relational
+import graft.functions.TaskSummary
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -14,10 +14,14 @@ import org.apache.spark.sql.types.DecimalType
   *    single Catalyst plan and scale horizontally;
   *  - the task, deposit, fee and bin rows travel as ONE tagged union
   *    through ONE exchange on (user_address, pool_address) into ONE
-  *    aggregate that computes every per-task summary together (the
-  *    latest-deposit tie-keep, the decimal sums, both string folds);
-  *    per-row work (coercion, bin math, each fold entry's text) runs
-  *    map-side, before the exchange;
+  *    aggregate, [[graft.functions.TaskSummary]], a single fold that
+  *    computes every per-task summary together (the latest-deposit
+  *    tie-keep, the decimal sums, the bin-amount sums, both string
+  *    folds); per-row work (coercion, bin math) runs map-side, before
+  *    the exchange, and each fold is sorted and rendered once, in the
+  *    reduce task;
+  *  - the wall-clock columns ride on the task rows as data, so the
+  *    generated code is the same on every tick;
   *  - pool stats are dimension-sized → broadcast joins;
   *  - report column names (with % [ ] ( ) characters, main.py:293-340)
   *    are applied ONLY in the final select; everything internal uses
@@ -43,7 +47,8 @@ object Snapshot {
   private def safeDiv(n: Column, d: Column): Column = when(d =!= 0, n / d)
 
   /** Builds the 46-column snapshot, one row per task. Wall-clock columns
-    * are injected so tests can pin them (SURVEY.md §7.4 non-determinism). */
+    * are injected so tests can pin them (SURVEY.md §7.4 non-determinism);
+    * they must not refer to columns of the inputs. */
   def build(in: Inputs, nowUnix: Column, nowStr: Column): DataFrame = {
     // ---- P1/P2: pool stats 1d, flatten + coerce (sanitized names) ----
     val p1d = in.pool1d.select(
@@ -79,45 +84,46 @@ object Snapshot {
       num(col("feesUsd")).as("fees_1h"))
 
     // ---- the union: one row per task, deposit, fee and bin ----
-    // Each child carries its payload in its own columns (null elsewhere).
-    // Child rows with a null key are dropped here: the key equi-join they
-    // replace never matched them to a task.
+    // Each child carries a `kind` tag and its payload in its own columns
+    // (null elsewhere). Child rows with a null key are dropped here: the
+    // key equi-join they replace never matched them to a task.
     val keys = Seq(col("user_address"), col("pool_address"))
-    def keyed(df: DataFrame, payload: Column*): DataFrame =
-      df.select(keys ++ payload: _*).na.drop(Seq("user_address", "pool_address"))
-    // one string-fold entry: sorted by (binId, x, y), its "id: x, y"
-    // text rendered here, map-side
-    def foldEntry(binId: Column, x: Column, y: Column): Column =
-      struct(binId.as("binId"), x.as("x"), y.as("y"),
-        format_string("%s: %s, %s", binId.cast("string"), x.cast("string"),
-          y.cast("string")).as("text"))
+    def keyed(df: DataFrame, kind: Int, payload: Column*): DataFrame =
+      df.select(keys ++ (lit(kind).as("kind") +: payload): _*)
+        .na.drop(Seq("user_address", "pool_address"))
 
-    val taskRows = in.tasks.select(keys :+ lit(1).as("task"): _*)
+    // The tick's wall-clock values travel as data on the task rows: the
+    // projection over the driver-local task relation folds into that
+    // relation, so no tick-varying literal reaches generated code and
+    // every tick reuses the same compiled stages.
+    val taskRows = in.tasks.select(keys ++ Seq(lit(TaskSummary.Task).as("kind"),
+      nowUnix.as("now_unix"), nowStr.as("now_str")): _*)
 
     // P4/P7/P8 + F1: deposits, keyed for the A1 tie-keep below
     val deposits = keyed(in.history
         .withColumnRenamed("poolAddress", "pool_address")
         .filter(col("isDeposit") === true),
-      struct(
-        struct(col("blockNumber"), to_timestamp(col("timestamp")).as("ts")).as("k"),
-        coalesce(num(col("tokenX.amount")), lit(0.0)).cast(DecimalType(38, 6)).as("x"),
-        coalesce(num(col("tokenY.amount")), lit(0.0)).cast(DecimalType(38, 6)).as("y"))
-        .as("dep"))
+      TaskSummary.Deposit,
+      col("blockNumber").cast("long").as("id"),
+      to_timestamp(col("timestamp")).as("ts"),
+      coalesce(num(col("tokenX.amount")), lit(0.0)).cast(DecimalType(38, 6)).as("dx"),
+      coalesce(num(col("tokenY.amount")), lit(0.0)).cast(DecimalType(38, 6)).as("dy"))
 
     // A4/A5: fee rows
     val feeRows = keyed(in.fees.withColumnRenamed("poolAddress", "pool_address"),
-      foldEntry(col("binId").try_cast("long"),
-        coalesce(num(col("accruedFeesX")), lit(0.0)),
-        coalesce(num(col("accruedFeesY")), lit(0.0))).as("fee"))
+      TaskSummary.Fee,
+      col("binId").try_cast("long").as("id"),
+      coalesce(num(col("accruedFeesX")), lit(0.0)).as("x"),
+      coalesce(num(col("accruedFeesY")), lit(0.0)).as("y"))
 
-    // E2-E4: on-chain bin math per bin (S7 tail) — exact unbounded
-    // product then one rounding to double — Python's
+    // E2-E4: on-chain bin math per bin (S7 tail) — Python's
     // `reserveX * shares / total_shares` (arbitrary-precision int*int,
-    // then true division to float, main.py:232-233). BinMath.mulDiv
-    // multiplies on java BigDecimal, so uint128-scale reserves/shares
+    // then true division to float, main.py:232-233): BinMath.mulDiv
+    // multiplies exactly on BigInteger, so uint128-scale reserves/shares
     // (products beyond Decimal(38,0)'s 38-digit cap) stay exact instead
-    // of overflowing to null; totalShares=0 yields null (engine policy).
-    // The inner join drops bins of a pool missing from pool1d.
+    // of overflowing to null, and rounds the quotient once, correctly;
+    // totalShares=0 yields null (engine policy). The inner join drops
+    // bins of a pool missing from pool1d.
     val binRows = {
       val ux = graft.functions.BinMath.mulDivDouble(
         col("reserveX"), col("shares"), col("totalShares"))
@@ -130,36 +136,32 @@ object Snapshot {
                                      col("token_y_decimals"))),
                 col("poolAddress") === col("pool_address"))
           .drop("poolAddress"),
-        foldEntry(col("binId"), ux / sx, uy / sy).as("bin"),
+        TaskSummary.Bin,
+        col("binId").cast("long").as("id"), (ux / sx).as("x"), (uy / sy).as("y"),
         ux.as("ux"), uy.as("uy"), sx.as("sx"), sy.as("sy"))
     }
 
     // ---- the one exchange + the one aggregate (A1/A2, A4/A5, A5) ----
     // The union is hash-partitioned BEFORE the aggregate, so the
     // aggregate runs whole in the reduce tasks: a map-side partial
-    // aggregate cannot shrink the folds' lists, yet it would generate
-    // its projections in every scan partition of the union.
-    // Folds sort their entries by the numeric fields, then read the
-    // pre-formatted text. A1: the latest deposits are those whose
-    // (blockNumber, ts) equals the group maximum — rank-1 ties kept,
-    // nulls lowest, as `Relational.latestByKey`'s rank orders them.
-    val entryText = (x: Column) => x.getField("text")
+    // aggregate cannot shrink the folds' lists, yet it would run in every
+    // scan partition of the union. TaskSummary folds each task's rows in
+    // one buffer: the task count and wall-clock values, the latest
+    // deposit key (A1: rank-1 ties kept, nulls lowest, as
+    // `Relational.latestByKey`'s rank orders them) with the tied deposit
+    // sums (A2), the fee sums, Σux/Σuy with the first sx/sy, and both
+    // folds, sorted and rendered as `Relational.stringFold` renders them.
     val summary = taskRows
       .unionByName(deposits, allowMissingColumns = true)
       .unionByName(feeRows, allowMissingColumns = true)
       .unionByName(binRows, allowMissingColumns = true)
       .repartition(keys: _*)
       .groupBy(keys: _*)
-      .agg(
-        count(col("task")).as("tasks"),
-        max(col("dep.k")).as("latest"),
-        collect_list(col("dep")).as("deps"),
-        Relational.stringFold(col("fee"), entryText).as("fees_per_bin"),
-        sum(col("fee.x").cast(DecimalType(38, 12))).cast("double").as("accrued_fees_token_x"),
-        sum(col("fee.y").cast(DecimalType(38, 12))).cast("double").as("accrued_fees_token_y"),
-        Relational.stringFold(col("bin"), entryText).as("bin_distribution"),
-        (sum(col("ux")) / first(col("sx"), ignoreNulls = true)).as("token_x_amount"),
-        (sum(col("uy")) / first(col("sy"), ignoreNulls = true)).as("token_y_amount"))
+      .agg(TaskSummary(kind = col("kind"), id = col("id"), ts = col("ts"),
+        x = col("x"), y = col("y"), dx = col("dx"), dy = col("dy"),
+        ux = col("ux"), uy = col("uy"), sx = col("sx"), sy = col("sy"),
+        nowUnix = col("now_unix"), nowStr = col("now_str")).as("s"))
+      .select(keys :+ col("s.*"): _*)
       // tasks only; a task listed n times yields n rows, as a join would
       .filter(col("tasks") > 0)
       .withColumn("tasks", explode(array_repeat(lit(1), col("tasks").cast("int"))))
@@ -174,19 +176,14 @@ object Snapshot {
     // summary frames, with zero totals and "()" blobs when the source
     // arrays are empty (main.py:143-153, 158-181, 227-250)
     val zero = lit(0.0)
-    // A1/A2: only the deposits tied on the latest (blockNumber, ts) sum
-    val latest = filter(col("deps"), d => d.getField("k") <=> col("latest"))
-    def depositSum(field: String): Column = coalesce(
-      aggregate(latest, lit(0).cast(DecimalType(38, 6)),
-        (acc, d) => (acc + d.getField(field)).cast(DecimalType(38, 6))).cast("double"),
-      zero)
-    val depositX = depositSum("x")
-    val depositY = depositSum("y")
+    val orZero = (c: String) => coalesce(col(c).cast("double"), zero)
+    val depositX = orZero("deposit_x")
+    val depositY = orZero("deposit_y")
     val price = (c: String) => col(s"token_${c}_price")
-    val tokenX = coalesce(col("token_x_amount"), zero)
-    val tokenY = coalesce(col("token_y_amount"), zero)
-    val feesX = coalesce(col("accrued_fees_token_x"), zero)
-    val feesY = coalesce(col("accrued_fees_token_y"), zero)
+    val tokenX = coalesce(col("sum_ux") / col("first_sx"), zero)
+    val tokenY = coalesce(col("sum_uy") / col("first_sy"), zero)
+    val feesX = orZero("fees_x")
+    val feesY = orZero("fees_y")
     val valueIfHeld = depositX * price("x") + depositY * price("y")
     val tokenXUsd = price("x") * tokenX
     val tokenYUsd = price("y") * tokenY
@@ -195,8 +192,8 @@ object Snapshot {
     val liquidity = col("liquidity")
 
     val report: Seq[(String, Column)] = Seq(
-      "current_unix_timestamp" -> nowUnix,
-      "timestamp(datetime_pst)" -> nowStr,
+      "current_unix_timestamp" -> col("now_unix"),
+      "timestamp(datetime_pst)" -> col("now_str"),
       "pool_name" -> col("pool_name"),
       "pool_address" -> col("pool_address"),
       "pool[volume](1h)" -> col("volume_1h"),
@@ -223,7 +220,7 @@ object Snapshot {
       "total_tokenX_amount_initial_deposit" -> depositX,
       "total_tokenY_amount_initial_deposit" -> depositY,
       "MostRecentDepositTime" ->
-        date_format(col("latest").getField("ts"), "yyyy-MM-dd HH:mm:ss"),
+        date_format(col("latest_ts"), "yyyy-MM-dd HH:mm:ss"),
       "token_x_amount" -> tokenX,
       "token_y_amount" -> tokenY,
       "token_x(USD)" -> tokenXUsd,

@@ -72,10 +72,13 @@ object HttpTransport {
   def fetch(url: String, headers: Seq[(String, String)]): Iterator[String] =
     overrideFetch.map(_(url)).getOrElse(default(url, headers))
 
+  /** One JDK client for every GET: one selector thread, pooled
+    * connections. Built on first use. */
+  private lazy val client = java.net.http.HttpClient.newBuilder()
+    .connectTimeout(java.time.Duration.ofSeconds(30)).build()
+
   /** JDK java.net.http GET, body split into lines. */
   def default(url: String, headers: Seq[(String, String)]): Iterator[String] = {
-    val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(30)).build()
     val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
       .timeout(java.time.Duration.ofMinutes(5))
       .header("accept", "application/json")

@@ -91,9 +91,12 @@ object RpcTransport {
   def post(endpoint: String, body: String): String =
     overridePost.getOrElse(default)(endpoint, body)
 
+  /** One JDK client for every POST: one selector thread, pooled
+    * connections. Built on first use. */
+  private lazy val client = java.net.http.HttpClient.newBuilder()
+    .connectTimeout(java.time.Duration.ofSeconds(30)).build()
+
   val default: Post = (endpoint, body) => {
-    val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(30)).build()
     val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(endpoint))
       .timeout(java.time.Duration.ofMinutes(5))
       .header("content-type", "application/json")
@@ -156,15 +159,45 @@ object BinsAbi {
     * byte offset of the tuple[]; at the offset: length, then length
     * static 5-word tuples. */
   def decodeBins(resultHex: String): Seq[(Long, BigInteger, BigInteger, BigInteger, BigInteger)] = {
+    def big(v: Any): BigInteger = v match {
+      case l: Long => BigInteger.valueOf(l)
+      case b: BigInteger => b
+    }
+    decode(resultHex)((id, rx, ry, sh, tot) => (id, big(rx), big(ry), big(sh), big(tot)))
+  }
+
+  /** [[decodeBins]]' walk, handing each bin to `bin` as its Long binId
+    * and its four uint words, each a Long when it fits one (parsed in
+    * place, no substring) and a BigInteger otherwise. Malformed input
+    * fails with the same exceptions either way. */
+  def decode[A](resultHex: String)(bin: (Long, Any, Any, Any, Any) => A): IndexedSeq[A] = {
     val h = resultHex.stripPrefix("0x")
     require(h.length >= 128 && h.length % 64 == 0,
       s"malformed getBinsReserveOf return (${h.length} hex chars)")
-    def w(i: Int): BigInteger = new BigInteger(h.substring(i * 64, i * 64 + 64), 16)
-    val off = w(1).intValueExact() / 32 // byte offset → word index
-    val len = w(off).intValueExact()
+    def big(i: Int): BigInteger = new BigInteger(h.substring(i * 64, i * 64 + 64), 16)
+    // a word whose first 49 hex digits are '0' is below 2^60; anything
+    // else, malformed digits included, takes the BigInteger path
+    def small(i: Int): Long = {
+      val from = i * 64
+      var z = from
+      while (z < from + 49 && h.charAt(z) == '0') z += 1
+      if (z < from + 49 || Character.digit(h.charAt(z), 16) < 0) -1L
+      else try java.lang.Long.parseLong(h, z, from + 64, 16)
+           catch { case _: NumberFormatException => -1L }
+    }
+    def word(i: Int): Any = small(i) match {
+      case -1L => big(i)
+      case v => v
+    }
+    def long(i: Int): Long = small(i) match {
+      case -1L => big(i).longValueExact()
+      case v => v
+    }
+    val off = big(1).intValueExact() / 32 // byte offset → word index
+    val len = big(off).intValueExact()
     (0 until len).map { i =>
       val b = off + 1 + i * 5
-      (w(b).longValueExact(), w(b + 1), w(b + 2), w(b + 3), w(b + 4))
+      bin(long(b), word(b + 1), word(b + 2), word(b + 3), word(b + 4))
     }
   }
 }
@@ -278,10 +311,9 @@ class RpcBinsReader(tasks: Seq[RpcBinsTask], endpoint: String,
           case Some(e) if e.has("error") && !e.get("error").isNull =>
             Iterator(Left(s"!rpc-error id=$i pair=${t.pair} user=${t.user} error=${e.get("error")}"))
           case Some(e) =>
-            try BinsAbi.decodeBins(e.get("result").asText()).iterator.map {
-              case (bin, rx, ry, sh, tot) =>
-                Right(Array[Any](t.user, t.pair, bin, rx, ry, sh, tot))
-            } catch {
+            try BinsAbi.decode(e.get("result").asText()) { (bin, rx, ry, sh, tot) =>
+              Right(Array[Any](t.user, t.pair, bin, rx, ry, sh, tot)): Either[String, Bin]
+            }.iterator catch {
               case ex: Exception =>
                 Iterator(Left(s"!rpc-decode-failed id=$i pair=${t.pair} user=${t.user} error=$ex"))
             }
@@ -326,7 +358,8 @@ class RpcBinsReader(tasks: Seq[RpcBinsTask], endpoint: String,
 
 object RpcBinsReader {
   /** One decoded bin, in [[Fields]] order: user, pair (String), binId
-    * (Long), then the four uint words (BigInteger). */
+    * (Long), then the four uint words (Long when the word fits one,
+    * else BigInteger). */
   type Bin = Array[Any]
 
   private val Fields: IndexedSeq[String] =
@@ -343,6 +376,10 @@ object RpcBinsReader {
   private def cell(v: Any, dt: DataType): Any = (v, dt) match {
     case (s: String, StringType) => UTF8String.fromString(s)
     case (l: Long, LongType) => l
+    case (l: Long, d: DecimalType) =>
+      val dec = Decimal(l)
+      if (dec.changePrecision(d.precision, d.scale)) dec
+      else Decimal(java.math.BigDecimal.valueOf(l), d.precision, d.scale) // fails as a BigInteger would
     case (b: BigInteger, d: DecimalType) =>
       Decimal(new java.math.BigDecimal(b), d.precision, d.scale)
     case _ => JsonLinesReader.convert(node(v), dt)

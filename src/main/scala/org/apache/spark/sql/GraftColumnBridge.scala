@@ -16,4 +16,12 @@ object GraftColumnBridge {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `d` rounded (half up) to `precision`/`scale` as Spark's decimal
+    * arithmetic checks its results (`Decimal.toPrecision` is
+    * private[sql]): null when out of range if `nullOnOverflow`, else
+    * the NUMERIC_VALUE_OUT_OF_RANGE error. */
+  def toPrecision(d: types.Decimal, precision: Int, scale: Int,
+                  nullOnOverflow: Boolean): types.Decimal =
+    d.toPrecision(precision, scale, types.Decimal.ROUND_HALF_UP, nullOnOverflow, null)
 }

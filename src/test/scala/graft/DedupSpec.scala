@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.Dedup
+import graft.ops.DriverGraph
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -589,6 +590,37 @@ class DedupSpec extends SparkSpec {
         graft.ext.Dedup.hopsToRep(chain, "id_a", "id_b", maxIter = 3,
           maxDriverEdges = 0L)
       }
+    }
+
+    it("maxDriverEdges = 0 keeps the components off the driver too") {
+      /** The result, and the call sites (stage names) of the jobs it ran. */
+      def traced(maxDriverEdges: Long): (Set[(Long, Long, Long)], Seq[String]) = {
+        val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            js.stageInfos.foreach(s => sites.add(s.name))
+        }
+        spark.sparkContext.addSparkListener(listener)
+        try {
+          val out = graft.ext.Dedup.hopsToRep(chain, "id_a", "id_b", maxDriverEdges = maxDriverEdges)
+            .as[(Long, Long, Long)].collect().toSet
+          // the async listener bus: read once the count is stable
+          var (stable, cur, spins) = (0, sites.size, 0)
+          while (stable < 3 && spins < 30) {
+            Thread.sleep(200)
+            if (sites.size == cur) stable += 1 else { stable = 0; cur = sites.size }
+            spins += 1
+          }
+          import scala.jdk.CollectionConverters._
+          (out, sites.asScala.toSeq)
+        } finally spark.sparkContext.removeSparkListener(listener)
+      }
+      val onDriver = (sites: Seq[String]) => sites.exists(_.startsWith("collect at DriverGraph.scala"))
+      val (local, localSites) = traced(DriverGraph.MaxDriverEdges)
+      val (dist, distSites) = traced(0L)
+      assert(onDriver(localSites), s"driver path call sites: ${localSites.mkString(", ")}")
+      assert(!onDriver(distSites), s"distributed path call sites: ${distSites.mkString(", ")}")
+      assert(dist == local)
     }
 
     it("drops null-id edges on both paths: equal to the graph without them") {

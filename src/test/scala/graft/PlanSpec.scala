@@ -891,7 +891,9 @@ class PlanSpec extends SparkSpec {
   }
 
   describe("snapshot tick (LiveEndpoints.inputs → Snapshot.build)") {
-    it("plans the snapshot with exactly one shuffle and runs the tick in at most 6 jobs") {
+    /** One two-task tick against canned transports, built and collected
+      * (so the adaptive plan is final). */
+    def tick(nowUnix: Long, nowStr: String): org.apache.spark.sql.DataFrame = {
       import graft.sources.{BinsAbi, HttpTransport, RpcTransport}
       import java.math.BigInteger
       val cfg = graft.pipeline.LiveEndpoints.Config(
@@ -916,6 +918,20 @@ class PlanSpec extends SparkSpec {
           s"""{"jsonrpc":"2.0","id":${req.get(i).get("id").asLong()},"result":"$bins"}""")
           .mkString("[", ",", "]")
       }
+      try {
+        val in = graft.pipeline.LiveEndpoints.inputs(spark, cfg, Seq(("U1", "P1"), ("U2", "P1")))
+        val snap = graft.pipeline.Snapshot.build(in,
+          nowUnix = org.apache.spark.sql.functions.lit(nowUnix),
+          nowStr = org.apache.spark.sql.functions.lit(nowStr))
+        assert(snap.collect().length == 2)
+        snap
+      } finally {
+        HttpTransport.clearOverride()
+        RpcTransport.clearOverride()
+      }
+    }
+
+    it("plans the snapshot with exactly one shuffle and runs the tick in at most 6 jobs") {
       val jobs = new java.util.concurrent.atomic.AtomicInteger()
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -923,11 +939,7 @@ class PlanSpec extends SparkSpec {
       }
       spark.sparkContext.addSparkListener(listener)
       try {
-        val in = graft.pipeline.LiveEndpoints.inputs(spark, cfg, Seq(("U1", "P1"), ("U2", "P1")))
-        val snap = graft.pipeline.Snapshot.build(in,
-          nowUnix = org.apache.spark.sql.functions.lit(0L),
-          nowStr = org.apache.spark.sql.functions.lit("t"))
-        assert(snap.collect().length == 2)
+        val snap = tick(0L, "t")
         // the async listener bus: read the count once it is stable
         // (bounded at 15 s, as in PerfCanarySpec)
         var (stable, cur, spins) = (0, jobs.get, 0)
@@ -942,11 +954,23 @@ class PlanSpec extends SparkSpec {
         }
         assert(shuffles.size == 1, s"plan:\n$plan")
         assert(cur <= 6, s"the tick ran $cur jobs; plan:\n$plan")
-      } finally {
-        spark.sparkContext.removeSparkListener(listener)
-        HttpTransport.clearOverride()
-        RpcTransport.clearOverride()
-      }
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+
+    it("generates the same code on every tick: the wall-clock values travel as data") {
+      // a tick-varying literal in generated code misses the codegen
+      // cache, so every tick would pay a fresh compile
+      val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      def code(nowUnix: Long, nowStr: String): Seq[String] =
+        org.apache.spark.sql.execution.debug
+          .codegenStringSeq(tick(nowUnix, nowStr).queryExecution.executedPlan).map(_._2)
+      val first = code(1700000000L, "2023-11-14 22:13:20")
+      val before = compiles.getCount
+      val next = code(1700003600L, "2023-11-14 23:13:20")
+      assert(first.nonEmpty)
+      assert(first == next, s"generated code differs between ticks:\n${first.diff(next).mkString("\n")}")
+      // projections outside whole-stage codegen are generated code too
+      assert(compiles.getCount == before, "the second tick compiled new code")
     }
   }
 }

@@ -53,6 +53,19 @@ class RpcSourceSpec extends SparkSpec {
       assert(BinsAbi.decodeBins(result1) == bins1)
       assert(BinsAbi.decodeBins(BinsAbi.encodeResult(1L, Nil)) == Nil)
     }
+    it("fails on a malformed small word exactly as the BigInteger decode does") {
+      // words 3 and 6: the first bin's id and shares, both long-sized;
+      // a sign or a non-hex digit among their last 15 digits
+      val hex = result1.stripPrefix("0x")
+      for (w <- Seq(3, 6); bad <- Seq('-', '+', 'g')) {
+        val at = w * 64 + 60
+        val corrupt = hex.updated(at, bad)
+        val expected = intercept[NumberFormatException](
+          new BigInteger(corrupt.substring(w * 64, w * 64 + 64), 16))
+        val got = intercept[NumberFormatException](BinsAbi.decodeBins(corrupt))
+        assert(got.toString == expected.toString)
+      }
+    }
   }
 
   describe("RpcBinsSource (executor-side batched eth_call plane)") {
