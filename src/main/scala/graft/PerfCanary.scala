@@ -44,6 +44,16 @@ object PerfCanary {
     "q188_conformal_interval" -> 12, // model+ckpt, bit-histogram, fetch, test
     "q157_woe_iv"             -> 8,  // bit-bucket hist + fetch (2 corpus jobs)
     "q175_gains_deciles"      -> 6,  // same fusion, driver-finished tail
+    // the other ops.Quantiles consumers: a silent fall off the
+    // driver-planned path onto the distributed chain re-adds jobs
+    "q120_exact_quantiles"    -> 12, // stats, histogram, fetch
+    "q156_mad_outliers"       -> 7,  // one counts pass, driver medians
+    "q168_ship_latency_quantiles" -> 6, // grid + one guarded collect
+    "q169_rfm_segmentation"   -> 11, // bit histogram + fetch on the melt
+    "q185_theil_sen"          -> 4,  // month grid, driver medians
+    "q193_trimmed_winsorized" -> 15, // exactQuantiles edges + trim pass
+    "q196_median_ci"          -> 8,  // bit-replicate stats/hist/fetch
+    "q206_weighted_quantiles" -> 13, // counts frame, driver-planned
     // round 17 (VERDICT r16 #4): the two flicker members that had
     // wall-clock exposure but no job pin, measured 3×-stable by Prof16
     // with the spec's exact methodology

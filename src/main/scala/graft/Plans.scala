@@ -5,12 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Dev tool: print formatted physical plans for selected queries, for
   * scale review (pushdown, broadcast, shuffle count).
   *
-  * NOTE (ADVICE r13): driver-finishing queries EXECUTE their corpus
+  * NOTE: driver-finishing queries EXECUTE their corpus
   * jobs at DataFrame-construction time and print a LocalTableScan
   * rather than their lineage — q143's concurrent rollup, and the
   * adaptive-under-cap paths of q48/q52/q125/q177/q184 (dedup groups /
-  * BFS), q128/q191 (graph loops), q157/q175 (edge-binned counts,
-  * whose tail is driver arithmetic). To see their distributed plans,
+  * BFS), q128/q191 (graph loops), q157/q175
+  * (`Quantiles.nonNegEdgeBinnedCounts`, whose tail is driver arithmetic). To see their distributed plans,
   * call the underlying op with the cap forced to 0 (or
   * checkpoint = false for PageRank's plan-shape form), as PlanSpec
   * does. */

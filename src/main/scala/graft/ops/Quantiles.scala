@@ -5,34 +5,39 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Distributed EXACT interpolated quantiles via two-pass histogram
   * refinement — the scale path for what Spark's `percentile` aggregate
   * does by buffering every group value in aggregation state (fine for
   * bounded groups, the declared q41 anti-pattern at 100 TB).
   *
-  * Pass 1 aggregates each group to (n, min, max) and a B-bucket
-  * equal-width histogram — state is B counters per group regardless of
-  * volume. The needed order statistics (floor/ceil of (n-1)·p) locate
-  * their buckets through the histogram's running sum; pass 2 touches
-  * ONLY rows in those target buckets (≈ n/B rows per stat), ranks them
-  * with a window whose partitions are bucket-sized, and interpolates.
-  * Both passes shuffle on the group key; the histogram and target-set
-  * tables are grid-sized (≤ groups × buckets).
+  * Pass 1 aggregates each group to a histogram — state is one counter
+  * per bucket regardless of volume. The needed order statistics
+  * (floor/ceil of (n-1)·p) locate their buckets through the
+  * histogram's running sum; pass 2 touches ONLY rows in those target
+  * buckets (≈ n/B rows per stat), ranks their distinct values, and
+  * interpolates.
   *
-  * The grid frames were ALWAYS driver-bounded — the distributed form
-  * broadcasts them, which presumes they fit on the driver. So when the
-  * group count is at most [[MaxDriverGroups]], the planning half runs
-  * ON the driver instead: collect the stats and histogram aggregates
-  * (two jobs), locate every order statistic's bucket in plain Scala,
-  * and re-enter Spark with LOCAL relations for the stats / target
-  * tables — a LocalTableScan broadcast builds on the driver thread
-  * without scheduling a job, collapsing the 6-stage broadcast chain
-  * (stats ⇒ hist ⇒ cum ⇒ targets ⇒ pass 2 ⇒ interpolate, each a
-  * query-stage barrier under AQE) to 3 jobs. Above the cap the fully
-  * distributed chain runs — same algorithm, same arithmetic, same
-  * results, just without the driver shortcut.
+  * Every driver path runs on one core: [[planBuckets]] turns a sorted
+  * (bucket, mass) histogram into the plan (n, each k, mass below each
+  * bucket, each rank's bucket, the target buckets and their PROVEN
+  * fetch bound), [[walk]] finds an order statistic in value-sorted
+  * (value, mass) pairs, and [[interp]] interpolates. Two bucket keys
+  * feed the planner: the equal-width [[bucketOf]] over a group's
+  * [mn, mx] (any numeric column; needs a stats pass first), and the
+  * IEEE bit prefix [[bitBucket]] (non-negative doubles only; needs no
+  * stats, so the nonNeg* entries save a corpus job).
+  *
+  * When the group count is at most [[MaxDriverGroups]] the planning
+  * half runs ON the driver: collect the stats and histogram
+  * aggregates (two jobs), plan in plain Scala, and re-enter Spark with
+  * LOCAL relations for the stats / target tables — a LocalTableScan
+  * broadcast builds on the driver thread without scheduling a job, so
+  * the 6-stage broadcast chain (stats ⇒ hist ⇒ cum ⇒ targets ⇒ pass 2
+  * ⇒ interpolate) collapses to 3 jobs. Above the cap the fully
+  * distributed chain ([[refine]] / [[interpolate]]) runs — same
+  * algorithm, same arithmetic, same results.
   *
   * Result: (group, p, value) with `percentile`/`quantile_cont`
   * interpolation semantics. The interpolation is computed EXACTLY as
@@ -42,17 +47,18 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType, IntegerType,
   * in double low bits (measured on events.value p=0.25/0.99), and the
   * driver's hash compare needs bit equality against `quantile_cont`.
   *
-  * Two entry points sharing the refinement core:
-  *  - [[exactQuantiles]]: over raw rows; per-group state is B counters,
-  *    the corpus is scanned twice — the default at unbounded value
-  *    cardinality (continuous doubles at 100 TB).
+  * Entry points:
+  *  - [[exactQuantiles]]: over raw rows, the corpus scanned twice — the
+  *    default at unbounded value cardinality;
   *  - [[exactQuantilesFromCounts]]: over a pre-aggregated
-  *    (group, value, count) frame; ZERO corpus passes here, and a
-  *    caller that needs other value-level stats amortizes the one
-  *    groupBy(group, value) pass across all of them (q119 computes its
-  *    quantiles AND its final scaled aggregates from one such frame).
-  *    State is distinct-values-sized — use when the value domain is
-  *    discrete (prices, counts, grades), not for continuous doubles.
+  *    (group, value, count) frame, zero corpus passes — for discrete
+  *    value domains (prices, counts, grades) or integer weights;
+  *  - [[exactQuantileBitReplicates]]: the full frame plus hash-bit
+  *    half-sample replicates from one histogram;
+  *  - [[nonNegScalarQuantiles]], [[nonNegQuantilesFromCounts]],
+  *    [[nonNegEdgeBinnedCounts]]: the stats-free bit-bucket forms;
+  *  - [[collectedQuantilesFromCounts]]: one guarded collect for counts
+  *    frames whose size is bounded by their domain.
   */
 object Quantiles {
 
@@ -68,78 +74,41 @@ object Quantiles {
     * window ranks distributedly. ~24 MB of (value, count) pairs. */
   val MaxDriverPass2Rows: Long = 1L << 20
 
-  /** @param statsOpt optional precomputed per-group (group, n, mn, mx)
-    *   frame — groups' non-null counts and exact min/max. When the
-    *   input is a melt of a wide table, one no-Expand aggregate over
-    *   the wide form produces this and saves a whole corpus pass;
-    *   table-metadata stats work too. Must agree exactly with the data
-    *   or bucket location breaks. */
+  /** Exact quantiles of `valCol` per `groupCol` over raw rows; null
+    * values are ignored. Result: (groupCol, p, value). */
   def exactQuantiles(df: DataFrame, groupCol: String, valCol: String,
                      ps: Seq[Double], buckets: Int = 1024,
-                     statsOpt: Option[DataFrame] = None,
                      maxDriverGroups: Int = MaxDriverGroups): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"quantile fractions must be in [0,1]: $ps")
+    requireFractions(ps)
     val in = df.select(col(groupCol).as("g"), col(valCol).as("v"))
       .filter(col("v").isNotNull)
-    val statsDf = statsOpt
-      .map(_.select(col(groupCol).as("g"), col("n"), col("mn"), col("mx")))
-      .getOrElse(in.groupBy(col("g"))
-        .agg(count(lit(1)).as("n"), min(col("v")).as("mn"), max(col("v")).as("mx")))
-    driverPlanned(in.sparkSession, statsDf, ps, buckets, groupCol, maxDriverGroups)(
-      localStats => in.join(broadcast(localStats), Seq("g"))
-        .groupBy(col("g"), bucketOf(col("v"), buckets).as("b"))
-        .agg(count(lit(1)).as("cnt")),
-      (localStats, targetBuckets) =>
-        // pass 2 over only the target buckets — but rank DISTINCT
-        // VALUES with cumulative counts, never rows: a tie-heavy bucket
-        // (a discrete column can drop 10% of the corpus on one value)
-        // would make a row_number partition corpus-sized, while its
-        // distinct values stay few.
-        in.join(broadcast(localStats), Seq("g"))
-          .withColumn("b", bucketOf(col("v"), buckets))
-          .join(broadcast(targetBuckets), Seq("g", "b"))
-          .groupBy(col("g"), col("b"), col("v"))
-          .agg(count(lit(1)).as("c"))
+    val statsDf = in.groupBy(col("g"))
+      .agg(count(lit(1)).as("n"), min(col("v")).as("mn"), max(col("v")).as("mx"))
+    val b = bucketOf(col("v"), col("mn"), col("mx"), buckets)
+    def hist(stats: DataFrame) = in.join(broadcast(stats), Seq("g"))
+      .groupBy(col("g"), b.as("b"))
+      .agg(count(lit(1)).as("cnt"))
+    // pass 2 over only the target buckets — but rank DISTINCT VALUES
+    // with cumulative counts, never rows: a tie-heavy bucket (a
+    // discrete column can drop 10% of the corpus on one value) would
+    // make a row_number partition corpus-sized, while its distinct
+    // values stay few.
+    def valueCounts(stats: DataFrame, targetBuckets: DataFrame) =
+      in.join(broadcast(stats), Seq("g"))
+        .withColumn("b", b)
+        .join(broadcast(targetBuckets), Seq("g", "b"))
+        .groupBy(col("g"), col("b"), col("v"))
+        .agg(count(lit(1)).as("c"))
+    driverPlanned(in.sparkSession, statsDf, ps, groupCol, maxDriverGroups)(
+      hist, valueCounts
     ).getOrElse {
       // > MaxDriverGroups: fully distributed chain. The stats frame is
       // corpus-derived here, so materialize it once — every broadcast
       // otherwise re-scans and re-derives the corpus-sized input
       // (measured 3.5 s → 1 s on the q119 melt).
       val stats = statsDf.localCheckpoint(true)
-      val hist = in.join(broadcast(stats), Seq("g"))
-        .groupBy(col("g"), bucketOf(col("v"), buckets).as("b"))
-        .agg(count(lit(1)).as("cnt"))
-      refine(stats, hist, ps, groupCol) { targetBuckets =>
-        in.join(broadcast(stats), Seq("g"))
-          .withColumn("b", bucketOf(col("v"), buckets))
-          .join(broadcast(targetBuckets), Seq("g", "b"))
-          .groupBy(col("g"), col("b"), col("v"))
-          .agg(count(lit(1)).as("c"))
-      }
+      refine(stats, hist(stats), ps, groupCol)(valueCounts(stats, _))
     }
-  }
-
-  /** Multi-metric quantiles over ONE input frame: melts `valCols` into
-    * a long (metric, v) frame — values cast to double, exact for the
-    * integer-like metrics callers pass (all < 2^53, and interpolation
-    * arithmetic is double either way, so the results are bit-identical
-    * to per-column [[exactQuantiles]] calls; QuantilesSpec pins it) —
-    * and runs ONE driver-planned pass with the metric NAME as the
-    * group. k metrics of the same frame cost one 3-job call instead of
-    * k (q169 paid 3 calls = 9 driver-planned jobs over the same
-    * customer rollup — the round-9 #3 fix). The caller should
-    * `localCheckpoint` an expensive input: each pass re-reads the melt,
-    * and the melt re-derives the input per pass.
-    *
-    * Result: (metric, p, value) — `metric` is the source column name. */
-  def exactQuantilesMulti(df: DataFrame, valCols: Seq[String], ps: Seq[Double],
-                          buckets: Int = 1024): DataFrame = {
-    require(valCols.nonEmpty, "exactQuantilesMulti needs at least one column")
-    val melted = df.select(explode(array(valCols.map(c =>
-        struct(lit(c).as("metric"), col(c).cast("double").as("v"))): _*)).as("e"))
-      .select(col("e.metric").as("metric"), col("e.v").as("v"))
-    exactQuantiles(melted, "metric", "v", ps, buckets)
   }
 
   /** Quantiles from a pre-aggregated value-counts frame: one row per
@@ -157,65 +126,55 @@ object Quantiles {
   def exactQuantilesFromCounts(vc: DataFrame, groupCol: String, valCol: String,
                                cntCol: String, ps: Seq[Double],
                                buckets: Int = 1024,
-                               statsOpt: Option[DataFrame] = None,
                                maxDriverGroups: Int = MaxDriverGroups): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"quantile fractions must be in [0,1]: $ps")
+    requireFractions(ps)
     val in = vc.select(col(groupCol).as("g"), col(valCol).as("v"),
         col(cntCol).cast("long").as("c"))
       .filter(col("v").isNotNull)
-    val statsDf = statsOpt
-      .map(_.select(col(groupCol).as("g"), col("n"), col("mn"), col("mx")))
-      .getOrElse(in.groupBy(col("g"))
-        .agg(sum(col("c")).as("n"), min(col("v")).as("mn"), max(col("v")).as("mx")))
-    def withB(localStats: DataFrame) = in.join(broadcast(localStats), Seq("g"))
-      .withColumn("b", bucketOf(col("v"), buckets))
-    driverPlanned(vc.sparkSession, statsDf, ps, buckets, groupCol, maxDriverGroups)(
-      localStats => withB(localStats).groupBy(col("g"), col("b"))
-        .agg(sum(col("c")).as("cnt")),
-      (localStats, targetBuckets) =>
-        // vc is already one row per (g, v) with its count — restricting
-        // to the target buckets is a semi-join, no re-aggregation
-        withB(localStats).join(broadcast(targetBuckets), Seq("g", "b"))
-          .select(col("g"), col("b"), col("v"), col("c"))
+    val statsDf = in.groupBy(col("g"))
+      .agg(sum(col("c")).as("n"), min(col("v")).as("mn"), max(col("v")).as("mx"))
+    def withB(stats: DataFrame) = in.join(broadcast(stats), Seq("g"))
+      .withColumn("b", bucketOf(col("v"), col("mn"), col("mx"), buckets))
+    def hist(stats: DataFrame) =
+      withB(stats).groupBy(col("g"), col("b")).agg(sum(col("c")).as("cnt"))
+    // vc is already one row per (g, v) with its count — restricting to
+    // the target buckets is a semi-join, no re-aggregation
+    def valueCounts(stats: DataFrame, targetBuckets: DataFrame) =
+      withB(stats).join(broadcast(targetBuckets), Seq("g", "b"))
+        .select(col("g"), col("b"), col("v"), col("c"))
+    driverPlanned(vc.sparkSession, statsDf, ps, groupCol, maxDriverGroups)(
+      hist, valueCounts
     ).getOrElse {
-      val stats = statsDf
-      val hist = withB(stats).groupBy(col("g"), col("b")).agg(sum(col("c")).as("cnt"))
-      refine(stats, hist, ps, groupCol) { targetBuckets =>
-        withB(stats).join(broadcast(targetBuckets), Seq("g", "b"))
-          .select(col("g"), col("b"), col("v"), col("c"))
-      }
+      refine(statsDf, hist(statsDf), ps, groupCol)(valueCounts(statsDf, _))
     }
   }
 
   /** Exact interpolated quantile of the FULL frame (published as group
     * −1) plus each of `bits` hash-bit-filtered half-sample replicates
     * (groups 0..bits−1) — the BRR/half-sample shape q187/q196 use —
-    * WITHOUT materializing the (bits+1)× exploded frame the naive
-    * formulation pays three corpus passes over. The trick: every
+    * WITHOUT materializing the (bits+1)× exploded frame. Every
     * replicate is a BIT of the same hash column, so ONE histogram pass
-    * can carry all bits+1 group counts as bitmask sums — per-bucket
-    * state is (bits+2) longs, grid-bounded like everything else here:
+    * carries all bits+1 group counts as bitmask sums — per-bucket
+    * state is (bits+2) longs:
     *
-    *  1. one aggregate → global (n, mn, mx) + per-bit counts (1 job);
+    *  1. one aggregate → global (n, mn, mx) (1 job);
     *  2. one B-bucket histogram with a count column per replicate
     *     (1 job, ≤ B×(bits+2) longs collected);
-    *  3. the driver locates every replicate's ⌊k⌋/⌈k⌉ buckets through
-    *     its own histogram column and fetches ONLY the union of target
-    *     buckets (1 job, bound PROVEN by the histogram before the
-    *     collect — each bucket contributes at most its full-frame
-    *     count), then ranks/interpolates in plain Scala with the same
-    *     IEEE arithmetic [[exactQuantiles]] compiles to.
+    *  3. each replicate is planned through its own histogram column,
+    *     and ONLY the union of target buckets is fetched (1 job, bound
+    *     PROVEN by the histogram before the collect — each bucket
+    *     contributes at most its full-frame count); each replicate then
+    *     walks its bit-filtered fetched values as mass-1 pairs.
     *
     * Replicate medians all sit near the full-frame quantile, so the
     * target-bucket union is a handful of buckets: the fetch is ≈
-    * |union|·n/B rows. Above [[MaxDriverPass2Rows]] (or for non-double
-    * value types) the method falls back to the exploded-frame
-    * [[exactQuantiles]] chain — same algorithm, same results; the decade
-    * sf0.1→sf10 stays on the fast path (n/B at sf10 ≈ 15k rows/bucket).
-    * Empty replicates (possible only at toy n) drop out, mirroring the
-    * exploded GROUP BY. Result: (groupCol: long, p, value), bit-equal to
-    * `quantile_cont` per group (QuantilesSpec pins ≡ exploded).
+    * |union|·n/B rows. Above [[MaxDriverPass2Rows]] (or for value types
+    * a double cannot order exactly) the method falls back to the
+    * exploded-frame [[exactQuantiles]] chain — same algorithm, same
+    * results. Empty replicates (possible only at toy n) drop out,
+    * mirroring the exploded GROUP BY. Result: (groupCol: long, p,
+    * value), bit-equal to `quantile_cont` per group (QuantilesSpec pins
+    * ≡ exploded).
     *
     * @param hashCol non-negative long hash with ≥ `bits` usable bits
     *   (replicate r keeps rows where bit r is set) */
@@ -223,7 +182,7 @@ object Quantiles {
                                  bits: Int, p: Double, buckets: Int = 1024,
                                  groupCol: String = "r"): DataFrame = {
     require(bits >= 1 && bits <= 60, s"bits must be in [1,60]: $bits")
-    require(p >= 0.0 && p <= 1.0, s"quantile fraction must be in [0,1]: $p")
+    requireFractions(Seq(p))
     val session = df.sparkSession
     val in = df.select(col(hashCol).as("h"), col(valCol).as("v"))
       .filter(col("v").isNotNull)
@@ -237,225 +196,490 @@ object Quantiles {
       exactQuantiles(long, "rr", "v", Seq(p), buckets)
         .withColumnRenamed("rr", groupCol)
     }
-    val driverSafe = in.schema("v").dataType match {
-      case DoubleType | FloatType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    if (!driverSafe) return exploded
-    val bitCols = (0 until bits).map(r =>
-      sum(shiftright(col("h"), r).bitwiseAND(lit(1L))).as(s"c$r"))
-    val statAggs = Seq(count(lit(1)).as("n"), min(col("v")).as("mn"),
-      max(col("v")).as("mx")) ++ bitCols
-    val st = in.agg(statAggs.head, statAggs.tail: _*).head()   // job 1
-    val nAll = st.getLong(0)
-    if (nAll == 0L)
-      return session.createDataFrame(
-        java.util.Collections.emptyList[Row](), StructType(Seq(
-          StructField(groupCol, LongType, nullable = false),
-          StructField("p", DoubleType, nullable = false),
-          StructField("value", DoubleType))))
-    val mn = st.getAs[Number]("mn").doubleValue
-    val mx = st.getAs[Number]("mx").doubleValue
-    val nOf: Int => Long = r => if (r < 0) nAll else st.getLong(3 + r)
-    val bExpr = // literal-stats twin of bucketOf: identical arithmetic
-      if (mx > mn)
-        least(lit(buckets - 1),
-          floor((col("v") - lit(mn)) / ((lit(mx) - lit(mn)) / buckets))
-            .cast("int"))
-      else lit(0)
-    val hist = in.groupBy(bExpr.as("b"))
+    if (!driverSafe(in.schema("v").dataType)) return exploded
+    val schema = resultSchema(StructField(groupCol, LongType, nullable = false))
+    val st = in.agg(count(lit(1)).as("n"), min(col("v")).as("mn"),
+      max(col("v")).as("mx")).head()                           // job 1
+    if (st.getLong(0) == 0L)
+      return session.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    val b = bucketOf(col("v"), lit(st.getAs[Number]("mn").doubleValue),
+      lit(st.getAs[Number]("mx").doubleValue), buckets)
+    val hist = in.groupBy(b.as("b"))
       .agg(count(lit(1)).as("call"),
         (0 until bits).map(r =>
           sum(shiftright(col("h"), r).bitwiseAND(lit(1L))).as(s"c$r")): _*)
-      .collect().sortBy(_.getInt(0))                           // job 2
-    val cntOf: (Row, Int) => Long = (row, r) =>
-      if (r < 0) row.getLong(1) else row.getLong(2 + r)
-    // locate each replicate's needed ranks: (r, rank) -> (bucket, local)
-    case class Tgt(b: Int, local: Long)
-    val targets = (-1 until bits).flatMap { r =>
-      val n = nOf(r)
-      if (n <= 0) Nil
-      else {
-        val k = (n - 1).toDouble * p
-        Seq(math.floor(k).toLong, math.ceil(k).toLong).distinct.map { rank =>
-          var below = 0L
-          val hit = hist.find { row =>
-            val c = cntOf(row, r); val lo = below; below += c
-            rank >= lo && rank < lo + c
-          }.getOrElse(throw new IllegalStateException(
-            s"rank $rank of replicate $r not covered by histogram"))
-          var lo = 0L
-          hist.takeWhile(_.getInt(0) < hit.getInt(0))
-            .foreach(row => lo += cntOf(row, r))
-          (r, rank) -> Tgt(hit.getInt(0), rank - lo)
-        }
-      }
-    }.toMap
-    val neededBuckets = targets.values.map(_.b).toSet
-    val fetchBound = hist.filter(r => neededBuckets(r.getInt(0)))
-      .map(_.getLong(1)).sum
+      .collect()                                               // job 2
+    // replicate −1 is the full frame (column 1), r ≥ 0 column 2 + r
+    val plans = (-1 until bits).map { r =>
+      val c = if (r < 0) 1 else 2 + r
+      r -> planBuckets(hist.map(row => (row.getInt(0).toLong, row.getLong(c))),
+        Seq(p), s"replicate $r")
+    }.filter(_._2.n > 0L)
+    val needed = plans.flatMap(_._2.targetB).toSet
+    val fetchBound = hist.filter(row => needed(row.getInt(0).toLong)).map(_.getLong(1)).sum
     if (fetchBound > MaxDriverPass2Rows) return exploded
-    val fetched = in.withColumn("b", bExpr)
-      .filter(col("b").isInCollection(neededBuckets))
+    val fetched = in.withColumn("b", b)
+      .filter(col("b").isInCollection(needed.map(_.toInt)))
       .select(col("b"), col("h"), col("v"))
       .collect()                                               // job 3
-      .groupBy(_.getInt(0))
-      .map { case (b, rows) =>
-        b -> rows.map(r => (r.getLong(1), r.getAs[Number](2).doubleValue))
-          .sortBy(_._2)
+      .groupBy(_.getInt(0).toLong)
+      .map { case (bk, rows) =>
+        bk -> rows.map(r => (r.getLong(1), r.getAs[Number](2).doubleValue)).sortBy(_._2)
       }
-    def statValue(r: Int, rank: Long): Double = {
-      val tgt = targets((r, rank))
-      val rows = fetched.getOrElse(tgt.b, Array.empty[(Long, Double)])
-      var i = 0; var seen = 0L
-      while (i < rows.length) {
-        if (r < 0 || ((rows(i)._1 >> r) & 1L) == 1L) {
-          if (seen == tgt.local) return rows(i)._2
-          seen += 1L
-        }
-        i += 1
-      }
-      throw new IllegalStateException(
-        s"order statistic $rank of replicate $r missing from fetched buckets")
-    }
-    val resRows = (-1 until bits).filter(nOf(_) > 0L).map { r =>
-      val k = (nOf(r) - 1).toDouble * p
-      val fl = math.floor(k); val ce = math.ceil(k)
-      val lo = statValue(r, fl.toLong)
-      val v = if (fl == ce) lo
-              else lo * (ce - k) + statValue(r, ce.toLong) * (k - fl)
+    val resRows = plans.map { case (r, pl) =>
+      val inReplicate = (h: Long) => r < 0 || ((h >> r) & 1L) == 1L
+      val v = pl.values(bk => fetched.getOrElse(bk, Array.empty[(Long, Double)])
+        .collect { case (h, x) if inReplicate(h) => (x, 1L) }, s"replicate $r").head
       Row(r.toLong, p, v)
     }
-    session.createDataFrame(resRows.asJava, StructType(Seq(
-      StructField(groupCol, LongType, nullable = false),
-      StructField("p", DoubleType, nullable = false),
-      StructField("value", DoubleType))))
+    session.createDataFrame(resRows.asJava, schema)
   }
 
-  /** bucket id: equal-width over [mn, mx]; constant groups (mx == mn)
-    * collapse to bucket 0. Callers use the same expression for both
-    * passes so assignment is bit-identical. Expects joined stats
-    * columns mn/mx in scope. */
-  private def bucketOf(v: Column, buckets: Int): Column =
-    when(col("mx") > col("mn"),
-      least(lit(buckets - 1),
-        floor((v - col("mn")) / ((col("mx") - col("mn")) / buckets))
-          .cast("int")))
-      .otherwise(lit(0))
+  /** Exact quantile EDGES of a NON-NEGATIVE double column plus
+    * per-edge-bin (count, flag-count) tallies — the quantile-cut-then-bin
+    * shape (q157 WOE, q175 gains) in TWO corpus jobs, the tallies riding
+    * the quantile's own passes:
+    *
+    *  1. bit-bucket histogram — per-bucket (count, flag-count, min,
+    *     max); n rides along (no stats pass), and the riding min/max
+    *     reject order-breaking inputs (negatives, NaN/Inf) loud;
+    *  2. target-bucket fetch — per distinct value (count, flag-count),
+    *     bound proven from the histogram before the collect.
+    *
+    * Binning (bin(v) = Σ_p [v > qₚ], the branch-free comparison chain
+    * the callers compiled to Catalyst) then needs NO corpus pass: an
+    * edge is either an order statistic itself or interpolated STRICTLY
+    * between two consecutive ones, so it can only fall inside a target
+    * bucket or an EMPTY bucket — every non-target bucket's rows land in
+    * one bin, decided from bucket ids alone (bit-prefix buckets are
+    * monotone in v), and only the fetched values compare per-value with
+    * the same IEEE `v > qₚ` the Catalyst chain used. Results are
+    * bit-identical to [[exactQuantiles]] edges plus a binning aggregate
+    * (QuantilesSpec pins edges, bins, AND flag tallies).
+    *
+    * Returns (edges in `ps` order, per-bin (n, nFlag) arrays of length
+    * ps.size + 1). Null values are excluded from edges AND tallies. A
+    * fetch bound past [[MaxDriverPass2Rows]] (a pathological
+    * distribution where ~every row shares the edge buckets) DEGRADES to
+    * [[edgeBinnedFallback]], loud on stderr, instead of dying; −0.0
+    * normalizes to +0.0 as in the siblings. */
+  def nonNegEdgeBinnedCounts(df: DataFrame, valCol: String, flagCol: String,
+                             ps: Seq[Double], shift: Int = 44)
+      : (Seq[Double], Array[Long], Array[Long]) = {
+    requireFractions(ps)
+    require(shift >= 32 && shift <= 60, s"bit-bucket shift out of [32,60]: $shift")
+    val in = df.select(nonNegV(col(valCol)).as("v"), col(flagCol).as("f"))
+      .filter(col("v").isNotNull)
+    val bkt = bitBucket(col("v"), shift)
+    val hist = in.groupBy(bkt.as("b"))
+      .agg(count(lit(1)).as("cnt"), count(when(col("f"), 1)).as("nf"),
+           min(col("v")).as("mn"), max(col("v")).as("mx"))
+      .collect().sortBy(_.getLong(0))                             // job 1
+    require(hist.nonEmpty, "nonNegEdgeBinnedCounts: empty input")
+    requireBitOrderSafe(hist.head.getLong(0), hist.head.getDouble(3),
+      hist.iterator.map(_.getDouble(4)),
+      "nonNegEdgeBinnedCounts", "exactQuantiles")
+    val plan = planBuckets(
+      hist.map(r => (r.getLong(0), r.getLong(1))), ps, "nonNegEdgeBinnedCounts")
+    if (plan.fetchBound > MaxDriverPass2Rows) {
+      System.err.println(s"[quantiles] nonNegEdgeBinnedCounts: target-bucket " +
+        s"fetch ${plan.fetchBound} exceeds the driver bound $MaxDriverPass2Rows " +
+        "— degrading to the quantiles-then-bin path")
+      return edgeBinnedFallback(in, ps)
+    }
+    val fetched = in.withColumn("b", bkt)
+      .filter(col("b").isInCollection(plan.targetB))
+      .groupBy(col("b"), col("v"))
+      .agg(count(lit(1)).as("c"), count(when(col("f"), 1)).as("nf"))
+      .collect()                                                  // job 2
+    val pairs = valuePairs(fetched, 1)(_.getLong(0))
+    val edges = plan.values(b => pairs.getOrElse(b, Array.empty), "nonNegEdgeBinnedCounts")
+    val edgeUpperB = plan.kOf.map(k => plan.rankBucket(math.ceil(k).toLong))
+    val cnt = new Array[Long](ps.size + 1)
+    val flag = new Array[Long](ps.size + 1)
+    hist.iterator.filterNot(r => plan.targetB(r.getLong(0))).foreach { r =>
+      val bin = edgeUpperB.count(ub => r.getLong(0) > ub)
+      cnt(bin) += r.getLong(1); flag(bin) += r.getLong(2)
+    }
+    fetched.foreach { r =>
+      val v = r.getDouble(1)
+      val bin = edges.count(q => v > q)
+      cnt(bin) += r.getLong(2); flag(bin) += r.getLong(3)
+    }
+    (edges, cnt, flag)
+  }
 
-  /** The order statistics every requested p needs: k = (n−1)·p, ranks
-    * ⌊k⌋ and ⌈k⌉. Pure per-group arithmetic — identical whether run in
-    * Catalyst or on the driver (plain IEEE multiply of exact longs). */
-  private def neededRanks(n: Long, ps: Seq[Double]): Seq[(Double, Double, Long)] =
-    ps.flatMap { p =>
-      val k = (n - 1).toDouble * p
-      Seq((p, k, math.floor(k).toLong), (p, k, math.ceil(k).toLong))
+  /** Single-group EXACT interpolated quantiles of a NON-NEGATIVE
+    * double column in TWO corpus passes with NO prior stats pass (q188:
+    * its conformal chain is job-floor-bound and strictly serial, so the
+    * win is deleting a link). [[exactQuantiles]]' equal-width histogram
+    * needs (mn, mx) before it can bin; for non-negative IEEE doubles
+    * the RAW BIT PATTERN is order-preserving under signed-long
+    * comparison ([[graft.functions.DoubleBitsExpr]]), so a histogram
+    * keyed by `doubleToRawLongBits(v) >> shift` needs no stats at all.
+    * Jobs:
+    *
+    *  1. bit-prefix histogram — groupBy(bits(v) >> shift) with
+    *     (cnt, min, max) per bucket; the id domain is ≤ 2^(64−shift)
+    *     (default shift 44 → ≤ 2^20, and SPARSE: only the exponent ×
+    *     8-mantissa-bit cells the data populates). n = Σ cnt rides
+    *     along; the per-bucket min/max let the driver REJECT inputs
+    *     that would break bit order (negatives, NaN, ±Inf), loud.
+    *  2. target-bucket fetch — per-distinct-value counts for only the
+    *     buckets the ⌊k⌋/⌈k⌉ order statistics land in, bound PROVEN
+    *     from the histogram before the collect; a bound past
+    *     [[MaxDriverPass2Rows]] (pathological tie-mass) DEGRADES to
+    *     the [[exactQuantiles]] chain, loud on stderr, so no input
+    *     shape can kill a shipped query.
+    *
+    * Results are BIT-IDENTICAL to [[exactQuantiles]] on the same input
+    * (QuantilesSpec pins random frames, ties, zeros, subnormals,
+    * n = 1, and the rejection cases). −0.0 is normalized to +0.0 at
+    * intake. Returns (n, p → value); n = 0 returns an empty map —
+    * callers publish NULL, matching `quantile_cont` of an empty
+    * relation. At 100 TB lower `shift` (more buckets) to keep the
+    * per-bucket row mass driver-sized — the same knob as `buckets`
+    * elsewhere. */
+  def nonNegScalarQuantiles(df: DataFrame, valCol: String,
+                            ps: Seq[Double], shift: Int = 44)
+      : (Long, Map[Double, Double]) = {
+    requireFractions(ps)
+    require(shift >= 32 && shift <= 60, s"bit-bucket shift out of [32,60]: $shift")
+    val in = df.select(nonNegV(col(valCol)).as("v"))
+      .filter(col("v").isNotNull)
+    val bkt = bitBucket(col("v"), shift)
+    val histRows = in.groupBy(bkt.as("b"))
+      .agg(count(lit(1)).as("cnt"), min(col("v")).as("mn"),
+           max(col("v")).as("mx"))
+      .collect().sortBy(_.getLong(0))                             // job 1
+    if (histRows.isEmpty) return (0L, Map.empty)
+    requireBitOrderSafe(histRows.head.getLong(0), histRows.head.getDouble(2),
+      histRows.iterator.map(_.getDouble(3)),
+      "nonNegScalarQuantiles", "exactQuantiles")
+    val plan = planBuckets(
+      histRows.map(r => (r.getLong(0), r.getLong(1))), ps, "nonNegScalarQuantiles")
+    if (plan.fetchBound > MaxDriverPass2Rows) {
+      System.err.println(s"[quantiles] nonNegScalarQuantiles: target-bucket " +
+        s"fetch ${plan.fetchBound} exceeds the driver bound $MaxDriverPass2Rows " +
+        "— degrading to exactQuantiles")
+      val rows = exactQuantiles(in.withColumn("g", lit(1)), "g", "v", ps)
+        .collect()
+      return (plan.n, rows.map(r => r.getDouble(1) -> r.getDouble(2)).toMap)
+    }
+    val fetched = in.withColumn("b", bkt)
+      .filter(col("b").isInCollection(plan.targetB))
+      .groupBy(col("b"), col("v")).agg(count(lit(1)).as("c"))
+      .collect()                                                  // job 2
+    val pairs = valuePairs(fetched, 1)(_.getLong(0))
+    (plan.n, ps.zip(plan.values(b => pairs.getOrElse(b, Array.empty),
+      "nonNegScalarQuantiles")).toMap)
+  }
+
+  /** [[nonNegScalarQuantiles]]' grouped sibling over a
+    * (group, value, count) frame (duplicate (g, v) rows sum, as in
+    * [[exactQuantilesFromCounts]] — a per-row c=1 melt is valid input):
+    * [[exactQuantilesFromCounts]] minus its stats job, for
+    * NON-NEGATIVE double values. ONE groupBy(g, bits(v) >> shift) job
+    * replaces the stats + histogram pair, and the riding per-bucket
+    * (rows, min, max) give the driver n per group, the loud
+    * negative/NaN rejection, AND the exact fetch bound (rows here =
+    * distinct values, the thing job 2 actually collects — tighter than
+    * the count-mass bound). Job 2 fetches only the target (g, bucket)
+    * cells' (v, c) rows through a broadcast-local semi-join; the result
+    * returns as a LOCAL relation, so downstream broadcast consumers
+    * build without scheduling jobs. BIT-IDENTICAL to
+    * [[exactQuantilesFromCounts]] on the same frame (QuantilesSpec).
+    * A fetch bound past [[MaxDriverPass2Rows]] DEGRADES to
+    * [[exactQuantilesFromCounts]], loud on stderr. Job 1's state is
+    * ≤ groups × 2^(64−shift) sparse cells. */
+  def nonNegQuantilesFromCounts(vc: DataFrame, groupCol: String,
+                                valCol: String, cntCol: String,
+                                ps: Seq[Double], shift: Int = 44): DataFrame = {
+    requireFractions(ps)
+    require(shift >= 32 && shift <= 60, s"bit-bucket shift out of [32,60]: $shift")
+    val session = vc.sparkSession
+    val in = vc.select(col(groupCol).as("g"), nonNegV(col(valCol)).as("v"),
+        col(cntCol).cast("long").as("c"))
+      .filter(col("v").isNotNull)
+    val bkt = bitBucket(col("v"), shift)
+    val histRows = in.groupBy(col("g"), bkt.as("b"))
+      .agg(sum(col("c")).as("cnt"), count(lit(1)).as("nv"),
+           min(col("v")).as("mn"), max(col("v")).as("mx"))
+      .collect()                                                  // job 1
+    val gType = vc.schema(groupCol).dataType
+    val schema = resultSchema(StructField(groupCol, gType))
+    if (histRows.isEmpty)
+      return session.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    val plans = histRows.groupBy(_.get(0)).toSeq.map { case (g, rows) =>
+      val sorted = rows.sortBy(_.getLong(1))
+      requireBitOrderSafe(sorted.head.getLong(1), sorted.head.getDouble(4),
+        sorted.iterator.map(_.getDouble(5)),
+        "nonNegQuantilesFromCounts", "exactQuantilesFromCounts", s" in group $g")
+      g -> planBuckets(sorted.map(r => (r.getLong(1), r.getLong(2))), ps,
+        s"nonNegQuantilesFromCounts group $g")
+    }
+    val targetCells = plans.flatMap { case (g, pl) => pl.targetB.map(b => (g, b)) }.toSet
+    // the PROVEN fetch bound counts DISTINCT values (nv) in the target
+    // cells — tighter than the row-mass bound of the raw-row paths
+    val fetchBound = histRows
+      .filter(r => targetCells((r.get(0), r.getLong(1)))).map(_.getLong(3)).sum
+    if (fetchBound > MaxDriverPass2Rows) {
+      System.err.println(s"[quantiles] nonNegQuantilesFromCounts: target-cell " +
+        s"fetch $fetchBound exceeds the driver bound $MaxDriverPass2Rows — " +
+        "degrading to exactQuantilesFromCounts")
+      return exactQuantilesFromCounts(in, "g", "v", "c", ps)
+        .withColumnRenamed("g", groupCol)
+    }
+    val targets = session.createDataFrame(
+      targetCells.toSeq.map { case (g, b) => Row(g, b) }.asJava,
+      StructType(Seq(StructField("g", gType),
+                     StructField("b", LongType, nullable = false))))
+    val fetched = in.withColumn("b", bkt)
+      .join(broadcast(targets), Seq("g", "b"))
+      .select(col("g"), col("b"), col("v"), col("c"))
+      .collect()                                                  // job 2
+    val pairs = valuePairs(fetched, 2)(r => (r.get(0), r.getLong(1)))
+    val resRows = plans.flatMap { case (g, pl) =>
+      groupRows(g, ps, pl.values(b => pairs.getOrElse((g, b), Array.empty),
+        s"nonNegQuantilesFromCounts group $g"))
+    }
+    session.createDataFrame(resRows.asJava, schema)
+  }
+
+  /** ONE-JOB exact quantiles for counts frames PROVEN driver-small at
+    * runtime: many real counts frames are bounded by DOMAIN, not data
+    * volume (q168's priority × day-range grid ≈ 20k cells at ANY SF),
+    * and for those the histogram + fetch pair is pure job-floor
+    * overhead. The cap is a SAFETY bound, not an efficiency threshold:
+    * q119's 583k-row frame (under the cap at sf0.1) measured a net LOSS
+    * on this path — 1.01 → 1.53 s, because CollectLimit's incremental
+    * partition scans plus the driver-side sort of 583k generic Rows
+    * outweigh the two ~0.1 s jobs deleted — so only domain-bounded
+    * grids take it. The collect is AT MOST [[MaxDriverPass2Rows]] + 1
+    * rows through a LIMIT (the driver is protected BEFORE the fetch);
+    * within the cap every group's pairs are sorted and planned as ONE
+    * bucket through the shared core. BIT-IDENTICAL to
+    * [[exactQuantilesFromCounts]] / [[nonNegQuantilesFromCounts]] on the
+    * same frame (QuantilesSpec); −0.0 normalizes at intake exactly as
+    * Spark's grouping would have. Past the cap returns None — callers
+    * route to the scalable histogram paths, paying one bounded ≤ 24 MB
+    * probe job for the attempt. Duplicate (group, value) rows sum, as
+    * in the siblings. */
+  def collectedQuantilesFromCounts(vc: DataFrame, groupCol: String,
+                                   valCol: String, cntCol: String,
+                                   ps: Seq[Double]): Option[DataFrame] = {
+    requireFractions(ps)
+    val in = vc.select(col(groupCol).as("g"), nonNegV(col(valCol)).as("v"),
+        col(cntCol).cast("long").as("c"))
+      .filter(col("v").isNotNull)
+    val cap = MaxDriverPass2Rows
+    val rows = in.limit((cap + 1).toInt).collect()              // the ONE job
+    if (rows.length > cap) return None
+    // sorting on the VALUE only: duplicate (g, v) rows land adjacent
+    // and the walk sums them, exactly like the siblings
+    val resRows = valuePairs(rows, 1)(_.get(0)).toSeq.flatMap { case (g, pairs) =>
+      groupRows(g, ps, sortedQuantiles(pairs, ps))
+    }
+    Some(vc.sparkSession.createDataFrame(resRows.asJava,
+      resultSchema(StructField(groupCol, vc.schema(groupCol).dataType))))
+  }
+
+  /** Quantiles of value-sorted (value, mass) pairs already on the
+    * driver (q156's weighted medians, q185's slope medians): the core
+    * planned as one bucket holding every pair. Zero total mass yields
+    * no values. */
+  private[graft] def sortedQuantiles(pairs: Array[(Double, Long)],
+                                     ps: Seq[Double]): Seq[Double] =
+    planBuckets(Array(0L -> pairs.iterator.map(_._2).sum), ps, "sorted pairs")
+      .values(_ => pairs, "sorted pairs")
+
+  // ──────────────────────────────────────────────────────────────────
+  // the driver core: one planner, one walk, one interpolation. Plain
+  // Scala over collected grid-sized aggregates — no corpus access.
+  // ──────────────────────────────────────────────────────────────────
+
+  /** One group's plan over its (bucket, mass) histogram: total n, the
+    * needed k = (n−1)·p per fraction, the mass below each bucket, the
+    * bucket every ⌊k⌋/⌈k⌉ order statistic lives in, and the mass the
+    * target buckets hold — the fetch bound, PROVEN before any collect.
+    * n ≤ 0 plans nothing: callers publish empty results, matching
+    * `quantile_cont` of an empty relation. */
+  private case class BucketPlan(n: Long, kOf: Seq[Double], below: Map[Long, Long],
+      rankBucket: Map[Long, Long], targetB: Set[Long], fetchBound: Long) {
+    /** the quantile per fraction, walking each needed rank's bucket in
+      * its value-sorted (value, mass) pairs */
+    def values(pairsOf: Long => Array[(Double, Long)], who: String): Seq[Double] = {
+      def at(rank: Long): Double = {
+        val b = rankBucket(rank)
+        walk(pairsOf(b), rank - below(b), s"$who: rank $rank")
+      }
+      kOf.map(k => interp(k, at(math.floor(k).toLong), at(math.ceil(k).toLong)))
+    }
+  }
+
+  private def planBuckets(hist: Array[(Long, Long)], ps: Seq[Double],
+                          who: String): BucketPlan = {
+    val sorted = hist.sortBy(_._1)
+    val lows = sorted.scanLeft(0L)(_ + _._2)      // lows(i): mass below bucket i
+    val n = lows.last
+    val kOf = if (n <= 0L) Nil else ps.map(p => (n - 1).toDouble * p)
+    // locate each needed rank's bucket: below ≤ rank < below + mass
+    // (absent buckets contribute nothing, exactly like the window cumsum)
+    val rankBucket = kOf.flatMap(k => Seq(math.floor(k).toLong, math.ceil(k).toLong))
+      .distinct.map { rank =>
+        val i = sorted.indices.find(i => rank >= lows(i) && rank < lows(i + 1))
+          .getOrElse(throw new IllegalStateException(
+            s"$who: rank $rank not covered by histogram"))
+        rank -> sorted(i)._1
+      }.toMap
+    val targetB = rankBucket.values.toSet
+    BucketPlan(n, kOf, sorted.iterator.map(_._1).zip(lows.iterator).toMap, rankBucket,
+      targetB, sorted.collect { case (b, c) if targetB(b) => c }.sum)
+  }
+
+  /** The order statistic at index `local` of value-sorted
+    * (value, mass) pairs. */
+  private def walk(pairs: Array[(Double, Long)], local: Long, where: => String): Double = {
+    var rest = local; var i = 0
+    while (i < pairs.length) {
+      val (v, c) = pairs(i)
+      if (rest < c) return v
+      rest -= c; i += 1
+    }
+    throw new IllegalStateException(s"$where missing from the fetched values")
+  }
+
+  /** DuckDB-exact interpolation (see object doc); `hi` is by-name so
+    * an integer k never fetches the ceil statistic. */
+  private def interp(k: Double, lo: Double, hi: => Double): Double = {
+    val fl = math.floor(k); val ce = math.ceil(k)
+    if (fl == ce) lo else lo * (ce - k) + hi * (k - fl)
+  }
+
+  /** Collected rows → per key, value-SORTED (value, mass) pairs read
+    * from columns `vAt` (a number) and `vAt + 1` (a long). */
+  private def valuePairs[K](rows: Array[Row], vAt: Int)(key: Row => K)
+      : Map[K, Array[(Double, Long)]] =
+    rows.groupBy(key).map { case (k, rs) =>
+      k -> rs.map(r => (r.getAs[Number](vAt).doubleValue, r.getLong(vAt + 1))).sortBy(_._1)
     }
 
+  // ──────────────────────────────────────────────────────────────────
+  // bucket keys and the equal-width paths' plumbing
+  // ──────────────────────────────────────────────────────────────────
+
+  /** Equal-width bucket id over [mn, mx]; constant groups (mx == mn)
+    * collapse to bucket 0. Joined-stats callers pass the mn/mx
+    * columns, literal-stats callers pass literals; both passes of a
+    * path use the same expression, so assignment is bit-identical. The
+    * arithmetic is double: `double(v)` is monotone, so bucket order and
+    * the rank walks stay correct, the cast is a no-op on double
+    * columns, and an int/long range wider than its type cannot
+    * overflow `v − mn` (which ANSI mode would raise). */
+  private def bucketOf(v: Column, mn: Column, mx: Column, buckets: Int): Column = {
+    val lo = mn.cast("double")
+    when(mx > mn,
+      least(lit(buckets - 1),
+        floor((v.cast("double") - lo) / ((mx.cast("double") - lo) / buckets))
+          .cast("int")))
+      .otherwise(lit(0))
+  }
+
+  /** −0.0-normalized double intake: numerically equal to +0.0, and
+    * grouping would fold them anyway; keeps bit order total. */
+  private def nonNegV(raw: Column): Column = {
+    val d = raw.cast("double")
+    when(d === 0.0, lit(0.0)).otherwise(d)
+  }
+
+  /** order-preserving IEEE bit-prefix bucket id
+    * ([[graft.functions.DoubleBitsExpr]], codegen'd). */
+  private def bitBucket(v: Column, shift: Int): Column =
+    shiftright(graft.functions.DoubleBits.bits(v), shift)
+
+  /** bit order is numeric order only for non-negative finite doubles —
+    * reject order-breakers LOUD from the riding per-bucket min/max
+    * (QuantilesSpec pins the rejections). Unlike the fetch bound this
+    * is caller misuse, not a data-shape surprise, so it does NOT
+    * degrade silently. */
+  private def requireBitOrderSafe(firstBucket: Long, firstMin: Double,
+      maxes: Iterator[Double], who: String, alt: String,
+      where: String = ""): Unit = {
+    require(firstBucket >= 0L && firstMin >= 0.0,
+      s"$who: negative values$where break bit-bucket order — use $alt")
+    require(maxes.forall(mx => !mx.isNaN && !mx.isInfinite),
+      s"$who: NaN/Inf values$where break bit-bucket order — use $alt")
+  }
+
+  private def requireFractions(ps: Seq[Double]): Unit =
+    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
+      s"quantile fractions must be in [0,1]: $ps")
+
+  /** value types the driver finish can order exactly through double —
+    * long and decimal values go the distributed way */
+  private def driverSafe(t: DataType): Boolean = t match {
+    case DoubleType | FloatType | IntegerType | ShortType | ByteType => true
+    case _ => false
+  }
+
+  private def resultSchema(g: StructField): StructType = StructType(Seq(
+    g, StructField("p", DoubleType, nullable = false), StructField("value", DoubleType)))
+
+  /** (g, p, value) result rows, one per distinct (p, value) */
+  private def groupRows(g: Any, ps: Seq[Double], values: Seq[Double]): Seq[Row] =
+    ps.zip(values).distinct.map { case (p, v) => Row(g, p, v) }
+
   /** Driver-side planning path: collect the grid-sized stats and
-    * histogram aggregates, locate each order statistic's bucket in
-    * plain Scala, and run ONE final distributed job whose broadcast
-    * sides are all local relations (no broadcast-build jobs). Returns
-    * None when the group count exceeds [[MaxDriverGroups]] — the one
-    * extra cost of that probe is the stats aggregation job, which the
-    * fallback would have run anyway (for the FromCounts path it is a
-    * scan of the caller's checkpointed counts frame). */
+    * histogram aggregates, plan each group through [[planBuckets]], and
+    * run ONE final job whose broadcast sides are all local relations (no
+    * broadcast-build jobs). The plans PROVE how many rows pass 2 can
+    * produce, so the collect-vs-distribute choice is made from facts
+    * already in hand: small target buckets are collected and finished
+    * here (one scan job, zero exchanges); large ones, or values a double
+    * cannot order exactly, go through the distributed [[interpolate]].
+    * Returns None when the group count exceeds `maxDriverGroups` — the
+    * one extra cost of that probe is the stats job, which the fallback
+    * would have run anyway. Groups absent from the histogram (a null
+    * group key, which the stats join drops) yield no rows, as on the
+    * distributed chain. */
   private def driverPlanned(session: SparkSession, statsDf: DataFrame,
-                            ps: Seq[Double], buckets: Int, groupCol: String,
+                            ps: Seq[Double], groupCol: String,
                             maxDriverGroups: Int)(
                             histOf: DataFrame => DataFrame,
                             pass2: (DataFrame, DataFrame) => DataFrame)
       : Option[DataFrame] = {
     val statsRows = statsDf.collect()                              // job 1
     if (statsRows.length > maxDriverGroups) return None
-    val statsSchema = statsDf.schema
-    val localStats = session.createDataFrame(statsRows.toSeq.asJava, statsSchema)
-    val histRows = histOf(localStats).collect()                    // job 2
-    // running "rows below bucket b" per group, in bucket order (absent
-    // buckets contribute nothing, exactly like the window cumsum)
-    val histByG = histRows.groupBy(_.get(0)).map { case (g, rows) =>
-      var below = 0L
-      g -> rows.sortBy(_.getInt(1)).map { r =>
-        val cnt = r.getLong(2); val lo = below; below += cnt
-        (r.getInt(1), lo, cnt)
+    val localStats = session.createDataFrame(statsRows.toSeq.asJava, statsDf.schema)
+    val plans = histOf(localStats).collect()                       // job 2
+      .groupBy(_.get(0)).toSeq.map { case (g, rows) =>
+        g -> planBuckets(rows.map(r => (r.getInt(1).toLong, r.getLong(2))), ps, s"group $g")
       }
-    }
-    val gType = statsSchema("g").dataType
-    // n ≤ 0 (possible only via a degenerate statsOpt) yields no rows for
-    // that group — mirrors the distributed chain, where its negative
-    // ranks match no bucket and drop out in the targets join
-    val needsRows = statsRows.filter(_.getAs[Number]("n").longValue > 0).flatMap { sr =>
-      val n = sr.getAs[Number]("n").longValue
-      neededRanks(n, ps).map { case (p, k, rank) => Row(sr.get(0), p, k, rank) }
-    }
-    // locate each needed rank's bucket: below <= rank < below + cnt
-    val targetRows = needsRows.map(r => (r.get(0), r.getLong(3))).distinct.map {
-      case (g, rank) =>
-        val (b, below, _) = histByG.getOrElse(g, Array.empty[(Int, Long, Long)])
-          .find { case (_, lo, cnt) => rank >= lo && rank < lo + cnt }
-          .getOrElse(throw new IllegalStateException(
-            s"rank $rank of group $g not covered by histogram — stats disagree with data"))
-        Row(g, rank, b, rank - below)
-    }
-    val targets = session.createDataFrame(targetRows.toSeq.asJava, StructType(Seq(
-      StructField("g", gType), StructField("rank", LongType, nullable = false),
-      StructField("b", IntegerType, nullable = false),
-      StructField("local", LongType, nullable = false))))
-    val targetBuckets = targets.select(col("g"), col("b")).distinct()
-    val vcDf = pass2(localStats, targetBuckets)
-    // The histogram tells the driver EXACTLY how many rows pass 2 can
-    // produce (each target bucket's cnt bounds its distinct values), so
-    // the collect-vs-distribute choice is made from facts already in
-    // hand, not a guess: small target buckets → collect them and finish
-    // ranking + interpolation here (one scan job, zero exchanges);
-    // large → the distributed window path. Long/decimal values skip the
-    // driver finish (their ordering must not round-trip through double).
-    val pass2Bound = targetRows.map(r => (r.get(0), r.getInt(2))).distinct.map {
-      case (g, b) => histByG(g).collectFirst { case (`b`, _, cnt) => cnt }.getOrElse(0L)
-    }.sum
-    val driverSafeValues = vcDf.schema("v").dataType match {
-      case DoubleType | FloatType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    if (driverSafeValues && pass2Bound <= MaxDriverPass2Rows) {
-      val byGB = vcDf.collect()                                    // job 3
-        .groupBy(r => (r.get(0), r.getInt(1)))
-        .map { case (k, rows) =>
-          k -> rows.map(r => (r.getAs[Number](2).doubleValue, r.getLong(3)))
-                   .sortBy(_._1)
-        }
-      val statValue = targetRows.map { t =>
-        val key = (t.get(0), t.getInt(2)); val local = t.getLong(3)
-        val vals = byGB.getOrElse(key, Array.empty[(Double, Long)])
-        var below = 0L; var i = 0; var found: Option[Double] = None
-        while (found.isEmpty && i < vals.length) {
-          val (v, c) = vals(i)
-          if (local >= below && local < below + c) found = Some(v)
-          below += c; i += 1
-        }
-        (t.get(0), t.getLong(1)) -> found.getOrElse(
-          throw new IllegalStateException(
-            s"order statistic ${t.getLong(1)} of group ${t.get(0)} missing from pass 2"))
-      }.toMap
-      // interpolate with the same IEEE arithmetic the Catalyst
-      // expression uses (see object doc) — plain JVM doubles either way
-      val resRows = needsRows.map(r => (r.get(0), r.getDouble(1), r.getDouble(2)))
-        .distinct.map { case (g, p, k) =>
-          val fl = math.floor(k); val ce = math.ceil(k)
-          val lo = statValue((g, fl.toLong))
-          val v = if (fl == ce) lo
-                  else lo * (ce - k) + statValue((g, ce.toLong)) * (k - fl)
-          Row(g, p, v)
-        }
-      Some(session.createDataFrame(resRows.toSeq.asJava, StructType(Seq(
-        StructField(groupCol, gType), StructField("p", DoubleType, nullable = false),
-        StructField("value", DoubleType)))))
+    val gType = statsDf.schema("g").dataType
+    val targets = session.createDataFrame(plans.flatMap { case (g, pl) =>
+        pl.rankBucket.map { case (rank, b) => Row(g, rank, b.toInt, rank - pl.below(b)) }
+      }.asJava, StructType(Seq(
+        StructField("g", gType), StructField("rank", LongType, nullable = false),
+        StructField("b", IntegerType, nullable = false),
+        StructField("local", LongType, nullable = false))))
+    val vcDf = pass2(localStats, targets.select(col("g"), col("b")).distinct())
+    if (driverSafe(vcDf.schema("v").dataType) &&
+        plans.map(_._2.fetchBound).sum <= MaxDriverPass2Rows) {
+      val pairs = valuePairs(vcDf.collect(), 2)(r => (r.get(0), r.getInt(1).toLong)) // job 3
+      val resRows = plans.flatMap { case (g, pl) =>
+        groupRows(g, ps, pl.values(b => pairs.getOrElse((g, b), Array.empty), s"group $g"))
+      }
+      Some(session.createDataFrame(resRows.asJava, resultSchema(StructField(groupCol, gType))))
     } else {
-      val needs = session.createDataFrame(needsRows.toSeq.asJava, StructType(Seq(
+      val needs = plans.flatMap { case (g, pl) =>
+        ps.zip(pl.kOf).flatMap { case (p, k) =>
+          Seq(Row(g, p, k, math.floor(k).toLong), Row(g, p, k, math.ceil(k).toLong))
+        }
+      }
+      Some(interpolate(session.createDataFrame(needs.asJava, StructType(Seq(
         StructField("g", gType), StructField("p", DoubleType, nullable = false),
         StructField("k", DoubleType, nullable = false),
-        StructField("rank", LongType, nullable = false))))
-      Some(interpolate(needs, targets, vcDf, groupCol))
+        StructField("rank", LongType, nullable = false)))), targets, vcDf, groupCol))
     }
   }
 
@@ -518,496 +742,14 @@ object Quantiles {
           .as("value"))
   }
 
-  /** Exact quantile EDGES of `valCol` plus per-edge-bin
-    * (count, flag-count) tallies — the q196 bit-replicate recipe
-    * applied to the quantile-cut-then-bin shape (q157 WOE, q175 gains;
-    * VERDICT r13 #3): those queries paid the quantile operator's three
-    * jobs PLUS a fourth corpus binning aggregate, but the bin tallies
-    * are per-bucket aggregate state, so they ride the quantile's own
-    * passes for free. THREE corpus jobs total:
-    *
-    *  1. stats — (n, min, max); bin flag totals come entirely from
-    *     the histogram and fetch passes below (ADVICE r14: an earlier
-    *     flag-total rider here was never read and is gone);
-    *  2. histogram — per-bucket (count, flag-count);
-    *  3. target-bucket fetch — per distinct value (count, flag-count)
-    *     for only the buckets the edge order-statistics live in
-    *     (bound PROVEN from the histogram before the collect, the
-    *     [[exactQuantileBitReplicates]] discipline).
-    *
-    * Binning (bin(v) = Σ_p [v > qₚ], the branch-free comparison chain
-    * the callers compiled to Catalyst) then needs NO corpus pass: an
-    * edge is either an order statistic itself or interpolated STRICTLY
-    * between two consecutive ones, so it can only fall inside a target
-    * bucket or an EMPTY bucket — every non-target bucket's rows land in
-    * one bin, decided from bucket ids alone (equal-width buckets are
-    * monotone in v), and only the fetched values compare per-value with
-    * the same IEEE `v > qₚ` the Catalyst chain used. Interpolation is
-    * the object-doc DuckDB-exact arithmetic; results are bit-identical
-    * to exactQuantiles + a binning aggregate (QuantilesSpec pins it).
-    *
-    * Returns (edges in `ps` order, per-bin (n, nFlag) arrays of length
-    * ps.size + 1). Null values are excluded from edges AND tallies
-    * (callers pass non-null measures). When the proven fetch bound
-    * exceeds [[MaxDriverPass2Rows]] (a pathological distribution where
-    * ~every row shares the edge buckets) the call DEGRADES instead of
-    * dying (ADVICE r15): [[edgeBinnedFallback]] computes the edges
-    * through the never-throwing [[exactQuantiles]] chain and pays one
-    * extra corpus binning aggregate, loud on stderr.
-    * Scale: jobs 1-2 are map + grid aggregates; job 3 collects ≈
-    * |target buckets|·n/B distinct values — at 100 TB raise `buckets`
-    * so n/B stays driver-sized, same as every driver-planned path. */
-  def edgeBinnedCounts(df: DataFrame, valCol: String, flagCol: String,
-                       ps: Seq[Double], buckets: Int = 1024)
-      : (Seq[Double], Array[Long], Array[Long]) = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"quantile fractions must be in [0,1]: $ps")
-    val in = df.select(col(valCol).as("v"), col(flagCol).as("f"))
-      .filter(col("v").isNotNull)
-    val st = in.agg(count(lit(1)).as("n"), min(col("v")).as("mn"),
-                    max(col("v")).as("mx")).head()              // job 1
-    val n = st.getLong(0)
-    require(n > 0, "edgeBinnedCounts: empty input")
-    val mn = st.getAs[Number]("mn").doubleValue
-    val mx = st.getAs[Number]("mx").doubleValue
-    val bExpr =
-      if (mx > mn)
-        least(lit(buckets - 1),
-          floor((col("v") - lit(mn)) / ((lit(mx) - lit(mn)) / buckets))
-            .cast("int"))
-      else lit(0)
-    val hist = in.groupBy(bExpr.as("b"))
-      .agg(count(lit(1)).as("c"), count(when(col("f"), 1)).as("nf"))
-      .collect().sortBy(_.getInt(0))                            // job 2
-    val below = {
-      var run = 0L
-      hist.map { r => val lo = run; run += r.getLong(1); r.getInt(0) -> lo }.toMap
-    }
-    def bucketOfRank(rank: Long): Int =
-      hist.find { r => val lo = below(r.getInt(0))
-        rank >= lo && rank < lo + r.getLong(1) }
-        .getOrElse(throw new IllegalStateException(
-          s"edgeBinnedCounts: rank $rank not covered by histogram")).getInt(0)
-    val kOf = ps.map(p => (n - 1).toDouble * p)
-    val rankBuckets = kOf.flatMap(k =>
-      Seq(math.floor(k).toLong, math.ceil(k).toLong)).distinct
-      .map(r => r -> bucketOfRank(r)).toMap
-    val targetB = rankBuckets.values.toSet
-    val fetchBound = hist.filter(r => targetB(r.getInt(0))).map(_.getLong(1)).sum
-    if (fetchBound > MaxDriverPass2Rows) {
-      System.err.println(s"[quantiles] edgeBinnedCounts: target-bucket fetch " +
-        s"$fetchBound exceeds the driver bound $MaxDriverPass2Rows — " +
-        "degrading to the quantiles-then-bin path")
-      return edgeBinnedFallback(in, ps)
-    }
-    val fetched = in.withColumn("b", bExpr)
-      .filter(col("b").isInCollection(targetB))
-      .groupBy(col("b"), col("v"))
-      .agg(count(lit(1)).as("c"), count(when(col("f"), 1)).as("nf"))
-      .collect()                                                // job 3
-    val byB = fetched.groupBy(_.getInt(0)).map { case (b, rows) =>
-      b -> rows.map(r => (r.getAs[Number](1).doubleValue, r.getLong(2), r.getLong(3)))
-        .sortBy(_._1)
-    }
-    def valueAt(rank: Long): Double = {
-      val b = rankBuckets(rank)
-      var local = rank - below(b)
-      val vals = byB.getOrElse(b, Array.empty[(Double, Long, Long)])
-      var i = 0
-      while (i < vals.length) {
-        if (local < vals(i)._2) return vals(i)._1
-        local -= vals(i)._2; i += 1
-      }
-      throw new IllegalStateException(
-        s"edgeBinnedCounts: rank $rank missing from fetch")
-    }
-    val edges = kOf.map { k =>
-      val fl = math.floor(k); val ce = math.ceil(k)
-      val lo = valueAt(fl.toLong)
-      if (fl == ce) lo else lo * (ce - k) + valueAt(ce.toLong) * (k - fl)
-    }
-    val edgeUpperB = kOf.map(k => rankBuckets(math.ceil(k).toLong))
-    val cnt = new Array[Long](ps.size + 1)
-    val flag = new Array[Long](ps.size + 1)
-    hist.iterator.filterNot(r => targetB(r.getInt(0))).foreach { r =>
-      val bin = edgeUpperB.count(ub => r.getInt(0) > ub)
-      cnt(bin) += r.getLong(1); flag(bin) += r.getLong(2)
-    }
-    fetched.foreach { r =>
-      val v = r.getAs[Number](1).doubleValue
-      val bin = edges.count(q => v > q)
-      cnt(bin) += r.getLong(2); flag(bin) += r.getLong(3)
-    }
-    (edges, cnt, flag)
-  }
-
-  /** [[edgeBinnedCounts]] minus its stats job, for NON-NEGATIVE double
-    * values — the bit-prefix histogram (see [[nonNegScalarQuantiles]])
-    * needs no (mn, mx), so the quantile-cut-then-bin shape costs TWO
-    * corpus jobs (q157/q175, round 15):
-    *
-    *  1. bit-bucket histogram — per-bucket (count, flag-count, min,
-    *     max); n rides along, the stats pass is GONE, and the riding
-    *     min/max reject order-breaking inputs (negatives, NaN/Inf)
-    *     loud;
-    *  2. target-bucket fetch — per distinct value (count, flag-count),
-    *     bound proven from the histogram before the collect.
-    *
-    * The binning argument transfers VERBATIM from [[edgeBinnedCounts]]:
-    * bit-prefix buckets are monotone in v exactly like equal-width
-    * buckets (that is the whole point of the bit order), so non-target
-    * buckets still land in one bin decided from bucket ids alone, and
-    * only fetched values pay the per-value IEEE `v > qₚ`. Results are
-    * bit-identical to [[edgeBinnedCounts]] on the same input
-    * (QuantilesSpec pins edges, bins, AND flag tallies). A fetch bound
-    * past [[MaxDriverPass2Rows]] DEGRADES to [[edgeBinnedFallback]]
-    * loud on stderr (ADVICE r15 — shipped queries must not die on
-    * tie-massed data); same −0.0 normalization as the siblings.
-    * Planner core shared across the nonNeg* trio ([[planBitBuckets]],
-    * round 16 — VERDICT r15 #5). */
-  def nonNegEdgeBinnedCounts(df: DataFrame, valCol: String, flagCol: String,
-                             ps: Seq[Double], shift: Int = 44)
-      : (Seq[Double], Array[Long], Array[Long]) = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"quantile fractions must be in [0,1]: $ps")
-    require(shift >= 32 && shift <= 60, s"bit-bucket shift out of [32,60]: $shift")
-    val in = df.select(nonNegV(col(valCol)).as("v"), col(flagCol).as("f"))
-      .filter(col("v").isNotNull)
-    val bkt = bitBucket(col("v"), shift)
-    val hist = in.groupBy(bkt.as("b"))
-      .agg(count(lit(1)).as("cnt"), count(when(col("f"), 1)).as("nf"),
-           min(col("v")).as("mn"), max(col("v")).as("mx"))
-      .collect().sortBy(_.getLong(0))                             // job 1
-    require(hist.nonEmpty, "nonNegEdgeBinnedCounts: empty input")
-    requireBitOrderSafe(hist.head.getLong(0), hist.head.getDouble(3),
-      hist.iterator.map(_.getDouble(4)),
-      "nonNegEdgeBinnedCounts", "edgeBinnedCounts")
-    val plan = planBitBuckets(
-      hist.map(r => (r.getLong(0), r.getLong(1))), ps, "nonNegEdgeBinnedCounts")
-    if (plan.fetchBound > MaxDriverPass2Rows) {
-      System.err.println(s"[quantiles] nonNegEdgeBinnedCounts: target-bucket " +
-        s"fetch ${plan.fetchBound} exceeds the driver bound $MaxDriverPass2Rows " +
-        "— degrading to the quantiles-then-bin path")
-      return edgeBinnedFallback(in, ps)
-    }
-    val fetched = in.withColumn("b", bkt)
-      .filter(col("b").isInCollection(plan.targetB))
-      .groupBy(col("b"), col("v"))
-      .agg(count(lit(1)).as("c"), count(when(col("f"), 1)).as("nf"))
-      .collect()                                                  // job 2
-    val byB = hist2pairs(fetched)
-    def valueAt(rank: Long): Double = {
-      val b = plan.rankBucket(rank)
-      walkValue(byB.getOrElse(b, Array.empty), rank - plan.below(b),
-        "nonNegEdgeBinnedCounts", rank)
-    }
-    val edges = plan.kOf.map(k =>
-      interp(k, valueAt(math.floor(k).toLong), valueAt(math.ceil(k).toLong)))
-    val edgeUpperB = plan.kOf.map(k => plan.rankBucket(math.ceil(k).toLong))
-    val cnt = new Array[Long](ps.size + 1)
-    val flag = new Array[Long](ps.size + 1)
-    hist.iterator.filterNot(r => plan.targetB(r.getLong(0))).foreach { r =>
-      val bin = edgeUpperB.count(ub => r.getLong(0) > ub)
-      cnt(bin) += r.getLong(1); flag(bin) += r.getLong(2)
-    }
-    fetched.foreach { r =>
-      val v = r.getDouble(1)
-      val bin = edges.count(q => v > q)
-      cnt(bin) += r.getLong(2); flag(bin) += r.getLong(3)
-    }
-    (edges, cnt, flag)
-  }
-
-  /** Single-group EXACT interpolated quantiles of a NON-NEGATIVE
-    * double column in TWO corpus passes with NO prior stats pass —
-    * q188's floor shave (VERDICT r14 #3: the conformal chain is
-    * job-floor-bound and strictly serial, so the win is deleting a
-    * link, not overlapping two). [[exactQuantiles]]' equal-width
-    * histogram needs (mn, mx) before it can bin, forcing the serial
-    * stats → histogram dependency; for non-negative IEEE doubles the
-    * RAW BIT PATTERN is order-preserving under signed-long comparison
-    * ([[graft.functions.DoubleBitsExpr]]), so a histogram keyed by
-    * `doubleToRawLongBits(v) >> shift` needs no stats at all — bucket
-    * ids are monotone in v by construction. Jobs:
-    *
-    *  1. bit-prefix histogram — groupBy(bits(v) >> shift) with
-    *     (cnt, min, max) per bucket; the id domain is ≤ 2^(64−shift)
-    *     (default shift 44 → ≤ 2^20, and SPARSE: only the exponent ×
-    *     8-mantissa-bit cells the data populates — a few hundred in
-    *     practice). n = Σ cnt rides along, so the separate
-    *     (n, mn, mx) job is GONE; the riding per-bucket min/max cost
-    *     nothing extra and let the driver REJECT inputs that would
-    *     break bit order (negatives, NaN, ±Inf) after the fact, loud.
-    *  2. target-bucket fetch — per-distinct-value counts for only the
-    *     buckets the ⌊k⌋/⌈k⌉ order statistics land in, bound PROVEN
-    *     from the histogram before the collect (the established
-    *     driver-planned discipline); a bound past
-    *     [[MaxDriverPass2Rows]] (pathological tie-mass) DEGRADES to
-    *     the [[exactQuantiles]] chain automatically, loud on stderr
-    *     (ADVICE r15) — that chain's own bound decides driver-finish
-    *     vs fully distributed ranking, so no input shape can kill a
-    *     shipped query.
-    *
-    * Ranking + interpolation run on the driver with the object-doc
-    * DuckDB-exact arithmetic; results are BIT-IDENTICAL to
-    * [[exactQuantiles]] on the same input (QuantilesSpec pins random
-    * frames, ties, zeros, subnormals, n = 1, and the rejection cases).
-    * −0.0 is normalized to +0.0 at intake (numerically equal, and
-    * grouping would fold them anyway; keeps bit order total). Returns
-    * (n, p → value); n = 0 returns an empty map — quantile over zero
-    * rows is undefined and callers publish NULL, matching
-    * `quantile_cont` of an empty relation.
-    * Scale: both jobs are map-side-combined aggregates over the
-    * corpus; driver state is the sparse histogram plus the proven
-    * fetch. At 100 TB lower `shift` (more buckets) to keep the
-    * per-bucket row mass driver-sized — same knob as `buckets`
-    * elsewhere. */
-  def nonNegScalarQuantiles(df: DataFrame, valCol: String,
-                            ps: Seq[Double], shift: Int = 44)
-      : (Long, Map[Double, Double]) = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"quantile fractions must be in [0,1]: $ps")
-    require(shift >= 32 && shift <= 60, s"bit-bucket shift out of [32,60]: $shift")
-    val in = df.select(nonNegV(col(valCol)).as("v"))
-      .filter(col("v").isNotNull)
-    val bkt = bitBucket(col("v"), shift)
-    val histRows = in.groupBy(bkt.as("b"))
-      .agg(count(lit(1)).as("cnt"), min(col("v")).as("mn"),
-           max(col("v")).as("mx"))
-      .collect().sortBy(_.getLong(0))                             // job 1
-    if (histRows.isEmpty) return (0L, Map.empty)
-    requireBitOrderSafe(histRows.head.getLong(0), histRows.head.getDouble(2),
-      histRows.iterator.map(_.getDouble(3)),
-      "nonNegScalarQuantiles", "exactQuantiles")
-    val plan = planBitBuckets(
-      histRows.map(r => (r.getLong(0), r.getLong(1))), ps,
-      "nonNegScalarQuantiles")
-    if (plan.fetchBound > MaxDriverPass2Rows) {
-      System.err.println(s"[quantiles] nonNegScalarQuantiles: target-bucket " +
-        s"fetch ${plan.fetchBound} exceeds the driver bound $MaxDriverPass2Rows " +
-        "— degrading to exactQuantiles")
-      val rows = exactQuantiles(in.withColumn("g", lit(1)), "g", "v", ps)
-        .collect()
-      return (plan.n, rows.map(r => r.getDouble(1) -> r.getDouble(2)).toMap)
-    }
-    val fetched = in.withColumn("b", bkt)
-      .filter(col("b").isInCollection(plan.targetB))
-      .groupBy(col("b"), col("v")).agg(count(lit(1)).as("c"))
-      .collect()                                                  // job 2
-    val byB = hist2pairs(fetched)
-    def valueAtRank(rank: Long): Double = {
-      val b = plan.rankBucket(rank)
-      walkValue(byB.getOrElse(b, Array.empty), rank - plan.below(b),
-        "nonNegScalarQuantiles", rank)
-    }
-    val res = ps.zip(plan.kOf).distinct.map { case (p, k) =>
-      p -> interp(k, valueAtRank(math.floor(k).toLong),
-                     valueAtRank(math.ceil(k).toLong))
-    }.toMap
-    (plan.n, res)
-  }
-
-  /** [[nonNegScalarQuantiles]]' grouped sibling over a
-    * (group, value, count) frame (duplicate (g, v) rows sum, as in
-    * [[exactQuantilesFromCounts]] — a per-row c=1 melt is valid
-    * input) — [[exactQuantilesFromCounts]] minus
-    * its stats job, for NON-NEGATIVE double values (q119's floor
-    * shave, round 15): the bit-prefix histogram needs no (mn, mx), so
-    * ONE groupBy(g, bits(v) >> shift) job replaces the stats +
-    * histogram pair, and the riding per-bucket (rows, min, max) give
-    * the driver n per group, the loud negative/NaN rejection, AND the
-    * exact fetch bound (rows here = distinct values, the thing job 2
-    * actually collects — tighter than the count-mass bound). Job 2
-    * fetches only the target (g, bucket) cells' (v, c) rows through a
-    * broadcast-local semi-join. Ranking + interpolation run on the
-    * driver with the object-doc DuckDB-exact arithmetic; the result
-    * (group, p, value) returns as a LOCAL relation, so downstream
-    * broadcast consumers build without scheduling jobs. BIT-IDENTICAL
-    * to [[exactQuantilesFromCounts]] on the same frame (QuantilesSpec
-    * pins weighted/tied/multi-group generated frames). −0.0 normalizes
-    * to +0.0 at intake; groups arrive only via the frame, so an empty
-    * group simply has no output rows — same as the derived-stats path.
-    * A fetch bound past [[MaxDriverPass2Rows]] DEGRADES to
-    * [[exactQuantilesFromCounts]] automatically, loud on stderr
-    * (ADVICE r15). Scale: job 1's state is ≤ groups × 2^(64−shift)
-    * sparse cells; job 2's collect is PROVEN bounded before it runs.
-    * Lower `shift` at larger value mass, as everywhere. */
-  def nonNegQuantilesFromCounts(vc: DataFrame, groupCol: String,
-                                valCol: String, cntCol: String,
-                                ps: Seq[Double], shift: Int = 44): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"quantile fractions must be in [0,1]: $ps")
-    require(shift >= 32 && shift <= 60, s"bit-bucket shift out of [32,60]: $shift")
-    val session = vc.sparkSession
-    val in = vc.select(col(groupCol).as("g"), nonNegV(col(valCol)).as("v"),
-        col(cntCol).cast("long").as("c"))
-      .filter(col("v").isNotNull)
-    val bkt = bitBucket(col("v"), shift)
-    val histRows = in.groupBy(col("g"), bkt.as("b"))
-      .agg(sum(col("c")).as("cnt"), count(lit(1)).as("nv"),
-           min(col("v")).as("mn"), max(col("v")).as("mx"))
-      .collect()                                                  // job 1
-    val gType = vc.schema(groupCol).dataType
-    val outSchema = StructType(Seq(
-      StructField(groupCol, gType),
-      StructField("p", DoubleType, nullable = false),
-      StructField("value", DoubleType)))
-    if (histRows.isEmpty)
-      return session.createDataFrame(
-        java.util.Collections.emptyList[Row](), outSchema)
-    val byG = histRows.groupBy(_.get(0)).map { case (g, rows) =>
-      g -> rows.sortBy(_.getLong(1))
-    }
-    byG.foreach { case (g, rows) =>
-      requireBitOrderSafe(rows.head.getLong(1), rows.head.getDouble(4),
-        rows.iterator.map(_.getDouble(5)),
-        "nonNegQuantilesFromCounts", "exactQuantilesFromCounts",
-        s" in group $g")
-    }
-    val plans = byG.map { case (g, rows) =>
-      g -> planBitBuckets(rows.map(r => (r.getLong(1), r.getLong(2))), ps,
-        s"nonNegQuantilesFromCounts group $g")
-    }
-    // .toSeq first: flatMap on a Map with tuple results would rebuild
-    // a Map KEYED BY GROUP and silently keep one target bucket per
-    // group (the spec caught exactly this)
-    val targetCells = plans.toSeq.flatMap { case (g, pl) =>
-      pl.targetB.map(b => (g, b)) }.toSet
-    // the PROVEN fetch bound counts DISTINCT values (nv) in the target
-    // cells — tighter than the row-mass bound of the raw-row paths
-    val fetchBound = histRows
-      .filter(r => targetCells((r.get(0), r.getLong(1)))).map(_.getLong(3)).sum
-    if (fetchBound > MaxDriverPass2Rows) {
-      System.err.println(s"[quantiles] nonNegQuantilesFromCounts: target-cell " +
-        s"fetch $fetchBound exceeds the driver bound $MaxDriverPass2Rows — " +
-        "degrading to exactQuantilesFromCounts")
-      return exactQuantilesFromCounts(in, "g", "v", "c", ps)
-        .withColumnRenamed("g", groupCol)
-    }
-    val targets = session.createDataFrame(
-      targetCells.toSeq.map { case (g, b) => Row(g, b) }.asJava,
-      StructType(Seq(StructField("g", gType),
-                     StructField("b", LongType, nullable = false))))
-    val fetched = in.withColumn("b", bkt)
-      .join(broadcast(targets), Seq("g", "b"))
-      .select(col("g"), col("b"), col("v"), col("c"))
-      .collect()                                                  // job 2
-    val valsByGB = fetched.groupBy(r => (r.get(0), r.getLong(1)))
-      .map { case (k, rows) =>
-        k -> rows.map(r => (r.getDouble(2), r.getLong(3))).sortBy(_._1) }
-    val resRows = plans.toSeq.flatMap { case (g, pl) =>
-      def valueAtRank(rank: Long): Double = {
-        val b = pl.rankBucket(rank)
-        walkValue(valsByGB.getOrElse((g, b), Array.empty),
-          rank - pl.below(b), s"nonNegQuantilesFromCounts group $g", rank)
-      }
-      ps.zip(pl.kOf).distinct.map { case (p, k) =>
-        Row(g, p, interp(k, valueAtRank(math.floor(k).toLong),
-                            valueAtRank(math.ceil(k).toLong)))
-      }
-    }
-    session.createDataFrame(resRows.asJava, outSchema)
-  }
-
-  // ──────────────────────────────────────────────────────────────────
-  // shared bit-bucket core (VERDICT r15 #5): ONE planner the scalar /
-  // grouped / edge-binned nonNeg* entries all drive. Plain driver-side
-  // Scala over collected grid-sized aggregates — no corpus access.
-  // ──────────────────────────────────────────────────────────────────
-
-  /** −0.0-normalized double intake: numerically equal to +0.0, and
-    * grouping would fold them anyway; keeps bit order total. */
-  private def nonNegV(raw: Column): Column = {
-    val d = raw.cast("double")
-    when(d === 0.0, lit(0.0)).otherwise(d)
-  }
-
-  /** order-preserving IEEE bit-prefix bucket id
-    * ([[graft.functions.DoubleBitsExpr]], codegen'd). */
-  private def bitBucket(v: Column, shift: Int): Column =
-    shiftright(graft.functions.DoubleBits.bits(v), shift)
-
-  /** bit order is numeric order only for non-negative finite doubles —
-    * reject order-breakers LOUD from the riding per-bucket min/max
-    * (QuantilesSpec pins the rejections). Unlike the fetch bound this
-    * is caller misuse, not a data-shape surprise, so it does NOT
-    * degrade silently. */
-  private def requireBitOrderSafe(firstBucket: Long, firstMin: Double,
-      maxes: Iterator[Double], who: String, alt: String,
-      where: String = ""): Unit = {
-    require(firstBucket >= 0L && firstMin >= 0.0,
-      s"$who: negative values$where break bit-bucket order — use $alt")
-    require(maxes.forall(mx => !mx.isNaN && !mx.isInfinite),
-      s"$who: NaN/Inf values$where break bit-bucket order — use $alt")
-  }
-
-  /** Single-group driver plan over a collected bit-bucket histogram —
-    * (bucket, row-mass) pairs SORTED by bucket id: total n, the needed
-    * k = (n−1)·p per fraction, cumulative mass below each bucket, the
-    * bucket every ⌊k⌋/⌈k⌉ order statistic lives in, and the row-mass
-    * fetch bound over the target buckets (PROVEN before any collect —
-    * the established driver-planned discipline). n = 0 plans nothing:
-    * callers publish empty results, matching `quantile_cont` of an
-    * empty relation. */
-  private case class BitPlan(n: Long, kOf: Seq[Double],
-      below: Map[Long, Long], rankBucket: Map[Long, Long],
-      targetB: Set[Long], fetchBound: Long)
-
-  private def planBitBuckets(bc: Array[(Long, Long)], ps: Seq[Double],
-                             who: String): BitPlan = {
-    var run = 0L
-    val below = bc.map { case (b, c) => val lo = run; run += c; b -> lo }.toMap
-    val n = run
-    if (n == 0L)
-      return BitPlan(0L, Nil, below, Map.empty, Set.empty, 0L)
-    def bucketOfRank(rank: Long): Long =
-      bc.find { case (b, c) => val lo = below(b); rank >= lo && rank < lo + c }
-        .getOrElse(throw new IllegalStateException(
-          s"$who: rank $rank not covered by histogram"))._1
-    val kOf = ps.map(p => (n - 1).toDouble * p)
-    val rankBucket = kOf.flatMap(k =>
-        Seq(math.floor(k).toLong, math.ceil(k).toLong)).distinct
-      .map(r => r -> bucketOfRank(r)).toMap
-    val targetB = rankBucket.values.toSet
-    val fetchBound = bc.collect { case (b, c) if targetB(b) => c }.sum
-    BitPlan(n, kOf, below, rankBucket, targetB, fetchBound)
-  }
-
-  /** collected fetch rows (b: long, v: double, c: long, ...) → per
-    * bucket, value-SORTED (v, c) pairs for the rank walk. */
-  private def hist2pairs(fetched: Array[Row]): Map[Long, Array[(Double, Long)]] =
-    fetched.groupBy(_.getLong(0)).map { case (b, rows) =>
-      b -> rows.map(r => (r.getDouble(1), r.getLong(2))).sortBy(_._1)
-    }
-
-  /** walk a bucket's SORTED (value, row-mass) pairs to the order
-    * statistic at LOCAL index `local0` within the bucket. */
-  private def walkValue(vals: Array[(Double, Long)], local0: Long,
-                        who: String, rank: Long): Double = {
-    var local = local0; var i = 0
-    while (i < vals.length) {
-      val (v, c) = vals(i)
-      if (local < c) return v
-      local -= c; i += 1
-    }
-    throw new IllegalStateException(s"$who: rank $rank missing from fetch")
-  }
-
-  /** DuckDB-exact interpolation (see object doc); `hi` is by-name so
-    * an integer k never fetches the ceil statistic. */
-  private def interp(k: Double, lo: Double, hi: => Double): Double = {
-    val fl = math.floor(k); val ce = math.ceil(k)
-    if (fl == ce) lo else lo * (ce - k) + hi * (k - fl)
-  }
-
   /** Degraded edge-binned path for fetch bounds past
-    * [[MaxDriverPass2Rows]] (ADVICE r15 — degrade, don't die): edges
-    * through the never-throwing [[exactQuantiles]] chain (whose own
-    * bound decides driver-finish vs distributed window ranking), then
-    * ONE corpus binning aggregate applying the same IEEE `v > qₚ`
-    * literal comparison chain the fused paths apply per fetched value
-    * — the pre-fusion q157 shape: correct on any tie mass, two extra
-    * jobs. `in` is the caller's normalized non-null (v, f) frame. */
+    * [[MaxDriverPass2Rows]] (degrade, don't die): edges through the
+    * never-throwing [[exactQuantiles]] chain (whose own bound decides
+    * driver-finish vs distributed window ranking), then ONE corpus
+    * binning aggregate applying the same IEEE `v > qₚ` literal
+    * comparison chain the fused path applies per fetched value —
+    * correct on any tie mass, two extra jobs. `in` is the caller's
+    * normalized non-null (v, f) frame. */
   private def edgeBinnedFallback(in: DataFrame, ps: Seq[Double])
       : (Seq[Double], Array[Long], Array[Long]) = {
     val qs = exactQuantiles(in.select(lit(1).as("g"), col("v")), "g", "v", ps)
@@ -1023,71 +765,5 @@ object Quantiles {
     binned.foreach { r =>
       cnt(r.getInt(0)) += r.getLong(1); flag(r.getInt(0)) += r.getLong(2) }
     (edges, cnt, flag)
-  }
-
-  /** ONE-JOB exact quantiles for counts frames PROVEN driver-small at
-    * runtime (round 16): the histogram-refinement machinery exists to
-    * avoid collecting a large frame, but many real counts frames are
-    * bounded by DOMAIN, not data volume (q168's priority ×
-    * day-range grid) — for those, the hist + fetch pair is
-    * pure job-floor overhead. The cap is a SAFETY bound, not an
-    * efficiency threshold: q119's 583k-row frame (under the cap at
-    * sf0.1) measured a net LOSS on this path — 1.01 → 1.53 s, because
-    * CollectLimit's incremental partition scans plus the driver-side
-    * sort of 583k generic Rows outweigh the two ~0.1 s jobs deleted —
-    * so q119 stays on the bit-bucket histogram path and only
-    * domain-bounded grids (q168's priority × day-range ≈ 20k cells at
-    * ANY SF) take this one. This
-    * path collects AT MOST [[MaxDriverPass2Rows]] + 1 rows through a
-    * LIMIT (the driver is protected BEFORE the fetch, the established
-    * discipline), and within the cap computes every group's order
-    * statistics by direct sort + cumulative walk — no bucketing at
-    * all — with the object-doc DuckDB-exact interpolation.
-    * BIT-IDENTICAL to [[exactQuantilesFromCounts]] /
-    * [[nonNegQuantilesFromCounts]] on the same frame (QuantilesSpec
-    * pins it): same multiset, same ranks, same arithmetic; −0.0
-    * normalizes at intake exactly as Spark's grouping would have.
-    * Past the cap returns None — callers route to the scalable
-    * histogram paths (whose own bounds stay proven), paying one
-    * bounded ≤ 24 MB probe job for the attempt; a caller whose value
-    * domain grows with the corpus (continuous doubles at 100 TB)
-    * takes that branch automatically. Duplicate (group, value) rows
-    * sum, as in the siblings. */
-  def collectedQuantilesFromCounts(vc: DataFrame, groupCol: String,
-                                   valCol: String, cntCol: String,
-                                   ps: Seq[Double]): Option[DataFrame] = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"quantile fractions must be in [0,1]: $ps")
-    val session = vc.sparkSession
-    val vRaw = col(valCol).cast("double")
-    val in = vc.select(col(groupCol).as("g"),
-        when(vRaw === 0.0, lit(0.0)).otherwise(vRaw).as("v"),
-        col(cntCol).cast("long").as("c"))
-      .filter(col("v").isNotNull)
-    val cap = MaxDriverPass2Rows
-    val rows = in.limit((cap + 1).toInt).collect()              // the ONE job
-    if (rows.length > cap) return None
-    val gType = vc.schema(groupCol).dataType
-    val outSchema = StructType(Seq(
-      StructField(groupCol, gType),
-      StructField("p", DoubleType, nullable = false),
-      StructField("value", DoubleType)))
-    val resRows = rows.groupBy(_.get(0)).toSeq.flatMap { case (g, rs) =>
-      // sortBy on the VALUE only: duplicate (g, v) rows land adjacent
-      // and the cumulative walk sums them, exactly like the siblings
-      val vals = rs.map(r => (r.getDouble(1), r.getLong(2))).sortBy(_._1)
-      val n = vals.map(_._2).sum
-      if (n <= 0L) Nil
-      else {
-        def valueAtRank(rank: Long): Double =
-          walkValue(vals, rank, s"collectedQuantilesFromCounts group $g", rank)
-        val kOf = ps.map(p => (n - 1).toDouble * p)
-        ps.zip(kOf).distinct.map { case (p, k) =>
-          Row(g, p, interp(k, valueAtRank(math.floor(k).toLong),
-                              valueAtRank(math.ceil(k).toLong)))
-        }
-      }
-    }
-    Some(session.createDataFrame(resRows.asJava, outSchema))
   }
 }

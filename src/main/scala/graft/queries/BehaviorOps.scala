@@ -437,22 +437,10 @@ object BehaviorOps {
           import scala.jdk.CollectionConverters._
           import org.apache.spark.sql.Row
           import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-          // weighted order statistic over (value, count) runs, exactly
-          // ops.Quantiles' arithmetic: k=(n-1)*p, lo*(ce-k)+hi*(k-fl)
-          def wq(sorted: Array[(Double, Long)], n: Long, p: Double): Double = {
-            val k = (n - 1).toDouble * p
-            val fl = math.floor(k); val ce = math.ceil(k)
-            def at(rank: Long): Double = {
-              var below = 0L; var i = 0
-              while (i < sorted.length) {
-                if (rank < below + sorted(i)._2) return sorted(i)._1
-                below += sorted(i)._2; i += 1
-              }
-              throw new IllegalStateException(s"rank $rank out of range")
-            }
-            val lo = at(fl.toLong)
-            if (fl == ce) lo else lo * (ce - k) + at(ce.toLong) * (k - fl)
-          }
+          // weighted medians over sorted (value, count) runs, through
+          // ops.Quantiles' own rank walk and interpolation
+          def median(sorted: Array[(Double, Long)]): Double =
+            graft.ops.Quantiles.sortedQuantiles(sorted, Seq(0.5)).head
           val out = hist.collect().groupBy(_.getString(0)).toSeq
             .flatMap { case (tpe, rs) =>
               val n = rs.map(_.getLong(2)).sum
@@ -463,11 +451,11 @@ object BehaviorOps {
               // dropped it, so the driver fold drops it too
               if (nn == 0L) None
               else {
-                val med = wq(vals, nn, 0.5)
+                val med = median(vals)
                 val adev = vals.groupBy { case (v, _) => math.abs(v - med) }
                   .map { case (a, g) => (a, g.map(_._2).sum) }
                   .toArray.sortBy(_._1)
-                val mad = wq(adev, nn, 0.5)
+                val mad = median(adev)
                 // same association as the old Catalyst tree: the folded
                 // (3.0 * 1.4826) literal product times mad
                 val thr = 3.0 * 1.4826 * mad
@@ -509,7 +497,7 @@ object BehaviorOps {
       Some("""WITH m AS (SELECT event_type, quantile_cont(value, 0.5) AS med FROM events GROUP BY 1), a AS (SELECT e.event_type, value, med, abs(value - med) AS adev FROM events e JOIN m USING (event_type)), md AS (SELECT event_type, quantile_cont(adev, 0.5) AS mad FROM a GROUP BY 1) SELECT a.event_type, a.med, md.mad, CAST(count(*) AS BIGINT) AS n, CAST(count(*) FILTER (WHERE adev > 3.0 * 1.4826 * mad) AS BIGINT) AS n_outliers, floor(count(*) FILTER (WHERE adev > 3.0 * 1.4826 * mad) / count(*) * 1e6 + 0.5) / 1e6 AS outlier_frac FROM a JOIN md USING (event_type) GROUP BY 1, 2, 3""")),
 
     QueryDef("q157_woe_iv",
-      "weight-of-evidence / information-value feature binning (the credit-scoring feature screen): l_extendedprice cut at its EXACT deciles (ops.Quantiles, third consumer — q120 proved the interpolation bit-equal to quantile_cont, so the bin edges and every v>edge comparison agree across engines), target = returnflag 'R'; per-bin good/bad counts, WOE = ln(good_share/bad_share) with the q115 continuity correction ((n+0.5)/(N+5.0)), and IV = sum(share_diff * woe) broadcast on every row (the psi_total pattern, grid-6 exact-decimal reduction). Bin assignment is the branch-free sum of nine v>q_k comparisons against the ONE broadcast decile row — no per-row binary search, no 9x row expand. The measured IV ~0.0004 is the HONEST answer on this fixture: the synthetic price carries no return-flag signal, and a feature screen that reports 'no predictive power' correctly is doing its job (the fires-on-fixture counterpart is q148/q156). Round-10 profiling (Prof6) priced the 4-job floor (quantile stats/hist/pass-2 + one binning aggregate) and deferred the fusion as not-yet-justified; ROUND 14 implements it (VERDICT r13 #3) as the reusable ops.Quantiles.edgeBinnedCounts — good/bad tallies ride the quantile's own three passes, the binning pass is gone, bins are decided from bucket ids for non-target buckets and per-value IEEE comparisons for fetched ones. 4 jobs → 3; 1.15 → 0.83 s isolated at sf0.1, hashes unchanged at sf0.01/0.1. ROUND 15 cuts the third: prices are non-negative, so nonNegEdgeBinnedCounts' bit-prefix histogram needs no stats pass — 2 corpus jobs, edges/bins/tallies bit-identical (QuantilesSpec); floor decision: FLOOR.md",
+      "weight-of-evidence / information-value feature binning (the credit-scoring feature screen): l_extendedprice cut at its EXACT deciles (ops.Quantiles, third consumer — q120 proved the interpolation bit-equal to quantile_cont, so the bin edges and every v>edge comparison agree across engines), target = returnflag 'R'; per-bin good/bad counts, WOE = ln(good_share/bad_share) with the q115 continuity correction ((n+0.5)/(N+5.0)), and IV = sum(share_diff * woe) broadcast on every row (the psi_total pattern, grid-6 exact-decimal reduction). Bin assignment is the branch-free sum of nine v>q_k comparisons against the ONE broadcast decile row — no per-row binary search, no 9x row expand. The measured IV ~0.0004 is the HONEST answer on this fixture: the synthetic price carries no return-flag signal, and a feature screen that reports 'no predictive power' correctly is doing its job (the fires-on-fixture counterpart is q148/q156). The good/bad tallies ride the quantile operator's own passes (ops.Quantiles.nonNegEdgeBinnedCounts): there is no separate binning pass, bins are decided from bucket ids for non-target buckets and per-value IEEE comparisons for fetched ones, and since prices are non-negative the bit-prefix histogram needs no stats pass — 2 corpus jobs where quantiles-then-bin paid 4 (the 3-job equal-width fusion measured 1.15 → 0.83 s isolated at sf0.1), edges/bins/tallies bit-identical (QuantilesSpec), hashes unchanged; floor decision: FLOOR.md",
       (s, d) => {
         val li = t(s, d, "lineitem")
           .select(col("l_extendedprice").as("v"),
@@ -517,18 +505,14 @@ object BehaviorOps {
         val ps = (1 to 9).map(_ / 10.0)
         import scala.jdk.CollectionConverters._
         import org.apache.spark.sql.types.{LongType, StructField, StructType}
-        // ROUND 14 (VERDICT r13 #3): the round-10 "4-job floor" is cut
-        // to 3 corpus jobs by exactly the fusion that note priced —
-        // Quantiles.edgeBinnedCounts rides the good/bad tallies INSIDE
-        // the quantile operator's own stats/histogram/fetch passes (the
-        // q196 bit-replicate recipe) and the fourth binning pass
-        // disappears; same IEEE v > q_k comparisons, same interpolation
-        // bits, unchanged hashes. Measured 1.15 → 0.83 s isolated at
-        // sf0.1. The WOE/IV tail stays the local-relation Catalyst
-        // chain so round/log semantics are untouched.
-        // ROUND 15: prices are non-negative, so the bit-bucket form
-        // drops the stats job too — 3 corpus jobs → 2, edges/tallies
-        // bit-identical (QuantilesSpec pins all three outputs)
+        // Quantiles.nonNegEdgeBinnedCounts rides the good/bad tallies
+        // INSIDE the quantile operator's own histogram/fetch passes (the
+        // q196 bit-replicate recipe), so no binning pass runs, and
+        // prices are non-negative, so the bit-bucket histogram needs no
+        // stats pass: 2 corpus jobs, same IEEE v > q_k comparisons, same
+        // interpolation bits (QuantilesSpec pins all three outputs). The
+        // WOE/IV tail stays the local-relation Catalyst chain so
+        // round/log semantics are untouched.
         val (_, binN, binBad) = graft.ops.Quantiles.nonNegEdgeBinnedCounts(
           li, "v", "bad", ps)
         val tb = binBad.sum; val tg = binN.sum - tb
@@ -652,16 +636,14 @@ object BehaviorOps {
       Some("""WITH t AS (SELECT user_id, ts, event_id, event_type FROM events WHERE event_type IN ('view','click')), p AS (SELECT user_id, ts, event_id, value FROM events WHERE event_type = 'purchase'), pr AS (SELECT p.event_id AS pid, p.value, t.event_type AS channel, t.ts AS tts, t.event_id AS tid FROM p JOIN t ON t.user_id = p.user_id AND (t.ts < p.ts OR (t.ts = p.ts AND t.event_id < p.event_id)) AND epoch_us(p.ts) - epoch_us(t.ts) <= 604800000000), rk AS (SELECT pid, value, channel, row_number() OVER (PARTITION BY pid ORDER BY tts, tid) AS rn, CAST(count(*) OVER (PARTITION BY pid) AS BIGINT) AS nt FROM pr), cr AS (SELECT channel, value * (CASE WHEN nt = 1 THEN 1.0 WHEN nt = 2 THEN 0.5 WHEN rn = 1 THEN 0.4 WHEN rn = nt THEN 0.4 ELSE 0.2 / (nt - 2) END) AS credit FROM rk), agg AS (SELECT channel, CAST(SUM(CAST(floor(credit * 1e6 + 0.5) / 1e6 AS DECIMAL(38,6))) AS DOUBLE) AS credit, CAST(count(*) AS BIGINT) AS n_touchpoints FROM cr GROUP BY 1), d AS (SELECT 'direct' AS channel, CAST(SUM(CAST(round(value, 6) AS DECIMAL(38,6))) AS DOUBLE) AS credit, CAST(count(*) AS BIGINT) AS n_touchpoints FROM p WHERE NOT EXISTS (SELECT 1 FROM pr WHERE pr.pid = p.event_id) HAVING count(*) > 0) SELECT * FROM agg UNION ALL SELECT * FROM d""")),
 
     QueryDef("q175_gains_deciles",
-      "cumulative gains / lift table (the third leg of the model-evaluation plane: q157 screens a feature by IV, q159 scores its ranking by AUC, this is the DEPLOYMENT readout — 'target the top k deciles, capture what share of positives at what lift'): l_extendedprice cut at its EXACT deciles (ops.Quantiles — interpolation proven bit-equal to quantile_cont, branch-free v>edge bin assignment against ONE broadcast edge row; the q168 counts-grid idiom was A/B'd and rejected with numbers in the code comment: prices are near-unique, so the counts 'grid' is corpus-sized), target = returnflag 'R'; per decile from the TOP down, cumulative population share, cumulative positive capture (gain), and lift = gain/pop_share. Everything stays INTEGER counts until three IEEE divisions written with the SAME expression tree in both engines (no float accumulation anywhere, no overflow: no count-count products — the lift is a ratio of ratios, not the q159 rank-sum shape), outputs on the 6-dp grid. The cumulative structure DRIVER-FINISHES over the collected 10-row decile grid (VERDICT r11 #5 — never a corpus-sized window, and no longer even grid window stages), and since round 14 the binning aggregate itself is FUSED into the quantile operator's passes (ops.Quantiles.edgeBinnedCounts, the q157/q196 recipe; since round 15 the non-negative bit-bucket form nonNegEdgeBinnedCounts, which also drops the stats pass) — the corpus pays exactly 2 jobs. Lift ~1.0 in every decile is the HONEST readout on this fixture (price carries no return-flag signal, consistent with q157's IV~0.0004 and q159's AUC~0.49) — the value is the table, which at 100 TB is the campaign-sizing artifact every targeting decision reads; floor decision: FLOOR.md",
+      "cumulative gains / lift table (the third leg of the model-evaluation plane: q157 screens a feature by IV, q159 scores its ranking by AUC, this is the DEPLOYMENT readout — 'target the top k deciles, capture what share of positives at what lift'): l_extendedprice cut at its EXACT deciles (ops.Quantiles — interpolation proven bit-equal to quantile_cont, branch-free v>edge bin assignment against ONE broadcast edge row; the q168 counts-grid idiom was A/B'd and rejected with numbers in the code comment: prices are near-unique, so the counts 'grid' is corpus-sized), target = returnflag 'R'; per decile from the TOP down, cumulative population share, cumulative positive capture (gain), and lift = gain/pop_share. Everything stays INTEGER counts until three IEEE divisions written with the SAME expression tree in both engines (no float accumulation anywhere, no overflow: no count-count products — the lift is a ratio of ratios, not the q159 rank-sum shape), outputs on the 6-dp grid. The cumulative structure DRIVER-FINISHES over the collected 10-row decile grid (VERDICT r11 #5 — never a corpus-sized window, and no longer even grid window stages), and the binning aggregate itself is FUSED into the quantile operator's passes (ops.Quantiles.nonNegEdgeBinnedCounts, the q157/q196 recipe, whose non-negative bit-bucket histogram also needs no stats pass) — the corpus pays exactly 2 jobs. Lift ~1.0 in every decile is the HONEST readout on this fixture (price carries no return-flag signal, consistent with q157's IV~0.0004 and q159's AUC~0.49) — the value is the table, which at 100 TB is the campaign-sizing artifact every targeting decision reads; floor decision: FLOOR.md",
       (s, d) => {
-        // ROUND 14 (VERDICT r13 #5): the r10 4-job chain (quantile
-        // stats/hist/fetch + a binning aggregate) drops to 3 via
-        // Quantiles.edgeBinnedCounts — the same fusion as q157, pos
-        // tallies riding the quantile's own passes. The q168
-        // counts-grid idiom stays rejected (prices are near-unique, the
-        // "grid" is corpus-sized); this fusion wins where that lost
-        // because it adds NO materialization, only aggregate columns.
-        // 1.07 → 0.82 s isolated at sf0.1, hashes unchanged.
+        // Quantiles.nonNegEdgeBinnedCounts — the same fusion as q157,
+        // pos tallies riding the quantile's own passes, 2 corpus jobs
+        // where quantiles-then-bin paid 4. The q168 counts-grid idiom
+        // stays rejected (prices are near-unique, the "grid" is
+        // corpus-sized); this fusion wins where that lost because it
+        // adds NO materialization, only aggregate columns.
         val li = t(s, d, "lineitem")
           .select(col("l_extendedprice").as("v"),
                   (col("l_returnflag") === "R").as("pos"))
@@ -672,7 +654,6 @@ object BehaviorOps {
         // The double chain (cum/tot division, then the 6-dp floor-grid)
         // is the identical per-value IEEE sequence the old column
         // expressions compiled to — hashes unchanged.
-        // ROUND 15: same bit-bucket upgrade as q157 — 3 corpus jobs → 2
         val (_, binN, binPos) = graft.ops.Quantiles.nonNegEdgeBinnedCounts(
           li, "v", "pos", ps)
         val cells = (0 to ps.size).filter(b => binN(b) > 0)

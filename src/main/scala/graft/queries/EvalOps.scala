@@ -36,9 +36,8 @@ object EvalOps {
         // medians and the residual pass then run in plain Scala on the
         // collected grid instead of ~3 grid-sized Spark stages (pair
         // join + two sequential exactQuantiles chains, each several
-        // driver-planned jobs). The medians mirror ops.Quantiles'
-        // interpolation bit-for-bit (k = 0.5·(n−1); integer k → x[k];
-        // else lo·(⌈k⌉−k) + hi·(k−⌊k⌋) — DuckDB's quantile_cont
+        // driver-planned jobs). The medians run through ops.Quantiles'
+        // own rank walk and interpolation (DuckDB's quantile_cont
         // arithmetic), and slope/residual terms use the identical
         // per-row IEEE ops the old column expressions compiled to, so
         // the published values are unchanged.
@@ -71,10 +70,7 @@ object EvalOps {
           val monthly = rows.map { case (tm, v) => (tm - t0, v) }
           def median(xs: Array[Double]): Double = {
             java.util.Arrays.sort(xs)
-            val k = 0.5 * (xs.length - 1).toDouble
-            val kf = math.floor(k); val kc = math.ceil(k)
-            if (kf == kc) xs(k.toInt)
-            else xs(kf.toInt) * (kc - k) + xs(kc.toInt) * (k - kf)
+            graft.ops.Quantiles.sortedQuantiles(xs.map((_, 1L)), Seq(0.5)).head
           }
           val slopes = for {
             (t1, v1) <- monthly; (t2, v2) <- monthly if t1 < t2

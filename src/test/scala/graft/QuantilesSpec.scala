@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Quantiles
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -62,17 +63,26 @@ class QuantilesSpec extends SparkSpec {
       }.toMap
       assert(got == want)
     }
-    it("precomputed stats (statsOpt) produce identical results to the derived pass") {
-      val df = Seq(("a", 1.0), ("a", 9.0), ("a", 5.0), ("b", 2.0), ("b", 4.0))
-        .toDF("g", "v")
-      val stats = df.groupBy($"g")
-        .agg(count($"v").as("n"), min($"v").as("mn"), max($"v").as("mx"))
-      val derived = Quantiles.exactQuantiles(df, "g", "v", Seq(0.5, 0.75), buckets = 4)
-        .collect().map(_.toString).sorted.toSeq
-      val supplied = Quantiles.exactQuantiles(df, "g", "v", Seq(0.5, 0.75), buckets = 4,
-                                              statsOpt = Some(stats))
-        .collect().map(_.toString).sorted.toSeq
-      assert(derived == supplied)
+    it("int and long ranges wider than their type match percentile on both paths") {
+      // v − mn in the column's own type would overflow (ANSI raises):
+      // 1,000 values near −2e9 and +2e9 in one group, then the same
+      // values scaled onto ±8e18 as longs
+      val rnd = new scala.util.Random(5)
+      val ints = Seq.fill(1000)(
+        if (rnd.nextBoolean()) -2000000000 + rnd.nextInt(1000)
+        else 2000000000 - rnd.nextInt(1000))
+      val ps = Seq(0.1, 0.5, 0.9)
+      def check(df: DataFrame): Unit = {
+        val want = ps.map(p =>
+          p -> df.agg(expr(s"percentile(v, $p)")).as[Double].head()).toMap
+        Seq(Quantiles.MaxDriverGroups, 0).foreach { cap =>
+          val got = Quantiles.exactQuantiles(df, "g", "v", ps, maxDriverGroups = cap)
+            .select($"p", $"value").as[(Double, Double)].collect().toMap
+          assert(got == want, s"maxDriverGroups = $cap")
+        }
+      }
+      check(ints.map(v => ("a", v)).toDF("g", "v"))
+      check(ints.map(v => ("a", v.toLong * 4000000000L)).toDF("g", "v"))
     }
     it("exactQuantilesFromCounts equals the corpus path on generated data") {
       val gen = Gen.listOfN(400, for {
@@ -146,31 +156,6 @@ class QuantilesSpec extends SparkSpec {
         assert(planned == distributed)
       }
     }
-    it("exactQuantilesMulti equals per-column calls bit-for-bit (long and double metrics)") {
-      // q169's shape: one frame, three metrics (two integer-like, one
-      // continuous). The melt casts to double; per-column calls on the
-      // raw long columns take the distributed interpolate path (longs
-      // skip the driver finish) — results must still be bit-identical.
-      val gen = Gen.listOfN(250, for {
-        a <- Gen.choose(0L, 4000L)
-        b <- Gen.choose(1L, 60L)
-        c <- Gen.choose(-90000, 90000).map(_ / 13.0)
-      } yield (a, b, c))
-      val ps = Seq(0.2, 0.4, 0.6, 0.8)
-      forAllSamples(gen, n = 4) { rows =>
-        val df = rows.toDF("rec", "freq", "mon")
-        val multi = Quantiles.exactQuantilesMulti(df, Seq("rec", "freq", "mon"), ps)
-          .select($"metric", $"p", $"value").as[(String, Double, Double)]
-          .collect().toSet
-        val single = Seq("rec", "freq", "mon").flatMap { m =>
-          Quantiles.exactQuantiles(
-              df.select(lit(m).as("g"), col(m).as("v")), "g", "v", ps)
-            .select($"g", $"p", $"value").as[(String, Double, Double)]
-            .collect()
-        }.toSet
-        assert(multi == single)
-      }
-    }
     it("bit-replicate quantiles equal the exploded exactQuantiles chain (q196)") {
       // the BRR shape: group -1 = full frame, group r = rows whose hash
       // bit r is set. The bitmask-histogram fast path must land
@@ -218,30 +203,6 @@ class QuantilesSpec extends SparkSpec {
         val want = if (fl == ce) vals(k.toInt)
                    else vals(fl.toInt) * (ce - k) + vals(ce.toInt) * (k - fl)
         assert(got(r.toLong) == want, s"replicate $r")
-      }
-    }
-    it("edgeBinnedCounts ≡ exactQuantiles edges + a naive binning aggregate (q157/q175 fusion)") {
-      // deliberately collision-heavy values (mod grid) so target buckets
-      // hold ties, plus a skewed flag; compare against the composed form
-      val df = spark.range(20000).select(
-        ((col("id") * 131) % 997).cast("double").as("v"),
-        (col("id") % 7 === 0).as("f"))
-      val ps = (1 to 9).map(_ / 10.0)
-      val (edges, n, nf) = Quantiles.edgeBinnedCounts(df, "v", "f", ps,
-        buckets = 32)
-      val qs = Quantiles.exactQuantiles(
-          df.select(lit("all").as("g"), col("v")), "g", "v", ps, buckets = 32)
-        .select($"p", $"value").as[(Double, Double)].collect().toMap
-      ps.zip(edges).foreach { case (p, e) =>
-        assert(e == qs(p), s"edge at p=$p") // bit equality
-      }
-      val binExpr = edges.map(q => when(col("v") > lit(q), 1).otherwise(0))
-        .reduce(_ + _)
-      val want = df.groupBy(binExpr.as("bin"))
-        .agg(count(lit(1)).as("n"), count(when($"f", 1)).as("nf"))
-        .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-      (0 to ps.size).foreach { b =>
-        assert((n(b), nf(b)) == want.getOrElse(b, (0L, 0L)), s"bin $b")
       }
     }
     it("DoubleBits is order-preserving on non-negative doubles (the trio's foundation)") {
@@ -356,24 +317,37 @@ class QuantilesSpec extends SparkSpec {
       check(Seq(("a", 3.5, 1L), ("b", 1.0, 1000000L), ("b", 2.0, 1L)))
       check(Seq(("z", -0.0, 2L), ("z", 0.0, 1L), ("z", 1.0, 1L)))
     }
-    it("nonNegEdgeBinnedCounts ≡ edgeBinnedCounts (edges bitwise, bins, flag tallies)") {
+    it("nonNegEdgeBinnedCounts ≡ exactQuantiles edges + naive binning aggregate") {
+      def check(df: DataFrame, ps: Seq[Double], shift: Int = 44): Unit = {
+        val (edges, n, nf) = Quantiles.nonNegEdgeBinnedCounts(df, "v", "f", ps, shift)
+        val qs = Quantiles.exactQuantiles(
+            df.select(lit("all").as("g"), col("v")), "g", "v", ps, buckets = 32)
+          .select($"p", $"value").as[(Double, Double)].collect().toMap
+        ps.zip(edges).foreach { case (p, e) =>
+          assert(java.lang.Double.doubleToRawLongBits(e) ==
+                 java.lang.Double.doubleToRawLongBits(qs(p)), s"edge at p=$p: $e vs ${qs(p)}")
+        }
+        val binExpr = edges.map(q => when(col("v") > lit(q), 1).otherwise(0))
+          .reduce(_ + _)
+        val want = df.groupBy(binExpr.as("bin"))
+          .agg(count(lit(1)).as("n"), count(when($"f", 1)).as("nf"))
+          .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+        val bins = (0 to ps.size).map(b => want.getOrElse(b, (0L, 0L)))
+        assert(n.toSeq == bins.map(_._1), s"bins: ${n.toSeq} vs ${bins.map(_._1)}")
+        assert(nf.toSeq == bins.map(_._2), s"flags: ${nf.toSeq} vs ${bins.map(_._2)}")
+      }
+      // deliberately collision-heavy values (mod grid) so target buckets
+      // hold ties, plus a skewed flag
+      check(spark.range(20000).select(
+        ((col("id") * 131) % 997).cast("double").as("v"),
+        (col("id") % 7 === 0).as("f")), (1 to 9).map(_ / 10.0))
       val ps = Seq(0.1, 0.25, 0.5, 0.75, 0.9)
       val rnd = new scala.util.Random(11)
-      def check(rows: Seq[(Double, Boolean)], shift: Int = 44): Unit = {
-        val df = rows.toDF("v", "f")
-        val (e1, c1, f1) = Quantiles.edgeBinnedCounts(df, "v", "f", ps)
-        val (e2, c2, f2) = Quantiles.nonNegEdgeBinnedCounts(df, "v", "f", ps, shift)
-        e1.zip(e2).foreach { case (a, b) =>
-          assert(java.lang.Double.doubleToRawLongBits(a) ==
-                 java.lang.Double.doubleToRawLongBits(b), s"edge: $a vs $b")
-        }
-        assert(c1.toSeq == c2.toSeq, s"bins: ${c1.toSeq} vs ${c2.toSeq}")
-        assert(f1.toSeq == f2.toSeq, s"flags: ${f1.toSeq} vs ${f2.toSeq}")
-      }
-      check(Seq.fill(800)((rnd.nextDouble() * 1e4, rnd.nextBoolean())))
-      check(Seq.fill(800)((rnd.nextInt(12) * 0.25, rnd.nextInt(4) == 0)))
-      check(Seq.fill(500)((rnd.nextInt(40).toDouble, rnd.nextBoolean())), shift = 56)
-      check(Seq((5.0, true)))
+      check(Seq.fill(800)((rnd.nextDouble() * 1e4, rnd.nextBoolean())).toDF("v", "f"), ps)
+      check(Seq.fill(800)((rnd.nextInt(12) * 0.25, rnd.nextInt(4) == 0)).toDF("v", "f"), ps)
+      check(Seq.fill(500)((rnd.nextInt(40).toDouble, rnd.nextBoolean())).toDF("v", "f"), ps,
+        shift = 56)
+      check(Seq((5.0, true)).toDF("v", "f"), ps)
       val neg = Seq((-2.0, false), (1.0, true)).toDF("v", "f")
       val e = intercept[IllegalArgumentException] {
         Quantiles.nonNegEdgeBinnedCounts(neg, "v", "f", ps)
