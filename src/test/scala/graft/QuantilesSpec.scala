@@ -317,37 +317,50 @@ class QuantilesSpec extends SparkSpec {
       check(Seq(("a", 3.5, 1L), ("b", 1.0, 1000000L), ("b", 2.0, 1L)))
       check(Seq(("z", -0.0, 2L), ("z", 0.0, 1L), ("z", 1.0, 1L)))
     }
-    it("nonNegEdgeBinnedCounts ≡ exactQuantiles edges + naive binning aggregate") {
-      def check(df: DataFrame, ps: Seq[Double], shift: Int = 44): Unit = {
-        val (edges, n, nf) = Quantiles.nonNegEdgeBinnedCounts(df, "v", "f", ps, shift)
-        val qs = Quantiles.exactQuantiles(
-            df.select(lit("all").as("g"), col("v")), "g", "v", ps, buckets = 32)
-          .select($"p", $"value").as[(Double, Double)].collect().toMap
-        ps.zip(edges).foreach { case (p, e) =>
-          assert(java.lang.Double.doubleToRawLongBits(e) ==
-                 java.lang.Double.doubleToRawLongBits(qs(p)), s"edge at p=$p: $e vs ${qs(p)}")
-        }
-        val binExpr = edges.map(q => when(col("v") > lit(q), 1).otherwise(0))
-          .reduce(_ + _)
-        val want = df.groupBy(binExpr.as("bin"))
-          .agg(count(lit(1)).as("n"), count(when($"f", 1)).as("nf"))
-          .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-        val bins = (0 to ps.size).map(b => want.getOrElse(b, (0L, 0L)))
-        assert(n.toSeq == bins.map(_._1), s"bins: ${n.toSeq} vs ${bins.map(_._1)}")
-        assert(nf.toSeq == bins.map(_._2), s"flags: ${nf.toSeq} vs ${bins.map(_._2)}")
+    // edgeBinnedCounts is the composed reference for the q157/q175 fusion:
+    // exactQuantiles edges, then a naive binning aggregate (v > edge count
+    // picks the bin) tallying rows and flagged rows per bin
+    def edgeBinnedCounts(df: DataFrame, ps: Seq[Double])
+        : (Seq[Double], Seq[Long], Seq[Long]) = {
+      val qs = Quantiles.exactQuantiles(
+          df.select(lit("all").as("g"), col("v")), "g", "v", ps, buckets = 32)
+        .select($"p", $"value").as[(Double, Double)].collect().toMap
+      val edges = ps.map(qs)
+      val binExpr = edges.map(q => when(col("v") > lit(q), 1).otherwise(0))
+        .reduce(_ + _)
+      val want = df.groupBy(binExpr.as("bin"))
+        .agg(count(lit(1)).as("n"), count(when($"f", 1)).as("nf"))
+        .as[(Int, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+      val bins = (0 to ps.size).map(b => want.getOrElse(b, (0L, 0L)))
+      (edges, bins.map(_._1), bins.map(_._2))
+    }
+    // edges bitwise, then bins, then flag tallies
+    def checkEdgeBinned(df: DataFrame, ps: Seq[Double], shift: Int = 44): Unit = {
+      val (edges, n, nf) = Quantiles.nonNegEdgeBinnedCounts(df, "v", "f", ps, shift)
+      val (wantEdges, wantN, wantNf) = edgeBinnedCounts(df, ps)
+      ps.indices.foreach { i =>
+        assert(java.lang.Double.doubleToRawLongBits(edges(i)) ==
+               java.lang.Double.doubleToRawLongBits(wantEdges(i)),
+               s"edge at p=${ps(i)}: ${edges(i)} vs ${wantEdges(i)}")
       }
+      assert(n.toSeq == wantN, s"bins: ${n.toSeq} vs $wantN")
+      assert(nf.toSeq == wantNf, s"flags: ${nf.toSeq} vs $wantNf")
+    }
+    it("edgeBinnedCounts ≡ exactQuantiles edges + a naive binning aggregate (q157/q175 fusion)") {
       // deliberately collision-heavy values (mod grid) so target buckets
       // hold ties, plus a skewed flag
-      check(spark.range(20000).select(
+      checkEdgeBinned(spark.range(20000).select(
         ((col("id") * 131) % 997).cast("double").as("v"),
         (col("id") % 7 === 0).as("f")), (1 to 9).map(_ / 10.0))
+    }
+    it("nonNegEdgeBinnedCounts ≡ edgeBinnedCounts (edges bitwise, bins, flag tallies)") {
       val ps = Seq(0.1, 0.25, 0.5, 0.75, 0.9)
       val rnd = new scala.util.Random(11)
-      check(Seq.fill(800)((rnd.nextDouble() * 1e4, rnd.nextBoolean())).toDF("v", "f"), ps)
-      check(Seq.fill(800)((rnd.nextInt(12) * 0.25, rnd.nextInt(4) == 0)).toDF("v", "f"), ps)
-      check(Seq.fill(500)((rnd.nextInt(40).toDouble, rnd.nextBoolean())).toDF("v", "f"), ps,
-        shift = 56)
-      check(Seq((5.0, true)).toDF("v", "f"), ps)
+      checkEdgeBinned(Seq.fill(800)((rnd.nextDouble() * 1e4, rnd.nextBoolean())).toDF("v", "f"), ps)
+      checkEdgeBinned(Seq.fill(800)((rnd.nextInt(12) * 0.25, rnd.nextInt(4) == 0)).toDF("v", "f"), ps)
+      checkEdgeBinned(Seq.fill(500)((rnd.nextInt(40).toDouble, rnd.nextBoolean())).toDF("v", "f"),
+        ps, shift = 56)
+      checkEdgeBinned(Seq((5.0, true)).toDF("v", "f"), ps)
       val neg = Seq((-2.0, false), (1.0, true)).toDF("v", "f")
       val e = intercept[IllegalArgumentException] {
         Quantiles.nonNegEdgeBinnedCounts(neg, "v", "f", ps)
