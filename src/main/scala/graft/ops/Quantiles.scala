@@ -568,19 +568,22 @@ object Quantiles {
   // bucket keys and the equal-width paths' plumbing
   // ──────────────────────────────────────────────────────────────────
 
-  /** Equal-width bucket id over [mn, mx]; constant groups (mx == mn)
-    * collapse to bucket 0. Joined-stats callers pass the mn/mx
+  /** Equal-width bucket id over [mn, mx]; groups that are constant as
+    * doubles collapse to bucket 0. Joined-stats callers pass the mn/mx
     * columns, literal-stats callers pass literals; both passes of a
     * path use the same expression, so assignment is bit-identical. The
     * arithmetic is double: `double(v)` is monotone, so bucket order and
     * the rank walks stay correct, the cast is a no-op on double
     * columns, and an int/long range wider than its type cannot
-    * overflow `v − mn` (which ANSI mode would raise). */
+    * overflow `v − mn` (which ANSI mode would raise). The position is
+    * taken as a fraction of the range before it is scaled: a range
+    * narrower than `buckets` × `Double.MinPositiveValue` would round a
+    * bucket width to 0.0, a division by zero. */
   private def bucketOf(v: Column, mn: Column, mx: Column, buckets: Int): Column = {
-    val lo = mn.cast("double")
-    when(mx > mn,
+    val (lo, hi) = (mn.cast("double"), mx.cast("double"))
+    when(hi > lo,
       least(lit(buckets - 1),
-        floor((v.cast("double") - lo) / ((mx.cast("double") - lo) / buckets))
+        floor((v.cast("double") - lo) / (hi - lo) * buckets)
           .cast("int")))
       .otherwise(lit(0))
   }

@@ -24,4 +24,10 @@ object GraftColumnBridge {
   def toPrecision(d: types.Decimal, precision: Int, scale: Int,
                   nullOnOverflow: Boolean): types.Decimal =
     d.toPrecision(precision, scale, types.Decimal.ROUND_HALF_UP, nullOnOverflow, null)
+
+  /** Waits until the async listener bus has delivered every posted
+    * event (`listenerBus` is private[spark]); throws a TimeoutException
+    * when it has not within `timeoutMs`. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }

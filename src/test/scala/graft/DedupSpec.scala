@@ -593,27 +593,13 @@ class DedupSpec extends SparkSpec {
     }
 
     it("maxDriverEdges = 0 keeps the components off the driver too") {
-      /** The result, and the call sites (stage names) of the jobs it ran. */
+      /** The result, and the call sites of the jobs it ran. */
       def traced(maxDriverEdges: Long): (Set[(Long, Long, Long)], Seq[String]) = {
-        val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            js.stageInfos.foreach(s => sites.add(s.name))
-        }
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          val out = graft.ext.Dedup.hopsToRep(chain, "id_a", "id_b", maxDriverEdges = maxDriverEdges)
+        val (out, jobs) = JobTrace(spark) {
+          graft.ext.Dedup.hopsToRep(chain, "id_a", "id_b", maxDriverEdges = maxDriverEdges)
             .as[(Long, Long, Long)].collect().toSet
-          // the async listener bus: read once the count is stable
-          var (stable, cur, spins) = (0, sites.size, 0)
-          while (stable < 3 && spins < 30) {
-            Thread.sleep(200)
-            if (sites.size == cur) stable += 1 else { stable = 0; cur = sites.size }
-            spins += 1
-          }
-          import scala.jdk.CollectionConverters._
-          (out, sites.asScala.toSeq)
-        } finally spark.sparkContext.removeSparkListener(listener)
+        }
+        (out, jobs.map(_.callSite))
       }
       val onDriver = (sites: Seq[String]) => sites.exists(_.startsWith("collect at DriverGraph.scala"))
       val (local, localSites) = traced(DriverGraph.MaxDriverEdges)

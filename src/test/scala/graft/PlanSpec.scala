@@ -932,29 +932,14 @@ class PlanSpec extends SparkSpec {
     }
 
     it("plans the snapshot with exactly one shuffle and runs the tick in at most 6 jobs") {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
+      val (snap, jobs) = JobTrace(spark)(tick(0L, "t"))
+      val cur = jobs.size
+      val plan = snap.queryExecution.executedPlan
+      val shuffles = AqePlans.collectWithSubqueries(plan) {
+        case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => s
       }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val snap = tick(0L, "t")
-        // the async listener bus: read the count once it is stable
-        // (bounded at 15 s, as in PerfCanarySpec)
-        var (stable, cur, spins) = (0, jobs.get, 0)
-        while (stable < 3 && spins < 30) {
-          Thread.sleep(500)
-          if (jobs.get == cur) stable += 1 else { stable = 0; cur = jobs.get }
-          spins += 1
-        }
-        val plan = snap.queryExecution.executedPlan
-        val shuffles = AqePlans.collectWithSubqueries(plan) {
-          case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => s
-        }
-        assert(shuffles.size == 1, s"plan:\n$plan")
-        assert(cur <= 6, s"the tick ran $cur jobs; plan:\n$plan")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(shuffles.size == 1, s"plan:\n$plan")
+      assert(cur <= 6, s"the tick ran $cur jobs; plan:\n$plan")
     }
 
     it("generates the same code on every tick: the wall-clock values travel as data") {

@@ -73,16 +73,22 @@ class QuantilesSpec extends SparkSpec {
         else 2000000000 - rnd.nextInt(1000))
       val ps = Seq(0.1, 0.5, 0.9)
       def check(df: DataFrame): Unit = {
-        val want = ps.map(p =>
-          p -> df.agg(expr(s"percentile(v, $p)")).as[Double].head()).toMap
+        val want = ps.flatMap(p =>
+          df.groupBy($"g").agg(expr(s"percentile(v, $p)"))
+            .as[(String, Double)].collect().map { case (g, v) => (g, p) -> v }).toMap
         Seq(Quantiles.MaxDriverGroups, 0).foreach { cap =>
           val got = Quantiles.exactQuantiles(df, "g", "v", ps, maxDriverGroups = cap)
-            .select($"p", $"value").as[(Double, Double)].collect().toMap
+            .select($"g", $"p", $"value").as[(String, Double, Double)].collect()
+            .map { case (g, p, v) => (g, p) -> v }.toMap
           assert(got == want, s"maxDriverGroups = $cap")
         }
       }
       check(ints.map(v => ("a", v)).toDF("g", "v"))
       check(ints.map(v => ("a", v.toLong * 4000000000L)).toDF("g", "v"))
+      // a range below buckets × Double.MinPositiveValue: a bucket width
+      // of (mx − mn) / buckets would round to 0.0
+      check(Seq(("a", 0.0), ("a", Double.MinPositiveValue),
+                ("b", 1.0), ("b", 2.0), ("b", 4.0)).toDF("g", "v"))
     }
     it("exactQuantilesFromCounts equals the corpus path on generated data") {
       val gen = Gen.listOfN(400, for {
