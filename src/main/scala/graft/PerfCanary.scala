@@ -58,6 +58,9 @@ object PerfCanary {
     // the two flicker members that also have a wall-clock ceiling
     "q163_spearman"           -> 13, // rank windows + corr grid chain
     "q187_half_sample_ci"     -> 8,  // 60-replicate BRR expand + CI tail
+    // one corpus aggregate of 14 grid sums (Num.sum6) + a 1-row tail:
+    // a stray action inside the sum kernel would add a job
+    "q190_corr_matrix"        -> 4,
     // the triangle-census driver twin (edge build + cap probe +
     // collect; readout is a LocalRelation). A silent fallback
     // to the distributed BSP chain — e.g. a broken integral-id check —

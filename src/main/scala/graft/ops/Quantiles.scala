@@ -74,6 +74,18 @@ object Quantiles {
     * window ranks distributedly. ~24 MB of (value, count) pairs. */
   val MaxDriverPass2Rows: Long = 1L << 20
 
+  /** Joins on the (g, …) keys are null-safe (`<=>`): a null group key is
+    * a group, as in `percentile` and DuckDB, where a USING join would
+    * drop it. The result keeps the left side's key columns. */
+  private implicit class KeyJoin(l: DataFrame) {
+    def keyJoin(r: DataFrame, keys: String*): DataFrame = {
+      val rk = keys.map(_ + "__r")
+      val rr = keys.zip(rk).foldLeft(r) { case (df, (k, k2)) => df.withColumnRenamed(k, k2) }
+      l.join(rr, keys.zip(rk).map { case (k, k2) => col(k) <=> col(k2) }.reduce(_ && _))
+        .drop(rk: _*)
+    }
+  }
+
   /** Exact quantiles of `valCol` per `groupCol` over raw rows; null
     * values are ignored. Result: (groupCol, p, value). */
   def exactQuantiles(df: DataFrame, groupCol: String, valCol: String,
@@ -85,7 +97,7 @@ object Quantiles {
     val statsDf = in.groupBy(col("g"))
       .agg(count(lit(1)).as("n"), min(col("v")).as("mn"), max(col("v")).as("mx"))
     val b = bucketOf(col("v"), col("mn"), col("mx"), buckets)
-    def hist(stats: DataFrame) = in.join(broadcast(stats), Seq("g"))
+    def hist(stats: DataFrame) = in.keyJoin(broadcast(stats), "g")
       .groupBy(col("g"), b.as("b"))
       .agg(count(lit(1)).as("cnt"))
     // pass 2 over only the target buckets — but rank DISTINCT VALUES
@@ -94,9 +106,9 @@ object Quantiles {
     // make a row_number partition corpus-sized, while its distinct
     // values stay few.
     def valueCounts(stats: DataFrame, targetBuckets: DataFrame) =
-      in.join(broadcast(stats), Seq("g"))
+      in.keyJoin(broadcast(stats), "g")
         .withColumn("b", b)
-        .join(broadcast(targetBuckets), Seq("g", "b"))
+        .keyJoin(broadcast(targetBuckets), "g", "b")
         .groupBy(col("g"), col("b"), col("v"))
         .agg(count(lit(1)).as("c"))
     driverPlanned(in.sparkSession, statsDf, ps, groupCol, maxDriverGroups)(
@@ -133,14 +145,14 @@ object Quantiles {
       .filter(col("v").isNotNull)
     val statsDf = in.groupBy(col("g"))
       .agg(sum(col("c")).as("n"), min(col("v")).as("mn"), max(col("v")).as("mx"))
-    def withB(stats: DataFrame) = in.join(broadcast(stats), Seq("g"))
+    def withB(stats: DataFrame) = in.keyJoin(broadcast(stats), "g")
       .withColumn("b", bucketOf(col("v"), col("mn"), col("mx"), buckets))
     def hist(stats: DataFrame) =
       withB(stats).groupBy(col("g"), col("b")).agg(sum(col("c")).as("cnt"))
     // vc is already one row per (g, v) with its count — restricting to
     // the target buckets is a semi-join, no re-aggregation
     def valueCounts(stats: DataFrame, targetBuckets: DataFrame) =
-      withB(stats).join(broadcast(targetBuckets), Seq("g", "b"))
+      withB(stats).keyJoin(broadcast(targetBuckets), "g", "b")
         .select(col("g"), col("b"), col("v"), col("c"))
     driverPlanned(vc.sparkSession, statsDf, ps, groupCol, maxDriverGroups)(
       hist, valueCounts
@@ -435,7 +447,7 @@ object Quantiles {
       StructType(Seq(StructField("g", gType),
                      StructField("b", LongType, nullable = false))))
     val fetched = in.withColumn("b", bkt)
-      .join(broadcast(targets), Seq("g", "b"))
+      .keyJoin(broadcast(targets), "g", "b")
       .select(col("g"), col("b"), col("v"), col("c"))
       .collect()                                                  // job 2
     val pairs = valuePairs(fetched, 2)(r => (r.get(0), r.getLong(1)))
@@ -642,9 +654,7 @@ object Quantiles {
     * cannot order exactly, go through the distributed [[interpolate]].
     * Returns None when the group count exceeds `maxDriverGroups` — the
     * one extra cost of that probe is the stats job, which the fallback
-    * would have run anyway. Groups absent from the histogram (a null
-    * group key, which the stats join drops) yield no rows, as on the
-    * distributed chain. */
+    * would have run anyway. */
   private def driverPlanned(session: SparkSession, statsDf: DataFrame,
                             ps: Seq[Double], groupCol: String,
                             maxDriverGroups: Int)(
@@ -707,7 +717,7 @@ object Quantiles {
                       ceil(col("k")).cast("long"))).as("rank"))
     val ranks = needs.select(col("g"), col("rank")).distinct()
     // locate each rank's bucket: below <= rank < below + cnt
-    val targets = ranks.join(broadcast(cum), Seq("g"))
+    val targets = ranks.keyJoin(broadcast(cum), "g")
       .filter(col("rank") >= col("below") && col("rank") < col("below") + col("cnt"))
       .select(col("g"), col("rank"), col("b"), (col("rank") - col("below")).as("local"))
       .localCheckpoint(true)
@@ -727,14 +737,14 @@ object Quantiles {
       .rowsBetween(Window.unboundedPreceding, -1)
     val statValues = valCounts
       .withColumn("vbelow", coalesce(sum(col("c")).over(wVal), lit(0L)))
-      .join(broadcast(targets), Seq("g", "b"))
+      .keyJoin(broadcast(targets), "g", "b")
       .filter(col("local") >= col("vbelow") &&
               col("local") < col("vbelow") + col("c"))
       .select(col("g"), col("rank"), col("v"))
     // interpolate with DuckDB's exact arithmetic (see object doc):
     // integer k → lo; else lo·(⌈k⌉−k) + hi·(k−⌊k⌋). For integer k the
     // two rank branches resolve to the same row (lo == hi).
-    needs.join(statValues, Seq("g", "rank"))
+    needs.keyJoin(statValues, "g", "rank")
       .groupBy(col("g"), col("p"), col("k"))
       .agg(max(when(col("rank") === floor(col("k")).cast("long"), col("v"))).as("lo"),
            max(when(col("rank") === ceil(col("k")).cast("long"), col("v"))).as("hi"))

@@ -189,17 +189,16 @@ object BehaviorOps {
         // is below ulp (measured ±3e-6 drift on the intercept) while the
         // 1e-6 quantum is 20x above it. Quantization at 1e-6 of 1e8-
         // magnitude terms is relative 1e-14 — inside double noise.
-        def dsum6(c: Column) =
-          sum((floor(c * 1e6 + 0.5) / 1e6).cast(DecimalType(38, 6))).cast("double")
         val base = t(s, d, "events").select(col("event_type"),
           (unix_micros(col("ts")).cast("double") / lit(86400000000.0) - lit(19700.0)).as("x"),
           col("value").as("y"))
         val sums = base.groupBy(col("event_type")).agg(
           lcount(lit(1)).as("n"),
-          dsum6(col("x")).as("sx"), dsum6(col("y")).as("sy"),
-          dsum6(col("x") * col("y")).as("sxy"),
-          dsum6(col("x") * col("x")).as("sxx"),
-          dsum6(col("y") * col("y")).as("syy"))
+          sum6(col("x")).cast("double").as("sx"),
+          sum6(col("y")).cast("double").as("sy"),
+          sum6(col("x") * col("y")).cast("double").as("sxy"),
+          sum6(col("x") * col("x")).cast("double").as("sxx"),
+          sum6(col("y") * col("y")).cast("double").as("syy"))
         val nd = col("n").cast("double")
         val covn = nd * col("sxy") - col("sx") * col("sy")
         val varxn = nd * col("sxx") - col("sx") * col("sx")
@@ -216,8 +215,6 @@ object BehaviorOps {
     QueryDef("q152_cusum_drift",
       "CUSUM changepoint detection over hourly series (Page's one-sided cumulative-sum chart): per event_type, the hourly value sums feed S := max(0, S + (x - mu - 0.5*sd)) and an hour is flagged once S exceeds 4*sd — the standard upward-drift monitor (the 0.5*sd slack makes a stationary series decay to 0 instead of random-walking; measured: no slack flags 82% of hours, slacked 3.5%). The reflected fold is EXACTLY the clamped running sum — max(0, .) IS a saturating floor — so the engine is ScanFold.clampedRunningSumS (string series keys, same one-exchange sorted O(1)-state shape) over integer-micro deltas; mu/sd come from one decimal-exact moment pass broadcast back (sqrt is IEEE-correctly-rounded, so sd is cross-engine deterministic). Series per key = hours, shuffled rows = |types| x hours — bounded; the raw corpus only pays the hourly rollup",
       (s, d) => {
-        def g6sum(c: Column) =
-          sum((floor(c * 1e6 + 0.5) / 1e6).cast(DecimalType(38, 6))).cast("double")
         val h = t(s, d, "events")
           .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
           .agg(dsum(col("value")).as("h_sum"))
@@ -228,11 +225,11 @@ object BehaviorOps {
         // degenerate constant series the 6-dp pre-round can push the
         // grid-rounded E[x^2] a hair below mu^2, and sqrt(negative)
         // would go NaN — which Spark and DuckDB then CAST differently
-        // (silent divergence instead of a loud failure; round-9 ADVICE)
+        // (silent divergence instead of a loud failure)
         val m = h.groupBy(col("event_type")).agg(
           mu.as("mu"),
-          sqrt(greatest(lit(0.0),
-            g6sum(col("h_sum") * col("h_sum")) / count(lit(1)) - mu * mu)).as("sd"))
+          sqrt(greatest(lit(0.0), sum6(col("h_sum") * col("h_sum")).cast("double")
+            / count(lit(1)) - mu * mu)).as("sd"))
         val dd = h.join(broadcast(m), Seq("event_type"))
           .select(col("event_type"), col("hour_us"),
             floor((col("h_sum") - col("mu") - lit(0.5) * col("sd")) * 1e6)
@@ -252,7 +249,6 @@ object BehaviorOps {
     QueryDef("q153_autocorrelation",
       "autocorrelation function at lags 1-3 over the hourly series per event_type — the seasonality/persistence diagnostic run before any forecasting model: r_k = sum(c_t * c_{t-k}) / sum(c_t^2) with c = h_sum - mu. ONE series-keyed window pass produces all three lag columns (lags on the OBSERVED hour sequence; the fixture's hours are dense), products pre-round onto the 6-dp floor-grid into exact DECIMAL(38,6) sums (order-independent), the per-type moment row is |types|-sized, and the 3-lag unpivot explodes in-row. Null lags at each series head drop out of the sums in both engines (null-skipping SUM == FILTER). All downstream ratios share identical expression trees -> bit-equal before the 6-dp output grid",
       (s, d) => {
-        def g6(c: Column) = (floor(c * 1e6 + 0.5) / 1e6).cast(DecimalType(38, 6))
         val h = t(s, d, "events")
           .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
           .agg(dsum(col("value")).as("h_sum"))
@@ -269,10 +265,10 @@ object BehaviorOps {
           lag(col("c"), 2).over(w).as("c2"),
           lag(col("c"), 3).over(w).as("c3"))
         val sums = l.groupBy(col("event_type")).agg(
-          sum(g6(col("c") * col("c"))).cast("double").as("s0"),
-          sum(g6(col("c") * col("c1"))).cast("double").as("s1"),
-          sum(g6(col("c") * col("c2"))).cast("double").as("s2"),
-          sum(g6(col("c") * col("c3"))).cast("double").as("s3"))
+          sum6(col("c") * col("c")).cast("double").as("s0"),
+          sum6(col("c") * col("c1")).cast("double").as("s1"),
+          sum6(col("c") * col("c2")).cast("double").as("s2"),
+          sum6(col("c") * col("c3")).cast("double").as("s3"))
         sums.select(col("event_type"), explode(array(
             struct(lit(1L).as("lag_k"), (col("s1") / col("s0")).as("r")),
             struct(lit(2L).as("lag_k"), (col("s2") / col("s0")).as("r")),
@@ -301,7 +297,6 @@ object BehaviorOps {
     QueryDef("q204_pacf",
       "partial autocorrelation at lags 1-3 per event_type via the Durbin-Levinson recursion - the MODEL-ORDER diagnostic completing q153's ACF (ACF says how much memory the series has; PACF says which AR order explains it: an AR(p) series has PACF cutting off sharply after lag p, which raw ACF cannot show because it compounds indirect correlation through intermediate lags). phi_11 = r1, phi_22 = (r2 - r1^2)/(1 - r1^2), phi_33 via the recursed coefficients phi_21 = phi_11 - phi_22*phi_11. The corpus pipeline IS q153's (one hourly rollup, broadcast means, one grid window pass, 6-dp floor-grid moment sums); the DL recursion then runs on the |types|-row ACF frame using the ROUNDED 6-dp r_k as inputs - engine-identical integers-on-a-grid in, so the recursion's pinned chain of correctly-rounded IEEE ops (no reassociation between engines) is bit-equal out. Scale: DL is O(p^2) per series on a p-row grid - the corpus never feels the recursion at any lag order. Honest readout: the hourly series is iid noise, so all PACF values sit at the O(1/sqrt(n)) noise floor (|phi| < 0.09) and no AR order is suggested",
       (s, d) => {
-        def g6(c: Column) = (floor(c * 1e6 + 0.5) / 1e6).cast(DecimalType(38, 6))
         val h = t(s, d, "events")
           .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
           .agg(dsum(col("value")).as("h_sum"))
@@ -318,10 +313,10 @@ object BehaviorOps {
           lag(col("c"), 2).over(w).as("c2"),
           lag(col("c"), 3).over(w).as("c3"))
         val sums = l.groupBy(col("event_type")).agg(
-          sum(g6(col("c") * col("c"))).cast("double").as("s0"),
-          sum(g6(col("c") * col("c1"))).cast("double").as("s1"),
-          sum(g6(col("c") * col("c2"))).cast("double").as("s2"),
-          sum(g6(col("c") * col("c3"))).cast("double").as("s3"))
+          sum6(col("c") * col("c")).cast("double").as("s0"),
+          sum6(col("c") * col("c1")).cast("double").as("s1"),
+          sum6(col("c") * col("c2")).cast("double").as("s2"),
+          sum6(col("c") * col("c3")).cast("double").as("s3"))
         // Durbin-Levinson on the |types|-row frame, off the ROUNDED acf
         val r1 = floor(col("s1") / col("s0") * lit(1e6) + lit(0.5)) / lit(1e6)
         val r2 = floor(col("s2") / col("s0") * lit(1e6) + lit(0.5)) / lit(1e6)
@@ -350,11 +345,9 @@ object BehaviorOps {
           .withColumn("forecast", lag(col("level") + col("trend"), 1).over(w))
           .withColumn("naive", lag(col("value"), 1).over(w))
           .filter(col("forecast").isNotNull)
-        def g6sum(c: Column) =
-          sum((floor(c * 1e6 + 0.5) / 1e6).cast(DecimalType(38, 6))).cast("double")
         j.agg(lcount(lit(1)).as("n_forecasts"),
-              g6sum(abs(col("value") - col("forecast"))).as("ae_holt"),
-              g6sum(abs(col("value") - col("naive"))).as("ae_naive"))
+              sum6(abs(col("value") - col("forecast"))).cast("double").as("ae_holt"),
+              sum6(abs(col("value") - col("naive"))).cast("double").as("ae_naive"))
           .select(col("n_forecasts"),
             (floor(col("ae_holt") / col("n_forecasts") * lit(1e6) + lit(0.5)) / lit(1e6)).as("mae_holt"),
             (floor(col("ae_naive") / col("n_forecasts") * lit(1e6) + lit(0.5)) / lit(1e6)).as("mae_naive"),
@@ -393,8 +386,6 @@ object BehaviorOps {
     QueryDef("q155_linear_attribution",
       "multi-touch LINEAR attribution — the fractional-credit complement of q146's last-touch: every view/click touch in the 7-day window strictly preceding a purchase (same (ts, event_id) total-order convention as q146) receives an equal share value/n_touches, per-channel credits and touchpoint counts roll up, and untouched purchases land in 'direct' at full value (q146's direct revenue, 3610.44 at sf0.01, reappears here EXACTLY — the two models must agree on the unattributable set). The pair stage is a user_id EQUI-join with the time predicates as residuals (hash join, never cartesian — the q117 per-key-bounded quadratic: touches per user per week, ~dozens); per-purchase touch counts are one pid-keyed aggregate joined back; fractional credits pre-round onto the 6-dp floor-grid into exact decimal sums. At 100 TB every stage keys on user_id or pid — no global structure",
       (s, d) => {
-        def g6sum(c: Column) =
-          sum((floor(c * 1e6 + 0.5) / 1e6).cast(DecimalType(38, 6))).cast("double")
         val ev = t(s, d, "events")
         val t0 = ev.filter(col("event_type").isin("view", "click"))
           .select(col("user_id"), col("ts"), col("event_id"),
@@ -412,7 +403,7 @@ object BehaviorOps {
         val agg = pr.join(n, Seq("pid"))
           .select(col("channel"), (col("value") / col("nt")).as("credit"))
           .groupBy(col("channel"))
-          .agg(g6sum(col("credit")).as("credit"),
+          .agg(sum6(col("credit")).cast("double").as("credit"),
                lcount(lit(1)).as("n_touchpoints"))
         val direct = p0.join(n, p0("pid") === n("pid"), "left_anti")
           .agg(dsum(round(col("value"), 6)).as("credit"),
@@ -528,8 +519,7 @@ object BehaviorOps {
           .withColumn("woe", round(log(col("gs") / col("bs")), 4))
           .withColumn("share_diff", col("gs") - col("bs"))
         val iv = e.agg(
-          sum((floor(col("share_diff") * col("woe") * lit(1e6) + lit(0.5)) / lit(1e6))
-            .cast(DecimalType(38, 6))).cast("double").as("iv"))
+          sum6(col("share_diff") * col("woe")).cast("double").as("iv"))
         e.select(col("bin"), col("n_good"), col("n_bad"), col("woe"))
           .crossJoin(broadcast(iv))
       },
@@ -593,8 +583,6 @@ object BehaviorOps {
     QueryDef("q160_position_attribution",
       "position-based (U-shaped 40/20/40) attribution completing the model family: q146 last-touch, q155 linear, and here first touch 40% / last touch 40% / middles splitting 20% (1 touch takes 100%, 2 touches 50/50) — the industry default that values discovery AND closing. Fully RATIONAL weights (no exp-decay libm hazard — a time-decay variant would pay per-row exp ulp risk; the U-shape is deterministic division only), same strictly-preceding 7-day pair join as q155 (user-keyed equi-join, per-key-bounded), positions from ONE pid-keyed window pass (rank + count share the exchange), credits on the 6-dp grid into exact decimal sums, 'direct' unchanged — all three models agree on the unattributable set by construction",
       (s, d) => {
-        def g6sum(c: Column) =
-          sum((floor(c * 1e6 + 0.5) / 1e6).cast(DecimalType(38, 6))).cast("double")
         val ev = t(s, d, "events")
         val t0 = ev.filter(col("event_type").isin("view", "click"))
           .select(col("user_id").as("t_user"), col("ts").as("tts"),
@@ -622,7 +610,7 @@ object BehaviorOps {
           .withColumn("nt", count(lit(1)).over(wAll).cast("long"))
           .select(col("channel"), (col("value") * weight).as("credit"))
           .groupBy(col("channel"))
-          .agg(g6sum(col("credit")).as("credit"),
+          .agg(sum6(col("credit")).cast("double").as("credit"),
                lcount(lit(1)).as("n_touchpoints"))
         val direct = p0.join(pr.select(col("pid")).distinct(),
             Seq("pid"), "left_anti")
@@ -696,8 +684,8 @@ object BehaviorOps {
           .localCheckpoint(true)
         val seas = tr.filter(col("trend").isNotNull)
           .groupBy(col("dow"))
-          .agg((sum(g6(col("day_total") - col("trend")).cast(DecimalType(38, 6)))
-            .cast("double") / count(lit(1))).as("sraw"))
+          .agg((sum6(col("day_total") - col("trend")).cast("double") / count(lit(1)))
+            .as("sraw"))
           .select(col("dow"), g6(col("sraw")).as("seasonal"))
         tr.join(broadcast(seas), Seq("dow"))
           .select(col("day"), col("day_total"), col("trend"), col("seasonal"),
@@ -721,7 +709,7 @@ object BehaviorOps {
           .groupBy(col("bin"))
           .agg(lcount(lit(1)).as("n"),
                count(when(col("pos"), 1)).cast("long").as("n_pos"),
-               sum(g6(col("conf")).cast(DecimalType(38, 6))).cast("double").as("csum"))
+               sum6(col("conf")).cast("double").as("csum"))
         val wAll = Window.orderBy(col("bin"))
           .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         binned
@@ -759,8 +747,8 @@ object BehaviorOps {
         val ranges = pairs
           .join(grid, col("bin") >= col("j") && col("bin") <= col("k"))
           .groupBy(col("j"), col("k"))
-          .agg((sum(g6(col("n") * col("pos_rate")).cast(DecimalType(38, 6)))
-            .cast("double") / sum(col("n"))).as("araw"))
+          .agg((sum6(col("n") * col("pos_rate")).cast("double") / sum(col("n")))
+            .as("araw"))
           .select(col("j"), col("k"), g6(col("araw")).as("a"))
         val fit = ranges
           .join(grid.select(col("bin").as("i")),
@@ -775,8 +763,6 @@ object BehaviorOps {
     QueryDef("q183_time_decay_attribution",
       "TIME-DECAY multi-touch attribution, completing the attribution family's fourth canonical model (q146 last-touch, q155 linear, q160 U-shaped): each view/click touch in the 7-day window before a purchase earns weight 0.5^(age/half-life) with a 7-day half-life — a touch at the purchase instant weighs 1, a week-old touch 0.5 — and the purchase value splits proportionally; untouched purchases land in 'direct' at full value, which must equal q146/q155's direct revenue EXACTLY (the family's cross-model invariant). Numerics: the decay is the suite's one libm pow in a hot path, handled by the established q17 recipe — the exponent is O(1) (age/half-life in [0,1]), the weight lands on the 4-dp floor-grid BEFORE any cross-row use, so a last-ulp libm disagreement between engines dies at the grid; per-purchase weight totals then sum exactly in DECIMAL(38,4), and fractional credits pre-round 6-dp into exact decimal channel sums. Scale: identical shape to q155 — user-keyed equi-join with residual time predicates (per-user-week bounded), pid-keyed weight-total aggregate joined back, no global structure anywhere",
       (s, d) => {
-        def g6sum(c: Column) =
-          sum((floor(c * 1e6 + 0.5) / 1e6).cast(DecimalType(38, 6))).cast("double")
         val ev = t(s, d, "events")
         val t0 = ev.filter(col("event_type").isin("view", "click"))
           .select(col("user_id"), col("ts").as("tts"),
@@ -800,7 +786,7 @@ object BehaviorOps {
             (col("value") * col("w").cast("double")
               / col("wsum").cast("double")).as("credit"))
           .groupBy(col("channel"))
-          .agg(g6sum(col("credit")).as("credit"),
+          .agg(sum6(col("credit")).cast("double").as("credit"),
                lcount(lit(1)).as("n_touchpoints"))
         val direct = p0.join(wt, p0("pid") === wt("pid"), "left_anti")
           .agg(dsum(round(col("value"), 6)).as("credit"),
@@ -818,8 +804,7 @@ object BehaviorOps {
         val monthly = t(s, d, "orders")
           .groupBy((year(col("o_orderdate")) * lit(12) + month(col("o_orderdate")))
             .cast("long").as("tm"))
-          .agg(sum(col("o_totalprice").cast(DecimalType(38, 6)))
-            .cast("double").as("x"))
+          .agg(dsum(col("o_totalprice")).as("x"))
           .withColumn("k", lit(0L)).withColumn("z", lit(0L))
         graft.ext.ScanFold.holtWinters(monthly, "k", "tm", "z", "x",
             alpha = 0.25, beta = 0.125, gamma = 0.25, m = 12)
@@ -836,8 +821,7 @@ object BehaviorOps {
         val monthly = t(s, d, "orders")
           .groupBy((year(col("o_orderdate")) * lit(12) + month(col("o_orderdate")))
             .cast("long").as("tm"))
-          .agg(sum(col("o_totalprice").cast(DecimalType(38, 6)))
-            .cast("double").as("x"))
+          .agg(dsum(col("o_totalprice")).as("x"))
           .withColumn("k", lit(0L)).withColumn("z", lit(0L))
           .localCheckpoint(true) // both folds + the actuals read it
         val h = graft.ext.ScanFold.holt(monthly, "k", "tm", "z", "x",
@@ -855,11 +839,9 @@ object BehaviorOps {
             lag(col("fw0"), 1).over(w).as("fw"),
             row_number().over(w).as("rn"))
           .filter(col("rn") > 25)
-        def g6sum(c: Column) =
-          sum((floor(c * 1e6 + 0.5) / 1e6).cast(DecimalType(38, 6))).cast("double")
         j.agg(lcount(lit(1)).as("n_forecasts"),
-              g6sum(abs(col("x") - col("fh"))).as("ae_holt"),
-              g6sum(abs(col("x") - col("fw"))).as("ae_hw"))
+              sum6(abs(col("x") - col("fh"))).cast("double").as("ae_holt"),
+              sum6(abs(col("x") - col("fw"))).cast("double").as("ae_hw"))
           .select(col("n_forecasts"),
             (floor(col("ae_holt") / col("n_forecasts") * lit(1e6) + lit(0.5)) / lit(1e6)).as("mae_holt"),
             (floor(col("ae_hw") / col("n_forecasts") * lit(1e6) + lit(0.5)) / lit(1e6)).as("mae_hw"),

@@ -49,8 +49,7 @@ object CorpusOps {
     val perDoc = tok.join(lp, "tk")
       .groupBy(col("doc_id"))
       .agg(lcount(lit(1)).as("n_tokens"),
-           (sum(col("lp").cast(DecimalType(38, 6))).cast("double") /
-            count(lit(1))).as("m"))
+           (dsum(col("lp")) / count(lit(1))).as("m"))
     docs.select(col("doc_id"), col("lang")).join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),

@@ -130,15 +130,15 @@ object EvalOps {
       (s, d) => {
         val base = t(s, d, "orders").select(
           TextFunctions.portableHash(col("o_orderkey").cast("string"), 131).as("h"),
-          g6(col("o_totalprice")).cast(DecimalType(38, 6)).as("p6"))
+          col("o_totalprice").as("p"))
         val tot = base.agg(
-          g6(sum(col("p6")).cast("double") / count(lit(1))).as("theta"))
+          g6(sum6(col("p")).cast("double") / count(lit(1))).as("theta"))
         val reps = base
-          .select(explode(sequence(lit(0), lit(59))).as("r"), col("h"), col("p6"))
+          .select(explode(sequence(lit(0), lit(59))).as("r"), col("h"), col("p"))
           .filter(expr("(shiftright(h, r) & 1) = 1"))
           .groupBy(col("r").cast("long").as("replicate"))
           .agg(lcount(lit(1)).as("n_r"),
-            g6(sum(col("p6")).cast("double") / count(lit(1))).as("mean_r"))
+            g6(sum6(col("p")).cast("double") / count(lit(1))).as("mean_r"))
         val grid = reps.crossJoin(broadcast(tot)).localCheckpoint(true) // 60-row grid
         val sm = grid.agg(
           sqrt(sum((floor((col("mean_r") - col("theta"))
@@ -159,8 +159,7 @@ object EvalOps {
           (col("l_orderkey") % 3).as("split"),
           col("l_quantity").as("q"), col("l_extendedprice").as("y"))
         val model = li.filter(col("split") === 0).groupBy(col("q"))
-          .agg((sum(g6(col("y")).cast(DecimalType(38, 6))).cast("double")
-            / count(lit(1))).as("yhat"))
+          .agg((sum6(col("y")).cast("double") / count(lit(1))).as("yhat"))
           .localCheckpoint(true) // 50-row model grid: joined three times
         // calibration residuals are |y - yhat| ≥ 0, so the bit-bucket
         // quantile path applies: ONE histogram job with n_cal riding
@@ -168,8 +167,7 @@ object EvalOps {
         // re-derive the cheap broadcast join now) and one fetch job;
         // qhat/n_cal return as DRIVER SCALARS, so the test aggregate
         // compares against a literal instead of two broadcast
-        // crossJoins. 4 jobs total (model, histogram, fetch, test),
-        // down from round 13's 6 — see the description's job ledger.
+        // crossJoins. 4 jobs total (model, histogram, fetch, test).
         val cal = li.filter(col("split") === 1)
           .join(broadcast(model), Seq("q"))
           .select(abs(col("y") - col("yhat")).as("r"))
@@ -240,8 +238,6 @@ object EvalOps {
     QueryDef("q190_corr_matrix",
       "one-pass Pearson correlation matrix over lineitem's numeric columns (quantity, extendedprice, discount, tax) in long form — the multivariate completion of the profiling plane (q82 profiles columns independently; q163 measures ONE rank association; this is the all-pairs linear screen a feature-engineering pass runs first). All 15 moments (4 sums, 4 sum-of-squares, 6 cross-products, count) accumulate in ONE corpus aggregate — never one pass per pair — with every product pre-rounded onto the 6-dp grid into exact DECIMAL(38,6) sums (price^2 ~ 1e10 sits 6 orders above its ~2e-6 ulp: the q138 quantum-above-ulp rule); the 6 correlations then derive from the checkpointed ONE-ROW moment frame via shared-expression IEEE arithmetic. Scale: one scan, map-side combine, a 1-row tail — the plan cannot meaningfully be beaten. Honest readout: all six pairs measure |r| < 0.01 — the synthetic fixture draws each column independently, and a correlation screen that reports a diagonal matrix on independent data is doing its job (q163's rho=0.003 on the same pair, cross-validated)",
       (s, d) => {
-        val D6 = DecimalType(38, 6)
-        def m6(c: Column) = sum(g6(c).cast(D6)).cast("double")
         val cols = Seq("l_quantity" -> "qty", "l_extendedprice" -> "price",
           "l_discount" -> "disc", "l_tax" -> "tax")
         val pairs = for {
@@ -249,10 +245,10 @@ object EvalOps {
         } yield (a, b)
         val li = t(s, d, "lineitem")
         val one = li.agg(lcount(lit(1)).as("n"),
-            (cols.map { case (c, nm) => Seq(m6(col(c)).as(s"s_$nm"),
-              m6(col(c) * col(c)).as(s"ss_$nm")) } ++
+            (cols.map { case (c, nm) => Seq(sum6(col(c)).cast("double").as(s"s_$nm"),
+              sum6(col(c) * col(c)).cast("double").as(s"ss_$nm")) } ++
              pairs.map { case ((ca, na), (cb, nb)) =>
-               Seq(m6(col(ca) * col(cb)).as(s"sp_${na}_$nb")) })
+               Seq(sum6(col(ca) * col(cb)).cast("double").as(s"sp_${na}_$nb")) })
               .flatten: _*)
           .localCheckpoint(true) // 1-row moment frame: 6 pair selects union
         val out = pairs.map { case ((_, na), (_, nb)) =>
@@ -277,18 +273,16 @@ object EvalOps {
           .groupBy(col("event_type"))
           .agg(max(when(col("p") === 0.1, col("value"))).as("p10"),
                max(when(col("p") === 0.9, col("value"))).as("p90"))
-        val D6 = DecimalType(38, 6)
-        def m6(c: Column) = sum(g6(c).cast(D6)).cast("double")
         val w = least(greatest(col("value"), col("p10")), col("p90"))
         val inBand = col("value") >= col("p10") && col("value") <= col("p90")
         ev.join(broadcast(edges), Seq("event_type"))
           .groupBy(col("event_type"))
           .agg(lcount(lit(1)).as("n"),
             max(col("p10")).as("p10"), max(col("p90")).as("p90"),
-            (m6(col("value")) / count(lit(1))).as("mean_raw0"),
-            (m6(when(inBand, col("value"))) / count(when(inBand, 1)))
+            (sum6(col("value")).cast("double") / count(lit(1))).as("mean_raw0"),
+            (sum6(when(inBand, col("value"))).cast("double") / count(when(inBand, 1)))
               .as("mean_trimmed0"),
-            (m6(w) / count(lit(1))).as("mean_winsorized0"))
+            (sum6(w).cast("double") / count(lit(1))).as("mean_winsorized0"))
           .select(col("event_type"), col("n"), col("p10"), col("p90"),
             g6(col("mean_raw0")).as("mean_raw"),
             g6(col("mean_trimmed0")).as("mean_trimmed"),
@@ -305,7 +299,7 @@ object EvalOps {
             lit(5L)).as("f"),
           col("l_quantity").as("q"), col("l_extendedprice").as("y"))
         val cell = li.groupBy(col("f"), col("q"))
-          .agg(sum(g6(col("y")).cast(DecimalType(38, 6))).as("s_f"),
+          .agg(sum6(col("y")).as("s_f"),
                lcount(lit(1)).as("n_f"))
           .localCheckpoint(true) // 250-cell grid: totals + loo models read it
         val tot = cell.groupBy(col("q"))
@@ -329,10 +323,8 @@ object EvalOps {
               * lit(1e6) + lit(0.5)) / lit(1e6)).as("rmse"))
           .localCheckpoint(true) // 5-row fold grid: summary reads it twice
         val sm = folds.agg(
-            (sum(col("rmse").cast(DecimalType(38, 6))).cast("double")
-              / count(lit(1))).as("m"),
-            (sum((col("rmse") * col("rmse")).cast(DecimalType(38, 6)))
-              .cast("double") / count(lit(1))).as("m2"))
+            (dsum(col("rmse")) / count(lit(1))).as("m"),
+            (dsum(col("rmse") * col("rmse")) / count(lit(1))).as("m2"))
           .select(g6(col("m")).as("rmse_mean"),
             g6(sqrt(greatest(lit(0.0), col("m2") - col("m") * col("m"))))
               .as("rmse_sd"))

@@ -170,9 +170,9 @@ object LlmOps2 {
           .join(dl, "doc_id")
           .crossJoin(broadcast(st))
           .select(col("query_id"), col("doc_id"),
-            (floor(idf4 * tfc * 1e6 + 0.5) / 1e6).cast(DecimalType(38, 6)).as("contrib"))
+            (idf4 * tfc).as("contrib"))
         val perDoc = sc.groupBy(col("query_id"), col("doc_id"))
-          .agg(sum(col("contrib")).as("sd"), lcount(lit(1)).as("n_terms_hit"))
+          .agg(sum6(col("contrib")).as("sd"), lcount(lit(1)).as("n_terms_hit"))
         val top = graft.plans.TopK.perKey(perDoc, Seq(col("query_id")),
           Seq(col("sd").desc, col("doc_id")), 10)
         import org.apache.spark.sql.expressions.Window
@@ -208,16 +208,16 @@ object LlmOps2 {
           .agg(lcount(lit(1)).as("v"), sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
         val surpA = floor(log((col("na") + col("v")) / (col("ca") + lit(1.0))) * 1e4 + 0.5) / 1e4
         val surpB = floor(log((col("nb") + col("v")) / (col("cb") + lit(1.0))) * 1e4 + 0.5) / 1e4
-        val kab = floor((col("ca") + lit(1.0)) / (col("na") + col("v")) * (surpB - surpA) * 1e6 + 0.5) / 1e6
-        val kba = floor((col("cb") + lit(1.0)) / (col("nb") + col("v")) * (surpA - surpB) * 1e6 + 0.5) / 1e6
+        val kab = (col("ca") + lit(1.0)) / (col("na") + col("v")) * (surpB - surpA)
+        val kba = (col("cb") + lit(1.0)) / (col("nb") + col("v")) * (surpA - surpB)
         c.join(broadcast(st), "lang")
           .select(col("lang"), col("v"), col("na"), col("nb"),
-            kab.cast(DecimalType(38, 6)).as("kab"), kba.cast(DecimalType(38, 6)).as("kba"))
+            kab.as("kab"), kba.as("kba"))
           .groupBy(col("lang"))
           .agg(min(col("v")).as("n_terms"), min(col("na")).as("n_tok_a"),
                min(col("nb")).as("n_tok_b"),
-               sum(col("kab")).cast("double").as("kl_ab"),
-               sum(col("kba")).cast("double").as("kl_ba"))
+               sum6(col("kab")).cast("double").as("kl_ab"),
+               sum6(col("kba")).cast("double").as("kl_ba"))
       },
       Some(s"""WITH tok AS (SELECT lang, doc_id % 2 AS snap, unnest(${graft.functions.TextFunctions.sql.tokensOf("text")}) AS term FROM documents),
          |c AS (SELECT lang, term, CAST(SUM(CASE WHEN snap = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca, CAST(SUM(CASE WHEN snap = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb FROM tok GROUP BY 1, 2),

@@ -308,7 +308,6 @@ object SketchOps {
     QueryDef("q84_bigram_fluency",
       "bigram-LM fluency scoring (the KenLM-perplexity filter one model order up from q63's unigram): corpus bigram MLE P(y|x) = c(xy)/c(x), per-document mean conditional surprisal ln(c(x)/c(xy)) — rare TRANSITIONS score high even when both words are common, which is exactly what the unigram model cannot see. Surprisal is rounded to 4 decimals per distinct bigram BEFORE the per-doc sum (q63's parity recipe: the sum then runs on exact decimals, order-independent, and libm ln's engine-specific last ulp is rounded away). Both count joins are vocabulary-sized at scale — unhinted, AQE decides",
       (s, d) => {
-        import org.apache.spark.sql.types.DecimalType
         val docs = t(s, d, "documents")
         val bg = docs.select(col("doc_id"), explode(wordNgrams(col("text"), 2)).as("b"))
         val cxy = bg.groupBy(col("b")).agg(count(lit(1)).as("cxy"))
@@ -323,8 +322,7 @@ object SketchOps {
         val perDoc = bg.join(lp, "b")
           .groupBy(col("doc_id"))
           .agg(lcount(lit(1)).as("n_bigrams"),
-               (sum(col("lp").cast(DecimalType(38, 6))).cast("double") /
-                count(lit(1))).as("m"))
+               (dsum(col("lp")) / count(lit(1))).as("m"))
         docs.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
           .select(col("doc_id"),
             coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),

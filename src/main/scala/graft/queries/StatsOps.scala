@@ -201,7 +201,7 @@ object StatsOps {
         // checkpointed: the custkey rollup feeds the min/max stats pass,
         // the binning pass, and (through the curve) the area + final
         // selects — un-checkpointed each re-derived the orders groupBy
-        // (round-9 69x plan bug)
+        // (measured 69× slower)
         val rev = t(s, d, "orders")
           .groupBy(col("o_custkey"))
           .agg(dsum(col("o_totalprice")).as("r"))
@@ -211,15 +211,13 @@ object StatsOps {
           .select(least(lit(255.0), floor((col("r") - col("mn"))
             / ((col("mx") - col("mn")) / lit(256.0)))).cast("long").as("bin"),
             col("r"))
-        def g6d(c: Column) =
-          sum((floor(c * 1e6 + 0.5) / 1e6).cast(DecimalType(38, 6)))
         val c = b.groupBy(col("bin")).agg(
-          lcount(lit(1)).as("n"), g6d(col("r")).cast("double").as("rs"))
+          lcount(lit(1)).as("n"), sum6(col("r")).cast("double").as("rs"))
         val wc = Window.orderBy(col("bin")).rowsBetween(Window.unboundedPreceding, 0)
         val wl = Window.orderBy(col("bin"))
         val w = c.select(col("bin"), col("n"),
           sum(col("n")).over(wc).cast("long").as("cn"),
-          g6d(col("rs")).over(wc).cast("double").as("cr"))
+          sum((floor(col("rs") * 1e6 + 0.5) / 1e6).cast(D)).over(wc).cast("double").as("cr"))
         val tot = w.agg(max(col("cn")).cast("long").as("tn"), max(col("cr")).as("tr"))
         val l = w.crossJoin(broadcast(tot)).select(col("bin"), col("n"),
           (col("cn").cast("double") / col("tn")).as("p"),
@@ -246,10 +244,8 @@ object StatsOps {
         val st = t(s, d, "customer")
           .groupBy(col("c_nationkey").as("nation"))
           .agg(lcount(lit(1)).as("n_h"),
-               sum(g6(col("c_acctbal")).cast(DecimalType(38, 6)))
-                 .cast("double").as("sx"),
-               sum(g6(col("c_acctbal") * col("c_acctbal"))
-                 .cast(DecimalType(38, 6))).cast("double").as("sxx"))
+               sum6(col("c_acctbal")).cast("double").as("sx"),
+               sum6(col("c_acctbal") * col("c_acctbal")).cast("double").as("sxx"))
         val mu = col("sx") / col("n_h")
         val sd = sqrt(greatest(lit(0.0), col("sxx") / col("n_h") - mu * mu))
         val g = st.select(col("nation"), col("n_h"),
@@ -377,11 +373,10 @@ object StatsOps {
     QueryDef("q198_mann_kendall",
       "Mann-Kendall trend test on monthly revenue - the SIGNIFICANCE twin of q185's Theil-Sen estimator (q185 answers 'how steep', this answers 'is it real'), and the nonparametric member beside q151's parametric OLS fit: S = sum over month pairs of sign(v_j - v_i), Var(S) = [n(n-1)(2n+5) - tie term]/18, Z with the +-1 continuity correction, verdict at |Z| > 1.96. The statistic is a pure INTEGER until the final division - monthly revenues are exact DECIMAL(38,6) sums compared exactly (never subtracted as floats), so every sign, S, and the tie census are engine-independent facts, and Var's integer numerator / 18.0 / sqrt are single correctly-rounded IEEE ops on identical inputs. Scale form: the corpus pays the ONE month rollup (calendar-bounded grid, ~79 rows); the O(grid^2) pair set is the q185 broadcast grid self-join (the quadratic lives on the calendar, never the corpus); the tie census is a grid groupBy. Honest readout: the iid fixture has no trend and the test must not invent one - |Z| < 1.96, trend=false",
       (s, d) => {
-        val D386 = DecimalType(38, 6)
         val monthly = t(s, d, "orders")
           .groupBy((year(col("o_orderdate")) * lit(12) + month(col("o_orderdate")))
             .cast("long").as("tm"))
-          .agg(sum(col("o_totalprice").cast(D386)).as("v"))
+          .agg(sum(col("o_totalprice").cast(D)).as("v"))
           .localCheckpoint(true) // month grid: pair join x2 + tie pass + count
         val a = monthly.select(col("tm").as("t1"), col("v").as("v1"))
         val b = monthly.select(col("tm").as("t2"), col("v").as("v2"))
@@ -418,8 +413,7 @@ object StatsOps {
         val monthly = t(s, d, "orders")
           .groupBy((year(col("o_orderdate")) * lit(12) + month(col("o_orderdate")))
             .cast("long").as("tm"))
-          .agg(sum(col("o_totalprice").cast(DecimalType(38, 6)))
-            .cast("double").as("x"))
+          .agg(dsum(col("o_totalprice")).as("x"))
           .localCheckpoint(true) // month grid: rank pass + sign pass
         val wv = Window.orderBy(col("x"), col("tm"))
         val ranked = monthly.select(col("x"), row_number().over(wv).as("r"))
@@ -670,8 +664,6 @@ object StatsOps {
     QueryDef("q217_eb_shrinkage",
       "empirical-Bayes shrinkage of per-part return rates (beta-binomial, noise-corrected method of moments) - the small-sample stabilizer every per-entity rate table needs at scale (a part with 2/5 lines returned is NOT a 40%-return part; raw per-entity rates at 100 TB are mostly binomial noise ranked by it): prior mean from the pooled rate, prior variance as observed rate dispersion MINUS the mean binomial noise E[p(1-p)/n] (the uncorrected estimator mistakes sampling noise for real part-level variation and under-shrinks ~2x), prior strength S = m(1-m)/v_prior - 1, posterior rate (y + m*S)/(n + S). The honest centerpiece: on this iid fixture every part shares ONE true rate, the corrected v_prior lands at the noise floor (marginally positive here; at/below zero — or when S = m(1-m)/v_prior - 1 itself lands non-positive, which would let the posterior leave [0,1] at y=0 — the clamp branch shrinks fully), and corrected shrinkage is near-TOTAL - raw rates spanning [0.04, 0.75] collapse to [0.322, 0.347] around the pooled 0.33 - the correct inference that the dispersion is all binomial noise, while the emitted naive column under-shrinks to [0.18, 0.52] by mistaking that noise for signal. One corpus aggregate into the per-part grid (l_partkey is in lineitem - no dim join); the moment pass and the scoring pass read the checkpointed grid; every derived quantity is a pinned double chain on 6-dp grid-rounded rates",
       (s, d) => {
-        val D386 = DecimalType(38, 6)
-        def g6(c: Column) = (floor(c * 1e6 + lit(0.5)) / lit(1e6)).cast(D386)
         val g = t(s, d, "lineitem")
           .groupBy(col("l_partkey"))
           .agg(lcount(lit(1)).as("n"),
@@ -681,10 +673,9 @@ object StatsOps {
         val p = col("y").cast("double") / col("n").cast("double")
         val mo = g.agg(lcount(lit(1)).as("k"),
           lsum(col("n")).as("nt"), lsum(col("y")).as("yt"),
-          sum(g6(p)).cast("double").as("s1"),
-          sum(g6(p * p)).cast("double").as("s2"),
-          sum(g6(p * (lit(1.0) - p) / col("n").cast("double")))
-            .cast("double").as("s3"))
+          sum6(p).cast("double").as("s1"),
+          sum6(p * p).cast("double").as("s2"),
+          sum6(p * (lit(1.0) - p) / col("n").cast("double")).cast("double").as("s3"))
         val kd = col("k").cast("double")
         val mbar = col("yt").cast("double") / col("nt").cast("double")
         val vobs = col("s2") / kd - (col("s1") / kd) * (col("s1") / kd)

@@ -2,8 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ops.Num._
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 /** Time-series + reshape/monitoring operators (q109–q120, q122) — the
@@ -278,13 +277,11 @@ object TimeSeries {
       (s, d) => {
         val daily = t(s, d, "orders")
           .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
-          .agg(sum(col("o_totalprice").cast(DecimalType(38, 6)))
-            .cast("double").as("x"))
+          .agg(dsum(col("o_totalprice")).as("x"))
         val mx = daily
           .groupBy((year(col("day")) * lit(12) + month(col("day")))
             .cast("long").as("tm"))
           .agg(max(col("x")).as("m"))
-        def d6(c: Column) = c.cast(DecimalType(38, 6))
         // moments in MILLIONS of dollars: the 6-dp floor-grid needs
         // x*1e6 inside integer-floor range, and raw maxima (~2e7)
         // squared would push it past both 2^53 and Spark's LONG floor
@@ -298,10 +295,8 @@ object TimeSeries {
         // cancellation). floor(x*1e6+0.5) decides on the identical double
         // in both engines, so the grid value is engine-independent.
         val mo = mx.agg(lcount(lit(1)).as("nb"),
-          sum(d6(floor(m6 * lit(1e6) + lit(0.5)) / lit(1e6)))
-            .cast("double").as("s1"),
-          sum(d6(floor(m6 * m6 * lit(1e6) + lit(0.5)) / lit(1e6)))
-            .cast("double").as("s2"))
+          sum6(m6).cast("double").as("s1"),
+          sum6(m6 * m6).cast("double").as("s2"))
         val mean = col("s1") / col("nb").cast("double") * lit(1e6)
         val sd = sqrt(greatest(lit(0.0),
           col("s2") / col("nb").cast("double")

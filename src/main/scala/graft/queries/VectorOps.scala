@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ext.{Quantize, SimilaritySearch}
-import graft.ops.Num.lcount
+import graft.ops.Num.{lcount, sum6}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -126,7 +126,6 @@ object VectorOps {
     QueryDef("q106_jl_distortion",
       "Johnson-Lindenstrauss projection with in-engine distortion self-eval (the q96/q100 pattern applied to a TRANSFORM): embeddings project 64->16 dims as raw dot products against the deterministic hyperplane family (the dense cousin of q25b's sign-bit buckets — keep the value, not just the sign; 4x storage/compute reduction for downstream scoring and clustering), then the engine MEASURES what the compression costs: over all pairs of a deterministic sample (vec_id < 30), mean and max |cos_projected - cos_original|. This is the number that decides whether the 4x-cheaper sketch is usable for a given recall bar before pointing it at 100 TB. Projection is map-only (compile-time plane matrix, zero shuffles); the eval's pair stage is a broadcast self-join of the bounded sample. Parity: every op is IEEE +,x,/,sqrt in element order (no libm), per-pair errors floor-round to 6 dp into exact decimals for the order-independent mean",
       (s, d) => {
-        import org.apache.spark.sql.types.DecimalType
         import graft.functions.VectorFunctions.cosine
         val e = t(s, d, "embeddings")
         val proj = SimilaritySearch.jlProject(e, dim = 64, outDim = 16, seed = 23)
@@ -146,12 +145,10 @@ object VectorOps {
         // so the pair expansion is a nested-loop over a broadcast, not
         // a cartesian exchange
         broadcast(a).join(b, col("id_a") < col("id_b"))
-          .select((floor(abs(cosD(col("pa"), col("pb")) - cosine(col("ea"), col("eb")))
-            * 1e6 + 0.5) / 1e6).as("err"))
+          .select(abs(cosD(col("pa"), col("pb")) - cosine(col("ea"), col("eb"))).as("err"))
           .agg(lcount(lit(1)).as("n_pairs"),
-            (sum(col("err").cast(DecimalType(38, 6))).cast("double") /
-              count(lit(1))).as("mean_abs_err"),
-            max(col("err")).as("max_abs_err"))
+            (sum6(col("err")).cast("double") / count(lit(1))).as("mean_abs_err"),
+            max(floor(col("err") * 1e6 + 0.5) / 1e6).as("max_abs_err"))
       },
       Some(s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
         |pj AS (SELECT vec_id, v, ${projSql(dim = 64, outDim = 16, seed = 23)} AS p FROM e),

@@ -108,8 +108,7 @@ object WarehouseOps {
               score("mon").as("m_score"), col("mon"))
       .groupBy(col("r_score"), col("f_score"), col("m_score"))
       .agg(lcount(lit(1)).as("n_customers"),
-           sum((floor(col("mon") * 1e6 + 0.5) / 1e6)
-             .cast(DecimalType(38, 6))).cast("double").as("total_monetary"))
+           sum6(col("mon")).cast("double").as("total_monetary"))
   }
 
   /** ONE fused pass over the checkpointed per-order basket table for
@@ -158,8 +157,7 @@ object WarehouseOps {
         g.groupBy(col("o_orderstatus")).agg(
             lcount(lit(1)).as("n_orders"),
             count(when(abs(col("gap")) > 0.01, 1)).cast("long").as("n_mismatch"),
-            sum((floor(abs(col("gap")) * 1e6 + 0.5) / 1e6)
-              .cast(DecimalType(38, 6))).cast("double").as("total_abs_gap"),
+            sum6(abs(col("gap"))).cast("double").as("total_abs_gap"),
             (floor(max(abs(col("gap"))) * lit(1e2) + lit(0.5)) / lit(1e2))
               .as("max_abs_gap"))
           .select(col("o_orderstatus"), col("n_orders"), col("n_mismatch"),

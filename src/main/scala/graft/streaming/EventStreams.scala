@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Num
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -84,8 +85,7 @@ object EventStreams {
   def dailyStats(events: DataFrame): DataFrame =
     events.groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).cast("long").as("n_events"),
-           sum(col("value").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-             .cast("double").as("value_sum"))
+           Num.dsum(col("value")).as("value_sum"))
       .select(col("window.start").as("day_start"), col("event_type"),
               col("n_events"), col("value_sum"))
 
@@ -113,8 +113,7 @@ object EventStreams {
            min(col("value")).as("low"),
            max_by(col("value"), struct(col("ts"), col("event_id"))).as("close"),
            count(lit(1)).cast("long").as("n_ticks"),
-           sum(col("value").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-             .cast("double").as("volume"))
+           Num.dsum(col("value")).as("volume"))
       .select(col("event_type"), col("window.start").as("hour"),
               col("open"), col("high"), col("low"), col("close"),
               col("n_ticks"), col("volume"))
@@ -136,8 +135,7 @@ object EventStreams {
     withGap.groupBy(col("user_id"), col("session_seq"))
       .agg(min(col("ts")).as("session_start"),
            count(lit(1)).cast("long").as("n_events"),
-           sum(col("value").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-             .cast("double").as("total_value"))
+           Num.dsum(col("value")).as("total_value"))
       .select(col("user_id"), col("session_start"), col("n_events"), col("total_value"))
   }
 

@@ -90,6 +90,23 @@ class QuantilesSpec extends SparkSpec {
       check(Seq(("a", 0.0), ("a", Double.MinPositiveValue),
                 ("b", 1.0), ("b", 2.0), ("b", 4.0)).toDF("g", "v"))
     }
+    it("a null group key is a group on both paths, as in percentile") {
+      val df = Seq((null: String, 1.0), (null: String, 3.0), ("a", 2.0)).toDF("g", "v")
+      val ps = Seq(0.25, 0.5)
+      val want = ps.flatMap(p =>
+        df.groupBy($"g").agg(expr(s"percentile(v, $p)"))
+          .as[(String, Double)].collect().map { case (g, v) => (g, p, v) }).toSet
+      assert(want.map(_._1) == Set(null, "a"))
+      val counts = df.groupBy($"g", $"v").agg(count(lit(1)).as("c"))
+      Seq(Quantiles.MaxDriverGroups, 0).foreach { cap =>
+        Seq(Quantiles.exactQuantiles(df, "g", "v", ps, maxDriverGroups = cap),
+            Quantiles.exactQuantilesFromCounts(counts, "g", "v", "c", ps,
+              maxDriverGroups = cap)).foreach { out =>
+          assert(out.select($"g", $"p", $"value").as[(String, Double, Double)]
+            .collect().toSet == want, s"maxDriverGroups = $cap")
+        }
+      }
+    }
     it("exactQuantilesFromCounts equals the corpus path on generated data") {
       val gen = Gen.listOfN(400, for {
         g <- Gen.oneOf("a", "b", "c")
